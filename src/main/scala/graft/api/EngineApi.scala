@@ -25,6 +25,8 @@ import graft.search.SearchEngine
   */
 object EngineApi {
 
+  private val entKey = Seq("searchdomain", "entity_id")
+
   /** Release ALL pipeline-scratch caches accumulated by query/dedup/
     * curation dataflows since the last release (VERDICT r7 #6) — the
     * serving-session cache-hygiene hook. Scoped to pipeline scratch:
@@ -164,6 +166,14 @@ object EngineApi {
     *
     * `incoming` carries (entity_id, datapoint_id, name, probmethod,
     * similaritymethod, text); `entities` the matching entity rows.
+    *
+    * Single-read rule (shared by every entity mutation here): each output
+    * table reads its same-named input table exactly once. The returned
+    * Domain is the next call's input, so a table read twice per call
+    * doubles its lineage with every chained mutation (1,164 leaf scans in
+    * the embeddings plan after six chained upserts). Stored embeddings
+    * are therefore filtered by ONE anti-join against the stale keys, not
+    * dropped for every touched entity and re-added by a second scan.
     */
   def upsertEntities(
       spark: SparkSession,
@@ -178,7 +188,6 @@ object EngineApi {
     // on that shape), and two domains reusing entity_id/datapoint_id
     // values must never cross-contaminate.
     val dpKey = Seq("searchdomain", "datapoint_id")
-    val entKey = Seq("searchdomain", "entity_id")
     val hashed = incoming.withColumn("hash", TextFunctions.contentHash(col("text")))
     val d = Upsert.diff(
       domain.datapoints.select((dpKey :+ "hash").map(col): _*),
@@ -210,13 +219,19 @@ object EngineApi {
     // touched entities land as-is — hash-unchanged ones thereby take the
     // INCOMING metadata (probmethod/similaritymethod/name, the reference's
     // `updatedDatapointsNonText` path) while keeping stored embeddings.
-    val touched = entities.select(entKey.map(col): _*).distinct()
+    // semi/anti joins only: duplicate keys cannot change their result, so
+    // no distinct (each one is a shuffle in every table's write)
+    val touched = entities.select(entKey.map(col): _*)
+    // stale = stored datapoints of touched entities outside the diff's
+    // `unchanged` bucket: exactly the vectors the merge must drop
+    val stale = domain.datapoints.select((entKey :+ "datapoint_id").map(col): _*)
+      .join(touched, entKey, "left_semi")
+      .join(keepIds, dpKey, "left_anti")
     val mergedDatapoints = domain.datapoints
       .join(touched, entKey, "left_anti")
       .unionByName(hashed.select(domain.datapoints.columns.map(col).toIndexedSeq: _*))
     val mergedEmbeddings = domain.embeddings
-      .join(touched, entKey, "left_anti")
-      .unionByName(domain.embeddings.join(keepIds, dpKey, "left_semi"))
+      .join(stale, entKey :+ "datapoint_id", "left_anti")
       .unionByName(fresh.select(domain.embeddings.columns.map(col).toIndexedSeq: _*))
     val mergedEntities = domain.entities
       .join(touched, entKey, "left_anti")
@@ -228,35 +243,48 @@ object EngineApi {
     * per searchdomain, `EntityController.cs:163-199`): delete every entity
     * of THAT domain not in the accumulated session set; sibling domains
     * are untouched.
+    *
+    * Single-read rule (see [[upsertEntities]]): the entities table is
+    * marked by one left-outer join against the distinct accumulated names
+    * and split on that mark. Anti-joining it with doomed rows read from
+    * itself would double the entities lineage on every chained finalize.
     */
   def sessionFinalize(domain: Domain, accumulatedNames: DataFrame,
       searchdomain: String): Domain = {
-    val doomed = Upsert.sessionFinalize(
-      domain.entities.filter(col("searchdomain") === searchdomain)
-        .select(col("searchdomain"), col("entity_id"), col("name")),
-      accumulatedNames, Seq("name"))
-      .select("searchdomain", "entity_id")
-    dropEntities(domain, doomed)
+    val marked = domain.entities.join(
+      accumulatedNames.select(col("name").as("__kept")).distinct(),
+      col("name") === col("__kept"), "left_outer")
+    val doomed = col("searchdomain") <=> lit(searchdomain) && col("__kept").isNull
+    val (datapoints, embeddings) = cascade(domain, marked.filter(doomed))
+    Domain(marked.filter(!doomed).drop("__kept"), datapoints, embeddings)
   }
 
   /** `DELETE /Entity?searchdomain&entityName` (`EntityController.cs:206-229`):
     * FK-cascade rewrite of all three tables (J9/S7), scoped to the named
     * domain exactly as the endpoint is.
+    *
+    * Single-read rule (see [[upsertEntities]]): the entities table is one
+    * filter on a null-safe (searchdomain, name) predicate — `<=>` never
+    * yields null, so a null-named row is kept rather than silently
+    * dropped — and the victims' child rows go through [[cascade]].
+    * Anti-joining the table with victims read from itself would double
+    * the entities lineage per chained delete (256 leaf scans after eight).
     */
-  def deleteEntity(domain: Domain, searchdomain: String, entityName: String): Domain =
-    dropEntities(domain,
-      domain.entities.filter(
-        col("searchdomain") === searchdomain && col("name") === entityName)
-        .select("searchdomain", "entity_id"))
+  def deleteEntity(domain: Domain, searchdomain: String, entityName: String): Domain = {
+    val victim = col("searchdomain") <=> lit(searchdomain) && col("name") <=> lit(entityName)
+    val (datapoints, embeddings) = cascade(domain, domain.entities.filter(victim))
+    Domain(domain.entities.filter(!victim), datapoints, embeddings)
+  }
 
-  private def dropEntities(domain: Domain, victims: DataFrame): Domain = {
-    val cascaded = Upsert.deleteCascadeKeys(
-      Seq(
-        ("entities", domain.entities),
-        ("datapoints", domain.datapoints),
-        ("embeddings", domain.embeddings)),
-      victims, Seq("searchdomain", "entity_id")).toMap
-    Domain(cascaded("entities"), cascaded("datapoints"), cascaded("embeddings"))
+  /** J9 FK cascade: the datapoints and embeddings of `victims` (entity
+    * rows), each child table anti-joined once on (searchdomain, entity_id)
+    * so a sibling domain reusing an entity_id is never touched. No
+    * distinct on the keys: an anti-join's result ignores duplicates.
+    */
+  private def cascade(domain: Domain, victims: DataFrame): (DataFrame, DataFrame) = {
+    val keys = victims.select(entKey.map(col): _*)
+    (domain.datapoints.join(keys, entKey, "left_anti"),
+      domain.embeddings.join(keys, entKey, "left_anti"))
   }
 
   /** `PATCH /Searchdomain/Query` (`SearchdomainController.cs:141-214`):

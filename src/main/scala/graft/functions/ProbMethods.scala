@@ -203,15 +203,17 @@ object ProbMethods {
     * DictionaryWeightedAverage arm — callers without parameterized
     * methods pass the default constant 1.
     *
-    * Design note (measured, `graft.tools.BenchDispatch` @ sf0.1): on a
-    * FLAT SCAN a filter-per-method + single-agg + union plan is ~2.6×
-    * faster (0.55 s vs 1.45 s warm) because the per-row cost of 18 agg
-    * buffers (ln/abs/divisions) dominates a cheap re-scan. This one-pass
-    * form is still the right shape where it is actually used — the search
-    * aggregation levels — because the input there is the OUTPUT OF THE
-    * SCORING JOIN: a union plan would re-execute the join (or persist it)
-    * once per method, and at 100 TB re-reading the corpus loses by far
-    * more than the extra arithmetic saves.
+    * Design note (measured @ sf0.1, lineitem grouped by returnflag/
+    * linestatus under three methods, this one-pass form against a
+    * filter-per-method + single-agg + union twin): on a FLAT SCAN the
+    * union plan is ~2.6× faster (0.55 s vs 1.45 s warm) because the
+    * per-row cost of 18 agg buffers (ln/abs/divisions) dominates a cheap
+    * re-scan. This one-pass form is still the right shape where it is
+    * actually used — the search aggregation levels — because the input
+    * there is the OUTPUT OF THE SCORING JOIN: a union plan would
+    * re-execute the join (or persist it) once per method, and at 100 TB
+    * re-reading the corpus loses by far more than the extra arithmetic
+    * saves.
     */
   def forMethodCol(methodCol: Column, x: Column, dwaWeight: Column = lit(1.0)): Column = {
     val m = methodCol

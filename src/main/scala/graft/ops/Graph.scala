@@ -496,6 +496,11 @@ object Graph {
     * `rounds` auth steps interleaved with `rounds − 1` hub steps, hubs
     * seeded at 10⁶; returns the final (authCol, auth_ppm) frame.
     *
+    * Precondition: no edge may carry a null hub or auth key. A null
+    * endpoint would silently drop out of every join round, so the gate
+    * job counts such edges and fails with an `IllegalArgumentException`
+    * ("N edges carry null hub/auth keys") before any round runs.
+    *
     * Scale shape, cap-gated like [[pagerankInt]]: score frames are
     * node-sided, so below `broadcastNodeCap` (the larger of the two node
     * cardinalities) they BROADCAST and the edge frame never shuffles —

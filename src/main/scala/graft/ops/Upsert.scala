@@ -118,16 +118,4 @@ object Upsert {
       name -> df.join(keys, df(fk) === col("__victim_key"), "left_anti")
     }
   }
-
-  /** Composite-key cascade for tables sharing the victim key columns —
-    * the domain-scoped form ((searchdomain, entity_id) victims must not
-    * cascade into a sibling domain that reuses the same entity_id).
-    */
-  def deleteCascadeKeys(
-      tables: Seq[(String, DataFrame)],
-      victims: DataFrame,
-      keys: Seq[String]): Seq[(String, DataFrame)] = {
-    val k = victims.select(keys.map(col): _*).distinct()
-    tables.map { case (name, df) => name -> df.join(k, keys, "left_anti") }
-  }
 }

@@ -148,6 +148,52 @@ class ApiSpec extends SparkSpec {
     assert(after.embeddings.filter(col("entity_id") === 2).count() == 0)
   }
 
+  /** `SubqueryAlias` nodes named `alias` in `df`'s logical plan — one per
+    * read of the input table wrapped under that alias.
+    */
+  private def reads(df: org.apache.spark.sql.DataFrame, alias: String): Int =
+    df.queryExecution.logical.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
+          if a.alias == alias => a
+    }.size
+
+  test("entity mutations read each input table once per output table") {
+    import spark.implicits._
+    // the returned Domain is the next call's input: a second read of a
+    // table doubles its lineage on every chained mutation
+    val in = graft.core.Domain(domain.entities.as("in_entities"),
+      domain.datapoints.as("in_datapoints"), domain.embeddings.as("in_embeddings"))
+    def singleRead(op: String, out: graft.core.Domain): Unit =
+      Seq("entities" -> out.entities, "datapoints" -> out.datapoints,
+          "embeddings" -> out.embeddings).foreach { case (t, df) =>
+        val n = reads(df, s"in_$t")
+        assert(n == 1, s"$op: $t reads its input ${n}x")
+      }
+    singleRead("deleteEntity", EngineApi.deleteEntity(in, "docs", "doc_2"))
+    singleRead("sessionFinalize",
+      EngineApi.sessionFinalize(in, Seq("doc_1").toDF("name"), "docs"))
+    val batch = Seq((2L, "dogs bark at the postman", "en", "web"),
+      (4L, "watermarks bound streaming state", "en", "docs"))
+      .toDF("doc_id", "text", "lang", "source")
+    singleRead("upsertEntities", EngineApi.upsertEntities(spark, in,
+      SearchEngine.docEntities(batch), SearchEngine.docDatapoints(batch), models, dim))
+  }
+
+  test("eight chained deletes: counts follow, entities plan keeps its input's size") {
+    import spark.implicits._
+    val ten = (1L to 10L).map(i => (i, s"document $i on topic ${i % 3}", "en", "web"))
+      .toDF("doc_id", "text", "lang", "source")
+    val base = SearchEngine.buildDomain(spark, ten, models, dim)
+    val chained = (1 to 8).foldLeft(base)((d, i) => EngineApi.deleteEntity(d, "docs", s"doc_$i"))
+    def leaves(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.logical.collectLeaves().size
+    assert(leaves(chained.entities) == leaves(base.entities))
+    assert(chained.entities.select("name").as[String].collect().sorted.toSeq
+      == Seq("doc_10", "doc_9"))
+    assert(chained.datapoints.count() == 4 && chained.embeddings.count() == 4)
+    assert(chained.datapoints.filter(col("entity_id") <= 8).isEmpty)
+  }
+
   test("sessionFinalize keeps only accumulated names") {
     import spark.implicits._
     val acc = Seq("doc_1", "doc_3").toDF("name")
@@ -236,6 +282,21 @@ class ApiSpec extends SparkSpec {
       .join(two.datapoints.filter(col("searchdomain") === "other"),
         Seq("searchdomain", "datapoint_id", "hash"), "left_semi")
       .count() == 2) // other/doc_2 rows untouched, original hashes
+
+    // null-safe delete: a null-named entity in each domain survives the
+    // delete of another name, as does the sibling domain's doc_2
+    val nullNamed = spark.createDataFrame(java.util.Arrays.asList(
+        org.apache.spark.sql.Row("docs", 99L, null, "Mean", Map.empty[String, String]),
+        org.apache.spark.sql.Row("other", 99L, null, "Mean", Map.empty[String, String])),
+      graft.core.DomainSchemas.entities)
+    val withNull = two.copy(entities = two.entities.unionByName(nullNamed))
+    val afterNullDel = EngineApi.deleteEntity(withNull, "docs", "doc_2")
+    assert(afterNullDel.entities.filter(col("name").isNull).count() == 2)
+    assert(afterNullDel.entities
+      .filter(col("searchdomain") === "other" && col("name") === "doc_2").count() == 1)
+    def counts(d: graft.core.Domain) =
+      (d.entities.count(), d.datapoints.count(), d.embeddings.count())
+    assert(counts(EngineApi.deleteEntity(two, "docs", "doc_404")) == counts(two))
 
     // finalize a session in 'docs' — 'other' not in scope
     val fin = EngineApi.sessionFinalize(two, Seq("doc_1").toDF("name"), "docs")

@@ -221,4 +221,13 @@ class GraphSpec extends SparkSpec {
     assert(bcast(10L) > bcast(11L) && bcast(11L) > bcast(12L))
     assert(math.abs(bcast.values.sum - 1000000L) <= bcast.size)
   }
+
+  test("HITS rejects an edge with a null hub key") {
+    import spark.implicits._
+    val edges = Seq((Some(1L), 10L), (None, 11L)).toDF("ck", "pk")
+    val e = intercept[IllegalArgumentException] {
+      Graph.hitsAuthPpm(edges, "ck", "pk", rounds = 2)
+    }
+    assert(e.getMessage.contains("1 edges carry null hub/auth keys"))
+  }
 }
