@@ -3,9 +3,8 @@ package graft.api
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Domain, StubEmbedder}
+import graft.core.{Domain, DomainSettings, Embedder, StubEmbedder}
 import graft.functions.TextFunctions
-import graft.ops.Upsert
 import graft.search.SearchEngine
 
 /** Batch equivalents of the reference's REST surface (SURVEY.md §2.12;
@@ -157,15 +156,37 @@ object EngineApi {
     }
   }
 
+  /** [[upsertEntities]] embedding with the deterministic stub of width `dim`. */
+  def upsertEntities(
+      spark: SparkSession,
+      domain: Domain,
+      entities: DataFrame,
+      incoming: DataFrame,
+      models: Seq[String],
+      dim: Int,
+      settings: DomainSettings = DomainSettings()): Domain =
+    upsertEntities(spark, domain, entities, incoming, models, new StubEmbedder(dim), settings)
+
   /** `PUT /Entities` (`EntityController.cs:105-161` →
-    * `SearchdomainHelper.cs:208-343`): diff-driven incremental index. The
-    * content-hash diff classifies incoming datapoints; ONLY created or
-    * text-changed datapoints are embedded (dedup-before-embed P7 applies
-    * inside the batched inference source), everything unchanged keeps its
-    * stored vectors. Returns the merged Domain.
+    * `SearchdomainHelper.cs:208-343`): diff-driven incremental index, and
+    * the only indexing body — a first index ([[SearchEngine.buildDomain]],
+    * [[graft.streaming.IndexPipeline]]'s first batch) is this upsert into
+    * the empty domain. ONLY created or text-changed datapoints are
+    * embedded, through `embedder` (the stub or the real HTTP provider),
+    * with dedup-before-embed (P7) and `settings`' batch placement;
+    * everything unchanged keeps its stored vectors. Returns the merged
+    * Domain.
     *
     * `incoming` carries (entity_id, datapoint_id, name, probmethod,
     * similaritymethod, text); `entities` the matching entity rows.
+    *
+    * The content-hash diff is two anti-joins on (searchdomain,
+    * datapoint_id, hash), null-safe on the hash: incoming rows without a
+    * stored twin need embedding; stored rows of touched entities without
+    * an incoming twin are stale. Over an empty store both collapse to
+    * their input, so a first index plans only the embed joins. A
+    * full-outer diff joined back onto the batch would still semi-join the
+    * batch with itself there: two extra joins on every first index.
     *
     * Single-read rule (shared by every entity mutation here): each output
     * table reads its same-named input table exactly once. The returned
@@ -181,23 +202,21 @@ object EngineApi {
       entities: DataFrame,
       incoming: DataFrame,
       models: Seq[String],
-      dim: Int,
-      settings: graft.core.DomainSettings = graft.core.DomainSettings()): Domain = {
+      embedder: Embedder,
+      settings: DomainSettings): Domain = {
     // Every merge key includes `searchdomain`: a Domain may legitimately
     // hold several domains side by side (the catalog operators below work
     // on that shape), and two domains reusing entity_id/datapoint_id
     // values must never cross-contaminate.
-    val dpKey = Seq("searchdomain", "datapoint_id")
     val hashed = incoming.withColumn("hash", TextFunctions.contentHash(col("text")))
-    val d = Upsert.diff(
-      domain.datapoints.select((dpKey :+ "hash").map(col): _*),
-      hashed.select((dpKey :+ "hash").map(col): _*),
-      dpKey, "hash")
-
-    val needEmbed = hashed.join(
-      d.filter(col("bucket").isin("created", "changed")).select(dpKey.map(col): _*),
-      dpKey, "left_semi")
-    val keepIds = d.filter(col("bucket") === "unchanged").select(dpKey.map(col): _*)
+    // rows of `left` with no (searchdomain, datapoint_id, hash) twin in `right`
+    def withoutTwin(left: DataFrame, right: DataFrame): DataFrame = {
+      val r = right.select(col("searchdomain").as("__sd"),
+        col("datapoint_id").as("__dp"), col("hash").as("__hash"))
+      left.join(r, col("searchdomain") === col("__sd") &&
+        col("datapoint_id") === col("__dp") && (col("hash") <=> col("__hash")), "left_anti")
+    }
+    val needEmbed = withoutTwin(hashed, domain.datapoints)
 
     // P7/U2 + S4: embed each distinct changed text once per model, batched.
     // ParallelEmbeddingsPrefetch routes the batch placement
@@ -206,27 +225,23 @@ object EngineApi {
     val pairs = needEmbed.select(col("text")).distinct()
       .crossJoin(spark.createDataFrame(models.map(Tuple1(_))).toDF("model"))
     val fresh = needEmbed
-      .join(StubEmbedder.embedBatched(spark, pairs, dim,
+      .join(StubEmbedder.embedBatched(spark, pairs, embedder,
         parallelPrefetch = settings.parallelEmbeddingsPrefetch), "text")
       .select(col("searchdomain"), col("entity_id"), col("datapoint_id"),
         col("model"), col("embedding"))
 
-    // The diff has PUT semantics per UPLOADED entity only (reference
+    // PUT semantics per UPLOADED entity only (reference
     // `SearchdomainHelper.cs:208-343` diffs the datapoints of each entity
     // in the payload): entities absent from the batch keep everything;
-    // within an uploaded entity, datapoints missing from the payload are
-    // the `deleted` bucket and drop out. ALL incoming datapoint rows of
-    // touched entities land as-is — hash-unchanged ones thereby take the
-    // INCOMING metadata (probmethod/similaritymethod/name, the reference's
+    // within an uploaded entity, datapoints missing from the payload drop
+    // out. ALL incoming datapoint rows of touched entities land as-is —
+    // hash-unchanged ones thereby take the INCOMING metadata
+    // (probmethod/similaritymethod/name, the reference's
     // `updatedDatapointsNonText` path) while keeping stored embeddings.
     // semi/anti joins only: duplicate keys cannot change their result, so
     // no distinct (each one is a shuffle in every table's write)
     val touched = entities.select(entKey.map(col): _*)
-    // stale = stored datapoints of touched entities outside the diff's
-    // `unchanged` bucket: exactly the vectors the merge must drop
-    val stale = domain.datapoints.select((entKey :+ "datapoint_id").map(col): _*)
-      .join(touched, entKey, "left_semi")
-      .join(keepIds, dpKey, "left_anti")
+    val stale = withoutTwin(domain.datapoints.join(touched, entKey, "left_semi"), hashed)
     val mergedDatapoints = domain.datapoints
       .join(touched, entKey, "left_anti")
       .unionByName(hashed.select(domain.datapoints.columns.map(col).toIndexedSeq: _*))

@@ -29,8 +29,8 @@ final case class Domain(
   * default 1,000,000 when unset/<=0), the reconcile-vs-invalidate
   * maintenance toggle, and the embeddings-prefetch parallelism toggle
   * (`SearchdomainHelper.cs:61-93`: per-model prefetch batches run
-  * concurrently when set — mapped to the batched-embed stage's
-  * partitioning, [[graft.core.StubEmbedder.embedBatched]]).
+  * concurrently when set — mapped to the partitioning of the embed stage
+  * inside [[graft.api.EngineApi.upsertEntities]]).
   */
 final case class DomainSettings(
     queryCacheSize: Int = 1_000_000,

@@ -3,8 +3,8 @@ package graft.core
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Deterministic offline replacement for the reference's HTTP embedding
   * providers (LD-Reborn/embeddingsearch `src/Server/AIProvider.cs:39-133` —
@@ -66,13 +66,6 @@ object StubEmbedder {
     */
   val BatchSize = 256
 
-  /** Column form for one-off scalar embedding (query vectors — M rows). */
-  def embedColumn(spark: SparkSession, dim: Int): (Column, Column) => Column = {
-    val embedder = new StubEmbedder(dim)
-    val f = udf((model: String, text: String) => embedder.embed(model, text))
-    (model, text) => f(model, text)
-  }
-
   /** Test instrumentation: counts the rows actually pushed through the
     * inference path. With a deterministic embedder, "kept its stored
     * vector" and "re-embedded to the same value" are indistinguishable by
@@ -91,21 +84,12 @@ object StubEmbedder {
     * (model, text) pairs — the shape a real HTTP/GPU embedding provider
     * needs (one call per BatchSize rows per model), and a narrow
     * per-partition stage rather than a per-row UDF inside someone else's
-    * codegen stage. Returns (model, text, embedding).
+    * codegen stage. Returns (model, text, embedding). The dataflow is
+    * provider-agnostic: the deterministic stub and the real HTTP
+    * [[HttpEmbedder]] run through it unchanged, so swapping providers
+    * changes ONE constructor argument, never the pipeline.
     */
   def embedBatched(
-      spark: SparkSession,
-      pairs: DataFrame,
-      dim: Int,
-      parallelPrefetch: Boolean = true): DataFrame =
-    embedBatchedWith(spark, pairs, new StubEmbedder(dim), parallelPrefetch)
-
-  /** [[embedBatched]] generalized over the provider (round 11): the same
-    * batched mapPartitions dataflow runs any [[Embedder]] — the
-    * deterministic stub or the real HTTP [[HttpEmbedder]] — so swapping
-    * providers changes ONE constructor argument, never the pipeline.
-    */
-  def embedBatchedWith(
       spark: SparkSession,
       pairs: DataFrame,
       embedder: Embedder,

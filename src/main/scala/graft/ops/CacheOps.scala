@@ -56,22 +56,6 @@ object CacheOps {
     all.withColumn("rank", row_number().over(w).cast("long"))
   }
 
-  /** C2: cache reconciliation for upserted entities
-    * (`Searchdomain.cs:298-326`): for every cached query list, each changed
-    * entity is REMOVED (old entry, any position) and its fresh score is
-    * SORTED-INSERTED. Deleted entities are removed without re-insert
-    * (`Searchdomain.cs:328-343`).
-    *
-    * `cache`:   (queryId, name, score) — exploded cached result rows
-    * `changes`: (queryId, name, score) — fresh per-query scores for upserted
-    *            entities (cross-scored against every cached query, exactly
-    *            the reference's loop over `QueryCache`)
-    * `deletes`: (name) — entities removed from the domain
-    *
-    * Returns (queryId, name, score, rank) — the reconciled lists. Note the
-    * list may GROW past the original topN truncation (the reference
-    * binary-inserts into the truncated list without re-trimming).
-    */
   /** C2's settings toggle, CacheReconciliation = false
     * (`Searchdomain.cs:345-348`): instead of reconciling each cached list,
     * ANY entity change drops the domain's ENTIRE query cache. Set-at-a-time
@@ -108,6 +92,22 @@ object CacheOps {
         .drop("__dom")
     }
 
+  /** C2: cache reconciliation for upserted entities
+    * (`Searchdomain.cs:298-326`): for every cached query list, each changed
+    * entity is REMOVED (old entry, any position) and its fresh score is
+    * SORTED-INSERTED. Deleted entities are removed without re-insert
+    * (`Searchdomain.cs:328-343`).
+    *
+    * `cache`:   (queryId, name, score) — exploded cached result rows
+    * `changes`: (queryId, name, score) — fresh per-query scores for upserted
+    *            entities (cross-scored against every cached query, exactly
+    *            the reference's loop over `QueryCache`)
+    * `deletes`: (name) — entities removed from the domain
+    *
+    * Returns (queryId, name, score, rank) — the reconciled lists. Note the
+    * list may GROW past the original topN truncation (the reference
+    * binary-inserts into the truncated list without re-trimming).
+    */
   def reconcile(cache: DataFrame, changes: DataFrame, deletes: DataFrame,
       queryCol: String): DataFrame = {
     val survivors = cache

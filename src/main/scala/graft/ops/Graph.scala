@@ -155,27 +155,6 @@ object Graph {
     (labels, iter)
   }
 
-  /** Incremental connected-components maintenance: fold a NEW shard's
-    * edges into an existing (id, component) assignment without touching
-    * the old graph. Each old cluster is contracted to one supernode (its
-    * component label — by construction the cluster's min id), each
-    * never-seen endpoint is its own supernode, and [[connectedComponents]]
-    * runs over the contracted edge list only. Because contraction
-    * preserves reachability and old labels are cluster minima, the merged
-    * labels equal a full recompute's EXACTLY (GraphSpec pins incremental
-    * == full, including the cluster-merge path where one new edge joins
-    * two old clusters).
-    *
-    * Scale shape: the CC iteration runs on a graph sized by the
-    * INCREMENT (|new edges| nodes at worst), never the corpus — the
-    * cluster-maintenance twin of [[Dedup.minhashIncremental]]'s skipped
-    * old×old term. The corpus-sized work is two broadcast-friendly hash
-    * joins (endpoint→assignment, assignment→new label), both on the
-    * cluster key.
-    *
-    * Returns the updated (id, component) covering the old assignment's
-    * nodes plus every new-edge endpoint.
-    */
   /** Driver-local union-find over a bounded edge list (the small-graph
     * arm of [[ccIncremental]]'s hybrid): min-root union keeps the
     * component label equal to the minimum member id — the exact contract
@@ -203,6 +182,27 @@ object Graph {
     parent.keys.toSeq.map(n => (n, find(n))).toDF("id", "component")
   }
 
+  /** Incremental connected-components maintenance: fold a NEW shard's
+    * edges into an existing (id, component) assignment without touching
+    * the old graph. Each old cluster is contracted to one supernode (its
+    * component label — by construction the cluster's min id), each
+    * never-seen endpoint is its own supernode, and [[connectedComponents]]
+    * runs over the contracted edge list only. Because contraction
+    * preserves reachability and old labels are cluster minima, the merged
+    * labels equal a full recompute's EXACTLY (GraphSpec pins incremental
+    * == full, including the cluster-merge path where one new edge joins
+    * two old clusters).
+    *
+    * Scale shape: the CC iteration runs on a graph sized by the
+    * INCREMENT (|new edges| nodes at worst), never the corpus — the
+    * cluster-maintenance twin of [[Dedup.minhashIncremental]]'s skipped
+    * old×old term. The corpus-sized work is two broadcast-friendly hash
+    * joins (endpoint→assignment, assignment→new label), both on the
+    * cluster key.
+    *
+    * Returns the updated (id, component) covering the old assignment's
+    * nodes plus every new-edge endpoint.
+    */
   def ccIncremental(
       assign: DataFrame,
       newEdges: DataFrame,

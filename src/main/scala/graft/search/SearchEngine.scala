@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Domain, StubEmbedder}
+import graft.api.EngineApi
+import graft.core.{Domain, DomainSchemas, DomainSettings, StubEmbedder}
 import graft.functions.{ProbMethods, TextFunctions, VectorFunctions}
 
 /** The core semantic-search engine re-expressed Spark-first.
@@ -25,14 +26,6 @@ import graft.functions.{ProbMethods, TextFunctions, VectorFunctions}
   */
 object SearchEngine {
 
-  /** Index a document corpus into the §1.3 domain tables (S1/S3 analogue of
-    * the reference Indexer's file-corpus script,
-    * `src/Indexer/Scripts/example.py:52-66`): each document becomes an
-    * entity with a `title` datapoint (first 8 tokens) and a `body`
-    * datapoint (full text). Texts are deduplicated before the embed stage
-    * (P7/U2, `SearchdomainHelper.cs:88-94`) so inference cost is
-    * O(distinct texts), not O(datapoints).
-    */
   /** Entity rows for a document corpus (one entity per doc). */
   def docEntities(docs: DataFrame, domainName: String = "docs"): DataFrame =
     docs.select(
@@ -42,10 +35,9 @@ object SearchEngine {
       lit("Mean").as("probmethod"),
       map(lit("lang"), col("lang"), lit("source"), col("source")).as("attributes"))
 
-  /** Datapoint rows (title + body per doc), WITH the text column —
-    * [[buildDomain]] drops it after embedding; the upsert path
-    * ([[graft.api.EngineApi.upsertEntities]]) needs it to re-embed
-    * changed content.
+  /** Datapoint rows (title + body per doc), WITH the text column — the
+    * upsert ([[graft.api.EngineApi.upsertEntities]], which [[buildDomain]]
+    * runs) embeds created or changed texts and drops the column.
     */
   def docDatapoints(docs: DataFrame, domainName: String = "docs"): DataFrame = {
     val title = concat_ws(" ", slice(TextFunctions.tokens(col("text")), 1, 8))
@@ -73,6 +65,17 @@ object SearchEngine {
         col("dp.text").as("text"))
   }
 
+  /** Index a document corpus into the §1.3 domain tables (S1/S3 analogue of
+    * the reference Indexer's file-corpus script,
+    * `src/Indexer/Scripts/example.py:52-66`): each document becomes an
+    * entity with a `title` datapoint (first 8 tokens) and a `body`
+    * datapoint (full text). A first index is the upsert
+    * ([[graft.api.EngineApi.upsertEntities]]) into the empty domain, as
+    * in the reference: texts are deduplicated before the embed stage
+    * (P7/U2, `SearchdomainHelper.cs:88-94`) so inference cost is
+    * O(distinct texts), not O(datapoints). Embeds with the deterministic
+    * stub, every model's batches concurrent.
+    */
   def buildDomain(
       spark: SparkSession,
       docs: DataFrame,
@@ -80,16 +83,13 @@ object SearchEngine {
       dim: Int,
       domainName: String = "docs"): Domain =
     buildDomain(spark, docs, models, dim, domainName,
-      new graft.core.StubEmbedder(dim), parallelPrefetch = true)
+      new StubEmbedder(dim), parallelPrefetch = true)
 
-  /** [[buildDomain]] with an explicit provider (round 11): the assembly is
-    * provider-agnostic — the deterministic stub and the real HTTP
+  /** [[buildDomain]] with an explicit provider: the stub and the real HTTP
     * [[graft.core.HttpEmbedder]] flow through the identical batched
-    * mapPartitions source, so switching to a live endpoint changes one
-    * argument (HttpEmbedderSpec pins value-identical domains).
+    * mapPartitions source (HttpEmbedderSpec pins value-identical domains).
     * `parallelPrefetch` is the `ParallelEmbeddingsPrefetch` placement
-    * toggle (`SearchdomainHelper.cs:61-93`), routed into the embed stage
-    * exactly as in the upsert path.
+    * toggle (`SearchdomainHelper.cs:61-93`).
     */
   def buildDomain(
       spark: SparkSession,
@@ -98,39 +98,20 @@ object SearchEngine {
       dim: Int,
       domainName: String,
       embedder: graft.core.Embedder,
-      parallelPrefetch: Boolean): Domain = {
-    val entities = docEntities(docs, domainName)
-    val datapoints = docDatapoints(docs, domainName)
-
-    // P7/U2: embed each distinct (model, text) once, then join back. The
-    // embed stage is the batched mapPartitions inference source (S4), not
-    // a per-row UDF spliced into the assembly stage's codegen.
-    val pairs = datapoints.select(col("text")).distinct()
-      .crossJoin(spark.createDataFrame(models.map(Tuple1(_))).toDF("model"))
-    val distinctTexts =
-      StubEmbedder.embedBatchedWith(spark, pairs, embedder, parallelPrefetch)
-    val embeddings = datapoints
-      .join(distinctTexts, "text")
-      .select(
-        col("searchdomain"), col("entity_id"), col("datapoint_id"),
-        col("model"), col("embedding"))
-
-    Domain(entities, datapoints.drop("text"), embeddings)
-  }
+      parallelPrefetch: Boolean): Domain =
+    EngineApi.upsertEntities(spark, DomainSchemas.emptyDomain(spark),
+      docEntities(docs, domainName), docDatapoints(docs, domainName), models, embedder,
+      DomainSettings(parallelEmbeddingsPrefetch = parallelPrefetch))
 
   /** Embed a query string under every model in use (U1 distinct models —
     * `Searchdomain.cs:260-282`) and return the broadcastable
     * (model, query_vec) frame (`GetQueryEmbeddings`, `Searchdomain.cs:212-235`).
     */
-  def queryEmbeddings(spark: SparkSession, domain: Domain, query: String, dim: Int): DataFrame = {
-    val embedCol = StubEmbedder.embedColumn(spark, dim)
-    domain.embeddings.select(col("model")).distinct()
-      .withColumn("query_vec", embedCol(col("model"), lit(query)))
-  }
+  def queryEmbeddings(spark: SparkSession, domain: Domain, query: String, dim: Int): DataFrame =
+    queryEmbeddings(spark, domain, query, new StubEmbedder(dim))
 
-  /** [[queryEmbeddings]] through any [[graft.core.Embedder]] — the
-    * production arm: the SAME provider that indexed the domain embeds the
-    * query string (`GetQueryEmbeddings`, `Searchdomain.cs:212-235`). The
+  /** [[queryEmbeddings]] through any [[graft.core.Embedder]]: the SAME
+    * provider that indexed the domain embeds the query string. The
     * models-in-use list (U1) is tiny and bounded, so the provider call is
     * one driver-side round-trip per model — exactly the reference server's
     * query-time shape — and the resulting (model, query_vec) frame is the
@@ -220,12 +201,6 @@ object SearchEngine {
   def search(domain: Domain, qEmb: DataFrame, topN: Int): DataFrame =
     searchWithDomain(domain, qEmb, topN).select(col("name"), col("score"))
 
-  /** Batch top-k similarity join — the beyond-reference capability: MANY
-    * queries × corpus in one job (the reference only does 1×N,
-    * `Searchdomain.cs:193-197`). Queries are broadcast; ranking is a
-    * per-query window (row_number), so the corpus is scanned once total,
-    * not once per query.
-    */
   /** Maximal-marginal-relevance diversity re-rank (Carbonell & Goldstein
     * 1998): greedily select `k` results from a relevance-ranked candidate
     * pool, each step picking argmax of `lam·relevance − mu·redundancy`,
@@ -273,6 +248,12 @@ object SearchEngine {
     out.toSeq.toDF("rnk", "vec_id", "relevance", "redundancy", "mmr")
   }
 
+  /** Batch top-k similarity join — the beyond-reference capability: MANY
+    * queries × corpus in one job (the reference only does 1×N,
+    * `Searchdomain.cs:193-197`). Queries are broadcast; ranking is a
+    * per-query window (row_number), so the corpus is scanned once total,
+    * not once per query.
+    */
   // bcast-ok-param: queries — caller probe batch (API contract); for
   // corpus-scale query sets gate through Ann.ivfSearch/lshSearch instead
   def topKJoin(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {

@@ -114,10 +114,21 @@ class ApiSpec extends SparkSpec {
     // call-per-model contract)
     val pairs = Seq(("m1", "a"), ("m1", "b"), ("m2", "c")).toDF("model", "text")
     val parts = graft.core.StubEmbedder
-      .embedBatched(spark, pairs, dim, parallelPrefetch = false)
+      .embedBatched(spark, pairs, new graft.core.StubEmbedder(dim), parallelPrefetch = false)
       .select(col("model"), spark_partition_id().as("pid"))
       .distinct().groupBy("model").count().collect()
     assert(parts.forall(_.getLong(1) == 1L))
+  }
+
+  test("upsert into the empty domain plans only the model cross join and the text join-back") {
+    // a first index is this upsert: over empty tables both content-hash
+    // anti-joins collapse to their input, so no diff join is left
+    val merged = EngineApi.upsertEntities(spark, graft.core.DomainSchemas.emptyDomain(spark),
+      SearchEngine.docEntities(docs), SearchEngine.docDatapoints(docs), models, dim)
+    val plan = merged.embeddings.queryExecution.optimizedPlan
+    val joins = plan.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+    assert(joins.size == 2, s"\n$plan")
+    assert(merged.embeddings.count() == 6)
   }
 
   test("upsert applies incoming metadata to hash-unchanged datapoints, keeps vectors") {

@@ -10,6 +10,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.functions._
 
 import graft.core.{HttpEmbedder, ProviderConfig, StubEmbedder}
+import graft.api.EngineApi
 import graft.search.SearchEngine
 
 /** The real HTTP provider driven end-to-end against an IN-PROCESS fixture
@@ -27,7 +28,8 @@ class HttpEmbedderSpec extends SparkSpec {
     * the full model URI is the stub's seed, and a real provider likewise
     * knows its own identity.
     */
-  private def withServer(dim: Int)(f: String => Unit): Unit = {
+  private def withServer(dim: Int, posted: java.util.concurrent.atomic.AtomicLong =
+      new java.util.concurrent.atomic.AtomicLong)(f: String => Unit): Unit = {
     val mapper = new ObjectMapper
     val stub = new StubEmbedder(dim)
     def handler(scheme: String)(wrap: (Seq[Array[Float]], ObjectMapper) => String): HttpHandler =
@@ -38,6 +40,7 @@ class HttpEmbedderSpec extends SparkSpec {
           val model = scheme + ":" + body.get("model").asText()
           val vecs = body.get("input").elements().asScala.toSeq
             .map(t => stub.embed(model, t.asText()))
+          posted.addAndGet(vecs.size.toLong)
           val resp = wrap(vecs, mapper).getBytes(StandardCharsets.UTF_8)
           ex.getResponseHeaders.set("Content-Type", "application/json")
           ex.sendResponseHeaders(200, resp.length)
@@ -115,8 +118,8 @@ class HttpEmbedderSpec extends SparkSpec {
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.select(col("model"), col("text"), col("embedding").cast("array<float>"))
           .orderBy("model", "text").collect().map(_.toSeq).toSeq
-      assert(rows(StubEmbedder.embedBatchedWith(spark, pairs, new HttpEmbedder(cfg))) ==
-        rows(StubEmbedder.embedBatched(spark, pairs, 8)))
+      assert(rows(StubEmbedder.embedBatched(spark, pairs, new HttpEmbedder(cfg))) ==
+        rows(StubEmbedder.embedBatched(spark, pairs, new StubEmbedder(8))))
 
       // whole-domain assembly: identical entities/datapoints/embeddings
       val viaHttp = SearchEngine.buildDomain(spark, docs, models, 8, "docs",
@@ -158,6 +161,40 @@ class HttpEmbedderSpec extends SparkSpec {
 
       assert(got.size == 10)
       assert(got == want)
+    }
+  }
+
+  test("incremental upsert through the HTTP provider equals the stub path row for row") {
+    import spark.implicits._
+    // texts longer than the 8-token title, so title and body differ
+    def docsOf(ids: Seq[Long], version: String) = ids.map(i =>
+      (i, s"document $i $version about topic ${i % 3} with several more words after it",
+        "en", "web")).toDF("doc_id", "text", "lang", "source")
+    val models = Seq("ollama:bge-m3", "openai:text-embedding-3-small")
+    val stored = SearchEngine.buildDomain(spark, docsOf(1L to 20L, "first"), models, 8)
+      .persisted()
+    // docs 1-5 edited, doc 6 re-sent unchanged, docs 21-25 new
+    val batch = docsOf(1L to 5L, "edited")
+      .unionByName(docsOf(Seq(6L), "first"))
+      .unionByName(docsOf(21L to 25L, "first"))
+    def tables(d: graft.core.Domain) = Seq(
+      d.entities.orderBy("entity_id"),
+      d.datapoints.orderBy("datapoint_id"),
+      d.embeddings.orderBy("datapoint_id", "model"))
+      .map(_.collect().map(_.toSeq).toSeq)
+    val posted = new java.util.concurrent.atomic.AtomicLong
+    withServer(8, posted) { base =>
+      val http = new HttpEmbedder(ProviderConfig(base, dim = 8, batchSize = 16))
+      val viaHttp = EngineApi.upsertEntities(spark, stored,
+        SearchEngine.docEntities(batch), SearchEngine.docDatapoints(batch),
+        models, http, graft.core.DomainSettings())
+      val viaStub = EngineApi.upsertEntities(spark, stored,
+        SearchEngine.docEntities(batch), SearchEngine.docDatapoints(batch), models, 8)
+      val embeddings = viaHttp.embeddings.collect()
+      // only the 20 created/changed texts reached the provider, per model
+      assert(posted.get == 20L * models.size)
+      assert(embeddings.length == 25 * 2 * models.size)
+      assert(tables(viaHttp) == tables(viaStub))
     }
   }
 
