@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Entry-point contract — see SURVEY.md §7 at the repository root.
   * The actual registry lives in [[graft.Queries]]; every entry pairs a Spark
   * pipeline with DuckDB oracle SQL over the same parquet tables.
   */

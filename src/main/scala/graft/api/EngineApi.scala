@@ -1,7 +1,8 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 
 import graft.core.{Domain, DomainSettings, Embedder, StubEmbedder}
 import graft.functions.TextFunctions
@@ -9,8 +10,10 @@ import graft.search.SearchEngine
 
 /** Batch equivalents of the reference's REST surface (SURVEY.md §2.12;
   * controllers at `src/Server/Controllers/`) — the library face a user of
-  * the reference would call. Every method is a pure DataFrame transform
-  * over [[graft.core.Domain]] tables; nothing collects to the driver.
+  * the reference would call. Every method is a DataFrame transform over
+  * [[graft.core.Domain]] tables. Only request-sized payloads collect to
+  * the driver: a query-cache probe's rows and a search's top-N
+  * ([[queryCached]]); nothing corpus-sized does.
   *
   * | reference endpoint                           | here                 |
   * |----------------------------------------------|----------------------|
@@ -90,9 +93,18 @@ object EngineApi {
     * probe the query cache by the query STRING alone (not topN — the
     * reference quirk), return the stored already-truncated list on a hit;
     * on a miss run the search and store the fresh list truncated to topN.
-    * Returns (result, updated cache). The hit probe is one filter on the
-    * cache table — partition/predicate-pruned at scale; the branch itself
-    * is request-level control flow, exactly as in the reference.
+    * Returns (response, updated cache); the response is a local relation.
+    *
+    * A hit is one `collect()` of the probed query's (rank, name, score)
+    * rows, ordered by rank on the driver (nulls first, as
+    * `orderBy("rank")` orders). It runs zero Spark jobs while the cache is
+    * local rows, as it is when the caller holds it between requests (the
+    * reference's in-memory QueryCache). A hit adds nothing, so the input
+    * cache object itself comes back: the caller tells a hit from a miss by
+    * reference equality. A miss runs that probe, the search's jobs and one
+    * collect of the top-N (TakeOrderedAndProject), whose rows arrive in
+    * `score desc, name asc` order: each row's position is its rank, so no
+    * window or sort job runs.
     */
   def queryCached(
       spark: SparkSession,
@@ -101,26 +113,20 @@ object EngineApi {
       queryText: String,
       topN: Int,
       dim: Int): (DataFrame, DataFrame) = {
-    val stored = cache.filter(col("query") === queryText)
-    if (!stored.isEmpty) {
-      (stored.orderBy("rank").select(col("name"), col("score")), cache)
+    val probe = cache.filter(col("query") === queryText)
+      .select(col("rank").cast("long"), col("name"), col("score"))
+    val stored = probe.collect()
+    if (stored.nonEmpty) {
+      val byRank = stored.sortBy(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+      (spark.createDataFrame(java.util.Arrays.asList(byRank: _*), probe.schema)
+        .select(col("name"), col("score")), cache)
     } else {
-      // materialize the ranked top-N locally — it IS the response payload
-      // (bounded by topN, exactly what the endpoint returns over HTTP) —
-      // so the corpus-sized search runs ONCE, later probes of the
-      // returned cache read local rows instead of replaying the search
-      // lineage, and nothing is left persisted in executor storage. The
-      // caller owns the cache's durability (write it between requests,
-      // as the reference's in-memory QueryCache lives across them).
-      val ranked = query(spark, domain, queryText, topN, dim)
-        .withColumn("rank", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(desc("score"), asc("name"))).cast("long"))
-        .withColumn("query", lit(queryText))
-      val rows = ranked.collect()
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), ranked.schema)
-      (local.orderBy("rank").select(col("name"), col("score")),
+      val top = query(spark, domain, queryText, topN, dim)
+      val ranked = top.collect().zipWithIndex.map { case (r, i) =>
+        Row(r.get(0), r.get(1), i + 1L, queryText) }
+      val local = spark.createDataFrame(java.util.Arrays.asList(ranked: _*),
+        top.schema.add("rank", LongType).add("query", StringType))
+      (local.select(col("name"), col("score")),
         cache.unionByName(local.select(cache.columns.map(col).toIndexedSeq: _*)))
     }
   }

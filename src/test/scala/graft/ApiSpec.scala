@@ -230,6 +230,72 @@ class ApiSpec extends SparkSpec {
     assert(r2.select("name").as[String].collect().toSeq == Seq("sentinel_doc"))
     // C1 quirk: topN=5 request still got the stored 1-row list; cache unchanged
     assert(c2.filter(col("query") === "spark shuffle").count() == 1)
+
+    // PATCH stores caller rows verbatim, so a null or duplicated rank can
+    // reach a hit: it answers in `orderBy("rank")` order, nulls first
+    val patched = EngineApi.patchQueryCache(c2, "spark shuffle", Seq(
+      (Some(2L), "doc_b", 0.5), (None, "doc_n", 0.1),
+      (Some(1L), "doc_a", 0.9), (Some(2L), "doc_c", 0.4))
+      .toDF("rank", "name", "score"))
+    val expected = patched.filter(col("query") === "spark shuffle")
+      .orderBy("rank").select("name", "score").collect().toSeq
+    val (r3, c3) = EngineApi.queryCached(spark, domain, patched, "spark shuffle", 5, dim)
+    assert(expected.map(_.getString(0)) == Seq("doc_n", "doc_a", "doc_b", "doc_c"))
+    assert(r3.collect().toSeq == expected)
+    assert(c3 eq patched)
+  }
+
+  /** Jobs `body` starts on this thread, counted by a listener after the
+    * listener bus is drained (suites sharing the session cannot leak in). */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobTag"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag)) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try {
+      val out = body
+      org.apache.spark.graft.ListenerBridge.drain(sc, 30000L)
+      (out, jobs.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("queryCached: a hit runs no Spark job; a miss ranks rows in the search's order") {
+    import spark.implicits._
+    val empty = Seq.empty[(String, Long, String, Double)]
+      .toDF("query", "rank", "name", "score")
+    def pairs(rs: Array[org.apache.spark.sql.Row]) =
+      rs.toSeq.map(r => (r.getAs[String]("name"), r.getAs[Double]("score")))
+    def cached(q: String, cache: org.apache.spark.sql.DataFrame) = jobsDuring {
+      val (res, next) = EngineApi.queryCached(spark, domain, cache, q, 2, dim)
+      (pairs(res.collect()), next)
+    }
+
+    // two misses: the cache becomes a union of two local frames
+    val searched = Seq("spark shuffle", "cats sleep").map(q =>
+      q -> pairs(EngineApi.query(spark, domain, q, 2, dim).collect())).toMap
+    val ((m1, c1), missJobs) = cached("spark shuffle", empty)
+    val ((m2, c2), _) = cached("cats sleep", c1)
+    assert(missJobs > 0, "the listener saw no job of a miss")
+    assert(m1 == searched("spark shuffle") && m2 == searched("cats sleep"))
+    Seq("spark shuffle", "cats sleep").foreach { q =>
+      val stored = c2.filter(col("query") === q).orderBy("rank")
+        .select("rank", "name", "score").as[(Long, String, Double)].collect().toSeq
+      assert(stored == searched(q).zipWithIndex.map { case ((n, s), i) => (i + 1L, n, s) })
+    }
+
+    val ((hit, c3), hitJobs) = cached("spark shuffle", c2)
+    assert(hitJobs == 0)
+    assert(c3 eq c2)
+    assert(hit == searched("spark shuffle"))
   }
 
   test("patchQueryCache replaces one query's stored list wholesale") {
