@@ -11,9 +11,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * datapoints:  searchdomain, entity_id, datapoint_id, name, probmethod,
   *              similaritymethod, hash (base64 SHA-256 of text, 44 chars)
   * embeddings:  searchdomain, entity_id, datapoint_id, model, embedding array<float>
-  * query_cache: searchdomain, query, results array<struct<score,name>>,
-  *              access_times array<timestamp>, last_access
-  * embedding_cache: cache_key, model_key, embedding, idx (LRU position)
+  *
+  * Two caches sit beside the three tables. The query cache is flat rows
+  * (name, score double, rank bigint, query): one row per cached result,
+  * ranked 1..n within its query, as [[graft.api.EngineApi.queryCached]],
+  * `patchQueryCache` and `listQueryCache` read and write it. The
+  * embedding cache is (key, model, value) rows, the shape
+  * [[graft.ops.Upsert.storeSyncDiff]] diffs against its store.
   */
 final case class Domain(
     entities: DataFrame,

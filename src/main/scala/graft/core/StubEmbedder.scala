@@ -14,9 +14,11 @@ import org.apache.spark.sql.functions.col
   * (model, text) pairs unambiguous.
   *
   * Properties: reproducible across JVMs/runs, distinct per (model, text),
-  * cosine(embed(m,t), embed(m,t)) == 1. The real-provider path would swap
-  * this trait's implementation for an HTTP-batching `mapPartitions` source
-  * (SURVEY.md §2.1 S4) — everything downstream is unchanged.
+  * cosine(embed(m,t), embed(m,t)) == 1. The real-provider path is
+  * [[HttpEmbedder]], another implementation of this trait: each
+  * `embedBatch` call is one HTTP POST, and it runs through the same
+  * batched `mapPartitions` source, [[StubEmbedder.embedBatched]]
+  * (SURVEY.md §2.1 S4), so everything downstream is unchanged.
   */
 trait Embedder extends Serializable {
   def dim: Int

@@ -12,12 +12,18 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Observability for the cap-gated hybrid operators ([[ccIncremental]],
-    * [[pagerankInt]], [[bfsHops]]): counts which arm each invocation took,
-    * keyed `op:local` / `op:distributed`. The 10× scale soak
-    * (`tools/Scale`) reads these to PROVE — not assume — that above the
-    * 200k-edge cap the distributed branch runs; GraphSpec pins the arms
-    * value-equal, this pins which one executed.
+  /** Observability for the cap-gated hybrid operators: counts which arm
+    * each invocation took, keyed `op:local` / `op:distributed`. Seven
+    * gates count:
+    *  - the edge caps of [[ccIncremental]], [[pagerankInt]],
+    *    [[kcoreTrace]] and [[bfsHops]] (`local` = the driver-side arm);
+    *  - the broadcast gates `pagerankIntBcast`, `bfsHopsBcast` (inside
+    *    the distributed arms of pagerankInt and bfsHops) and
+    *    [[hitsAuthPpm]], where `local` means the broadcast arm.
+    * The 10× scale soak (`tools/Scale`) reads these to PROVE — not assume
+    * — that above the cap the distributed branch runs, and perfbench
+    * reports all seven keys; GraphSpec pins the arms value-equal, this
+    * pins which one executed.
     */
   val armCounts =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()

@@ -34,13 +34,4 @@ object FileCorpus {
   /** Read a directory of text files into (filename, title, text) rows. */
   def read(spark: SparkSession, dir: String): DataFrame =
     fromWholetext(spark.read.option("wholetext", "true").text(dir))
-
-  /** The same split as a column transform over an in-engine text column —
-    * used when the corpus already sits in a table rather than on disk.
-    */
-  def splitTitle(df: DataFrame, textCol: String): DataFrame = {
-    val parts = split(col(textCol), "\n", 2)
-    df.withColumn("title", element_at(parts, 1))
-      .withColumn("body", coalesce(element_at(parts, 2), lit("")))
-  }
 }

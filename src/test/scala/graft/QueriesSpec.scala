@@ -99,6 +99,47 @@ class QueriesSpec extends SparkSpec {
     assert(names.map(Queries.queryId).max == 448)
   }
 
+  test("every oracle with a shared recipe's marker splices that recipe's helper") {
+    // A recipe shared by several oracles is written once, beside its Spark
+    // builder; an oracle that inlines its own variant would drift from the
+    // Spark side unseen until an oracle mismatch. Each helper's output is
+    // turned into a pattern (its string arguments, rendered as sentinels,
+    // match any one-line text; its integer argument any digits); every
+    // oracle that names the marker must no longer name it once every
+    // helper match is cut out.
+    import scala.util.matching.Regex
+    val anyText = "\u0001"
+    val anyInt = 987654321
+    def helper(out: String): Regex = Regex.quote(out)
+      .replace(anyText, "\\E[^\\n]*?\\Q")
+      .replace(anyInt.toString, "\\E\\d+\\Q").r
+    val families: Seq[(String, String, Seq[Regex])] = Seq(
+      ("connected components", "reach(id, lab)",
+        Seq(helper(Queries.sqlReach(anyText)))),
+      ("co-purchase pairs", "l_partkey AS pk FROM lineitem",
+        Seq(helper(Queries.sqlCoPairCtes(anyInt)))),
+      ("sqrt(n) IVF seeds", "CAST(ceil(sqrt(count(*))) AS BIGINT)) AS st",
+        Seq(helper(Queries.sqlSqrtCentroidCtes))),
+      ("sign-bit words", "THEN CAST(2**(i-1) AS BIGINT)",
+        Seq(helper(Queries.sqlSignWordCte))),
+      ("brute-force top-10", "brute AS (",
+        Seq(helper(Queries.sqlBruteCte(anyText)))),
+      ("BM25 scaffold", "avg(CAST(len(toks) AS DOUBLE)) AS avgdl",
+        Seq(helper(Queries.sqlBm25Ctes()),
+          helper(Queries.sqlBm25Ctes(anyText -> anyText)))))
+    val problems = families.flatMap { case (family, marker, helpers) =>
+      val users = Queries.oracleSql.filter(_._2.contains(marker))
+      val inlined = users.collect { case (name, sql)
+        if helpers.foldLeft(sql)((rest, h) => h.replaceAllIn(rest, ""))
+          .contains(marker) => name }.toSeq.sorted
+      if (users.isEmpty) Seq(s"$family: no oracle names '$marker'")
+      else if (inlined.nonEmpty)
+        Seq(s"$family: ${inlined.mkString(", ")} inline the recipe")
+      else Nil
+    }
+    assert(problems.isEmpty, problems.mkString("; "))
+  }
+
   test("flagship entry() runs and returns rows with (name, score) schema") {
     val df = SparkEntry.entry(spark)
     val rows = df.collect()
