@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph helpers for dedup-cluster resolution: the pair lists
@@ -14,7 +14,7 @@ object Graph {
 
   /** Observability for the cap-gated hybrid operators: counts which arm
     * each invocation took, keyed `op:local` / `op:distributed`. Seven
-    * gates count:
+    * gates count, all through [[gated]] or [[broadcastBelow]]:
     *  - the edge caps of [[ccIncremental]], [[pagerankInt]],
     *    [[kcoreTrace]] and [[bfsHops]] (`local` = the driver-side arm);
     *  - the broadcast gates `pagerankIntBcast`, `bfsHopsBcast` (inside
@@ -22,8 +22,8 @@ object Graph {
     *    [[hitsAuthPpm]], where `local` means the broadcast arm.
     * The 10× scale soak (`tools/Scale`) reads these to PROVE — not assume
     * — that above the cap the distributed branch runs, and perfbench
-    * reports all seven keys; GraphSpec pins the arms value-equal, this
-    * pins which one executed.
+    * reports all seven keys. The map is process-global, so specs pin the
+    * helpers' selection rule directly instead of reading deltas here.
     */
   val armCounts =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
@@ -36,6 +36,63 @@ object Graph {
     import scala.jdk.CollectionConverters._
     armCounts.asScala.map { case (k, v) => k -> v.get() }.toMap
   }
+
+  /** Default edge cap of the driver arms and node cap of the broadcast arms. */
+  val MaxLocalEdges = 200000L
+  val BroadcastNodeCap = 2000000L
+
+  /** The edge gate of the hybrid operators: persists the (long, long)
+    * edge frame, collects `limit(cap + 1)` of it once, and runs `driver`
+    * over those rows when there are at most `cap`; otherwise
+    * `distributed` runs over the persisted frame. No count precedes the
+    * collect and no arm collects the edges again, so `cap` bounds driver
+    * memory at ~16 B/edge (the 200k default ≈ 3 MB). The frame is
+    * unpersisted on return, so `distributed` must materialize whatever it
+    * returns from it (checkpoint or collect).
+    */
+  private[graft] def gated[T](op: String, edges: DataFrame, cap: Long)(
+      driver: Array[(Long, Long)] => T)(distributed: DataFrame => T): T = {
+    require(cap < Int.MaxValue,
+      s"$op: cap $cap overflows limit(cap + 1); need cap < ${Int.MaxValue}")
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val e = edges.persist()
+    try {
+      val rows = e.limit(math.max(cap + 1, 0L).toInt).as[(Long, Long)].collect()
+      val local = rows.length <= cap
+      countArm(op, local)
+      if (local) driver(rows) else distributed(e)
+    } finally e.unpersist()
+  }
+
+  /** The broadcast gate: records the arm, and the returned side function
+    * broadcasts a node-sized frame only when the caller's MEASURED node
+    * count `fits` its cap (a forced hint would pin it at ANY size); above
+    * the cap the join shuffles.
+    */
+  private[graft] def broadcastBelow(op: String, fits: Boolean): DataFrame => DataFrame = {
+    countArm(op, fits)
+    // bcast-ok: cap-gated — broadcast only below the caller's measured node cap
+    df => if (fits) broadcast(df) else df
+  }
+
+  /** `localCheckpoint` plus the ids of the RDDs backing the result. The
+    * checkpointed RDD is identified DIRECTLY from the returned plan's
+    * LogicalRDD (localCheckpoint is eager, so the plan is already the
+    * materialized leaf) — never by diffing the global persistent-RDD
+    * registry, which would misattribute (and later destroy) blocks a
+    * concurrent job persisted in the same window.
+    */
+  private def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
+    val out = df.localCheckpoint()
+    val ids = out.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.toSet
+    (out, ids)
+  }
+
+  private def free(sc: org.apache.spark.SparkContext, ids: Set[Int]): Unit =
+    ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
 
   /** Connected components by HashMin label propagation WITH pointer-jumping
     * shortcuts: every node starts labelled with its own id; each round
@@ -89,22 +146,7 @@ object Graph {
     // Each round's labels are localCheckpoint'ed (lineage truncation); the
     // PREVIOUS round's checkpoint blocks are freed explicitly once the
     // convergence count has read them — otherwise a deep graph accumulates
-    // O(rounds × |V|) dead cache blocks until driver GC. The checkpointed
-    // RDD is identified DIRECTLY from the returned plan's LogicalRDD
-    // (localCheckpoint is eager, so the plan is already the materialized
-    // leaf) — never by diffing the global persistent-RDD registry, which
-    // would misattribute (and later destroy) blocks a concurrent job
-    // persisted in the same window.
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val out = df.localCheckpoint()
-      val ids = out.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }.toSet
-      (out, ids)
-    }
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-
+    // O(rounds × |V|) dead cache blocks until driver GC.
     var (labels, labelBlocks) = checkpointTracked(
       sym.select(col("a").as("id")).distinct().withColumn("component", col("id")))
     var changed = 1L
@@ -130,7 +172,7 @@ object Graph {
           .join(labels.withColumnRenamed("component", "prev"), "id")
           .filter(col("component") < col("prev"))
           .count()
-        free(labelBlocks) // previous round fully consumed by the count above
+        free(sc, labelBlocks) // previous round fully consumed by the count above
         labels = next
         labelBlocks = nextBlocks
         iter += 1
@@ -145,7 +187,7 @@ object Graph {
       case t: Throwable =>
         // failure path: the in-flight round's blocks have no consumer —
         // free them instead of leaking until session end
-        free(labelBlocks)
+        free(sc, labelBlocks)
         throw t
     } finally {
       sym.unpersist()
@@ -156,20 +198,18 @@ object Graph {
     // (a clearCache-only session otherwise accumulates cleanup closures
     // for the life of the JVM — ADVICE r8).
     val finalBlocks = labelBlocks
-    Caches.onRelease(() => free(finalBlocks),
+    Caches.onRelease(() => free(sc, finalBlocks),
       () => finalBlocks.forall(id => !sc.getPersistentRDDs.contains(id)))
     (labels, iter)
   }
 
-  /** Driver-local union-find over a bounded edge list (the small-graph
-    * arm of [[ccIncremental]]'s hybrid): min-root union keeps the
-    * component label equal to the minimum member id — the exact contract
-    * of [[connectedComponents]] — and path compression keeps the scan
-    * near-linear. Callers are responsible for bounding the edge count
-    * BEFORE collecting.
+  /** Driver-local union-find over the edge rows [[gated]] collected (the
+    * small-graph arm of [[ccIncremental]]'s hybrid): min-root union keeps
+    * the component label equal to the minimum member id — the exact
+    * contract of [[connectedComponents]] — and path compression keeps the
+    * scan near-linear.
     */
-  private def localCC(superEdges: DataFrame): DataFrame = {
-    val spark = superEdges.sparkSession
+  private def localCC(spark: SparkSession, superEdges: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
@@ -179,7 +219,7 @@ object Graph {
       while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    superEdges.as[(Long, Long)].collect().foreach { case (a, b) =>
+    superEdges.foreach { case (a, b) =>
       parent.getOrElseUpdate(a, a)
       parent.getOrElseUpdate(b, b)
       val ra = find(a); val rb = find(b)
@@ -215,7 +255,7 @@ object Graph {
       aCol: String,
       bCol: String,
       maxIter: Int = 50,
-      maxLocalEdges: Long = 200000L): DataFrame = {
+      maxLocalEdges: Long = MaxLocalEdges): DataFrame = {
     val e = newEdges
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
     val am = assign.select(col("id").as("a"), col("component").as("ca"))
@@ -227,22 +267,15 @@ object Graph {
         coalesce(col("cb"), col("b")).as("sb"))
       .filter(col("sa") =!= col("sb"))
       .distinct()
-      .persist()
     // Hybrid execution: the contracted graph is sized by the INCREMENT —
-    // typically orders of magnitude below the corpus — so when its edge
-    // count fits the EXPLICIT bound, a driver-local union-find replaces
-    // 3-8 distributed label-propagation rounds (each a shuffle join + a
-    // checkpoint + a convergence count). The bound is a hard cap on
-    // driver memory (~16 B/edge; 200k edges ≈ 3 MB), counted BEFORE any
-    // collect; above it the distributed path runs unchanged. GraphSpec
-    // pins both paths equal on the same input.
-    val superCC =
-      try {
-        val nEdges = superEdges.count()
-        countArm("ccIncremental", nEdges <= maxLocalEdges)
-        if (nEdges <= maxLocalEdges) localCC(superEdges)
-        else connectedComponents(superEdges, "sa", "sb", maxIter)
-      } finally superEdges.unpersist()
+    // typically orders of magnitude below the corpus — so when its edges
+    // fit the EXPLICIT bound, a driver-local union-find over the rows the
+    // [[gated]] collect returned replaces 3-8 distributed label-propagation
+    // rounds (each a shuffle join + a checkpoint + a convergence count);
+    // above it the distributed path runs unchanged. GraphSpec pins both
+    // paths equal on the same input.
+    val superCC = gated("ccIncremental", superEdges, maxLocalEdges)(
+      localCC(assign.sparkSession, _))(connectedComponents(_, "sa", "sb", maxIter))
     val remappedOld = assign
       .join(superCC
           .select(col("id").as("component"), col("component").as("merged")),
@@ -266,65 +299,54 @@ object Graph {
     * (node, pr); nodes are the distinct edge endpoints that appear as a
     * source (an isolated sink contributes nothing and is not ranked).
     *
-    * Hybrid execution, the [[ccIncremental]] pattern: the edge count is
-    * measured BEFORE any collect; at or below `maxLocalEdges` (a hard
-    * driver-memory cap, ~16 B/edge) the rounds run as a driver loop over
-    * primitive arrays, else each round is the standard distributed shape —
+    * Hybrid execution through [[gated]]: when the bounded collect returns
+    * at most `maxLocalEdges` edges, the rounds run as a driver loop over
+    * those rows, else each round is the standard distributed shape —
     * edges ⋈ rank + one dst-keyed aggregate, chained lazily into a single
     * job. The rank side is node-sized, so it is only broadcast below
-    * `broadcastNodeCap` (measured on the persisted node frame, the
-    * [[hitsAuthPpm]] gate — a forced hint would pin it at ANY size);
-    * above the cap the join shuffles. GraphSpec pins both arms equal.
+    * `broadcastNodeCap` (measured on the persisted node frame, through
+    * [[broadcastBelow]]); above the cap the join shuffles. GraphSpec pins
+    * the arms equal.
     */
   def pagerankInt(edges: DataFrame, iters: Int,
-      maxLocalEdges: Long = 200000L,
-      broadcastNodeCap: Long = 2000000L): DataFrame = {
+      maxLocalEdges: Long = MaxLocalEdges,
+      broadcastNodeCap: Long = BroadcastNodeCap): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .persist()
-    try {
-      val nEdges = e.count()
-      countArm("pagerankInt", nEdges <= maxLocalEdges)
-      if (nEdges <= maxLocalEdges) {
-        val es = e.as[(Long, Long)].collect()
-        val deg = es.groupBy(_._1).map { case (s, xs) => s -> xs.length.toLong }
-        val nodes = deg.keys.toArray.sorted
-        var pr: Map[Long, Long] = nodes.map(_ -> 1000000L).toMap
-        for (_ <- 1 to iters) {
-          val sc = collection.mutable.Map.empty[Long, Long]
-          es.foreach { case (s, t) =>
-            sc(t) = sc.getOrElse(t, 0L) + pr(s) / deg(s)
-          }
-          pr = nodes.map(n =>
-            n -> (150000L + (85L * sc.getOrElse(n, 0L)) / 100L)).toMap
+    gated("pagerankInt", edges.select(col("src").cast("long"), col("dst").cast("long")),
+        maxLocalEdges) { es =>
+      val deg = es.groupBy(_._1).map { case (s, xs) => s -> xs.length.toLong }
+      val nodes = deg.keys.toArray.sorted
+      var pr: Map[Long, Long] = nodes.map(_ -> 1000000L).toMap
+      for (_ <- 1 to iters) {
+        val sc = collection.mutable.Map.empty[Long, Long]
+        es.foreach { case (s, t) =>
+          sc(t) = sc.getOrElse(t, 0L) + pr(s) / deg(s)
         }
-        nodes.map(n => (n, pr(n))).toSeq.toDF("node", "pr")
-      } else {
-        val nodes = e.groupBy("src").agg(count(lit(1)).as("deg"))
-          .select(col("src").as("node"), col("deg")).persist()
-        val useBroadcast = nodes.count() <= broadcastNodeCap
-        countArm("pagerankIntBcast", useBroadcast)
-        def side(df: DataFrame): DataFrame =
-          // bcast-ok: cap-gated — broadcast only below the measured node cap
-          if (useBroadcast) broadcast(df) else df
-        var pr = nodes.withColumn("pr", lit(1000000L))
-        for (_ <- 1 to iters) {
-          val contrib = e
-            .join(side(pr.select(col("node").as("src"),
-              expr("pr div deg").as("c"))), "src")
-            .groupBy(col("dst").as("node")).agg(sum(col("c")).as("sc"))
-          pr = nodes.join(contrib, Seq("node"), "left")
-            .select(col("node"), col("deg"),
-              expr("CAST(150000 + (85 * coalesce(sc, 0L)) div 100 AS BIGINT)")
-                .as("pr"))
-        }
-        // materialize before releasing the inputs the plan references
-        val out = pr.select("node", "pr").localCheckpoint(true)
-        nodes.unpersist()
-        out
+        pr = nodes.map(n =>
+          n -> (150000L + (85L * sc.getOrElse(n, 0L)) / 100L)).toMap
       }
-    } finally e.unpersist()
+      nodes.map(n => (n, pr(n))).toSeq.toDF("node", "pr")
+    } { e =>
+      val nodes = e.groupBy("src").agg(count(lit(1)).as("deg"))
+        .select(col("src").as("node"), col("deg")).persist()
+      val side = broadcastBelow("pagerankIntBcast", nodes.count() <= broadcastNodeCap)
+      var pr = nodes.withColumn("pr", lit(1000000L))
+      for (_ <- 1 to iters) {
+        val contrib = e
+          .join(side(pr.select(col("node").as("src"),
+            expr("pr div deg").as("c"))), "src")
+          .groupBy(col("dst").as("node")).agg(sum(col("c")).as("sc"))
+        pr = nodes.join(contrib, Seq("node"), "left")
+          .select(col("node"), col("deg"),
+            expr("CAST(150000 + (85 * coalesce(sc, 0L)) div 100 AS BIGINT)")
+              .as("pr"))
+      }
+      // materialize before releasing the inputs the plan references
+      val out = pr.select("node", "pr").localCheckpoint(true)
+      nodes.unpersist()
+      out
+    }
   }
 
   /** k-core peeling trace: iteratively drop nodes of degree < `k` from
@@ -350,77 +372,60 @@ object Graph {
       bCol: String,
       k: Int,
       rounds: Int,
-      maxLocalEdges: Long = 200000L): Seq[(Long, Long, Long)] = {
+      maxLocalEdges: Long = MaxLocalEdges): Seq[(Long, Long, Long)] = {
     require(k > 0 && rounds >= 0, s"need k > 0, rounds >= 0 (got $k, $rounds)")
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
+    val sc = edges.sparkSession.sparkContext
     val e = edges.select(
       col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
     val sym = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
       .distinct()
-    // Hybrid, the [[bfsHops]]/[[pagerankInt]] pattern: the peel is
-    // `rounds` driver-synced (degree rollup + two semi-joins +
-    // localCheckpoint + stats) job chains whose data is edge-bounded —
-    // at or below the measured `maxLocalEdges` cap the whole trace is a
-    // driver fold over one collected symmetric edge list (the per-round
-    // scheduling floor, not the data, dominates there); above the cap
-    // the distributed peel below is unchanged. Arm-equality spec-pinned.
-    val symP = sym.persist()
-    try {
-      val nSym = symP.count()
-      countArm("kcoreTrace", nSym <= maxLocalEdges)
-      if (nSym <= maxLocalEdges) {
-        import spark.implicits._
-        var cur = symP.as[(Long, Long)].collect()
-        def stat(r: Int): (Long, Long, Long) =
-          (r.toLong, cur.map(_._1).distinct.length.toLong,
-            cur.length / 2L)
-        val trace = scala.collection.mutable.ArrayBuffer(stat(0))
-        for (r <- 1 to rounds) {
-          val deg = cur.groupBy(_._1).map { case (n, es) => n -> es.length }
-          val keep = deg.filter(_._2 >= k).keySet
-          cur = cur.filter(p => keep(p._1) && keep(p._2))
-          trace += stat(r)
-        }
-        trace.toSeq
-      } else {
-        def ckpt(df: DataFrame): (DataFrame, Set[Int]) = {
-          val out = df.localCheckpoint()
-          val ids = out.queryExecution.analyzed.collect {
-            case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-          }.toSet
-          (out, ids)
-        }
-        def free(ids: Set[Int]): Unit =
-          ids.foreach(id =>
-            sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-        def stats(ed: DataFrame): (Long, Long) = {
-          val row = ed.agg(countDistinct(col("a")), count(lit(1))).head()
-          (row.getLong(0), row.getLong(1) / 2)
-        }
-        var (cur, blocks) = ckpt(symP)
-        val trace = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-        try {
-          trace += { val (n, ed) = stats(cur); (0L, n, ed) }
-          for (r <- 1 to rounds) {
-            val keep = cur.groupBy("a").agg(count(lit(1)).as("deg"))
-              .filter(col("deg") >= k).select("a")
-            val (next, nextBlocks) = ckpt(cur
-              .join(keep, Seq("a"), "left_semi")
-              .join(keep.withColumnRenamed("a", "b"), Seq("b"), "left_semi"))
-            // take ownership of the new round's blocks BEFORE any further
-            // action: if stats(next) throws, the finally must free THESE,
-            // not just the previous round's
-            val prevBlocks = blocks
-            cur = next
-            blocks = nextBlocks
-            trace += { val (n, ed) = stats(next); (r.toLong, n, ed) }
-            free(prevBlocks)
-          }
-        } finally free(blocks)
-        trace.toSeq
+    // Hybrid through [[gated]]: the peel is `rounds` driver-synced (degree
+    // rollup + two semi-joins + localCheckpoint + stats) job chains whose
+    // data is edge-bounded — when the symmetric edges fit `maxLocalEdges`
+    // the whole trace is a driver fold over the collected rows (the
+    // per-round scheduling floor, not the data, dominates there); above
+    // the cap the distributed peel below is unchanged. Arm-equality
+    // spec-pinned.
+    gated("kcoreTrace", sym, maxLocalEdges) { rows =>
+      var cur = rows
+      def stat(r: Int): (Long, Long, Long) =
+        (r.toLong, cur.map(_._1).distinct.length.toLong,
+          cur.length / 2L)
+      val trace = scala.collection.mutable.ArrayBuffer(stat(0))
+      for (r <- 1 to rounds) {
+        val deg = cur.groupBy(_._1).map { case (n, es) => n -> es.length }
+        val keep = deg.filter(_._2 >= k).keySet
+        cur = cur.filter(p => keep(p._1) && keep(p._2))
+        trace += stat(r)
       }
-    } finally symP.unpersist(blocking = false)
+      trace.toSeq
+    } { symP =>
+      def stats(ed: DataFrame): (Long, Long) = {
+        val row = ed.agg(countDistinct(col("a")), count(lit(1))).head()
+        (row.getLong(0), row.getLong(1) / 2)
+      }
+      var (cur, blocks) = checkpointTracked(symP)
+      val trace = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
+      try {
+        trace += { val (n, ed) = stats(cur); (0L, n, ed) }
+        for (r <- 1 to rounds) {
+          val keep = cur.groupBy("a").agg(count(lit(1)).as("deg"))
+            .filter(col("deg") >= k).select("a")
+          val (next, nextBlocks) = checkpointTracked(cur
+            .join(keep, Seq("a"), "left_semi")
+            .join(keep.withColumnRenamed("a", "b"), Seq("b"), "left_semi"))
+          // take ownership of the new round's blocks BEFORE any further
+          // action: if stats(next) throws, the finally must free THESE,
+          // not just the previous round's
+          val prevBlocks = blocks
+          cur = next
+          blocks = nextBlocks
+          trace += { val (n, ed) = stats(next); (r.toLong, n, ed) }
+          free(sc, prevBlocks)
+        }
+      } finally free(sc, blocks)
+      trace.toSeq
+    }
   }
 
   /** Multi-source BFS hop distances: `rounds` fixed frontier-expansion
@@ -428,71 +433,62 @@ object Graph {
     * directions for undirected graphs). Returns (node, dd) for every node
     * reached within `rounds` hops; dd = 0 for sources.
     *
-    * Hybrid execution, the [[pagerankInt]] pattern: edge count measured
-    * BEFORE any collect; at or below `maxLocalEdges` the BFS is a driver
-    * loop over an adjacency map, else each round is ONE edge ⋈ distance
+    * Hybrid execution through [[gated]]: when the bounded collect returns
+    * at most `maxLocalEdges` edges the BFS is a driver loop over an
+    * adjacency map of those rows, else each round is ONE edge ⋈ distance
     * join + a min aggregate, persisted per round (each round reads its
     * predecessor TWICE — expand + union — so unpersisted lineage doubles
     * every iteration). The distance side is node-sized (≤ 2·|E| + the
     * source batch), so it is broadcast only when that MEASURED bound —
-    * the edge count already in hand plus one cheap count of the source
-    * batch — stays under `broadcastNodeCap`, and shuffle-joined above
-    * it. GraphSpec pins both arms equal.
+    * one count of the persisted edges plus one of the source batch —
+    * stays under `broadcastNodeCap`, and shuffle-joined above it.
+    * GraphSpec pins the arms equal.
     */
   def bfsHops(edges: DataFrame, sources: DataFrame, rounds: Int,
-      maxLocalEdges: Long = 200000L,
-      broadcastNodeCap: Long = 2000000L): DataFrame = {
+      maxLocalEdges: Long = MaxLocalEdges,
+      broadcastNodeCap: Long = BroadcastNodeCap): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .persist()
-    try {
-      val nEdges = e.count()
-      countArm("bfsHops", nEdges <= maxLocalEdges)
-      if (nEdges <= maxLocalEdges) {
-        val adj = e.as[(Long, Long)].collect().groupBy(_._1)
-          .map { case (s, xs) => s -> xs.map(_._2) }
-        val dist = scala.collection.mutable.LinkedHashMap[Long, Long]()
-        sources.select(col("node").cast("long")).as[Long].collect()
-          .foreach(s => dist(s) = 0L)
-        var frontier = dist.keys.toArray
-        for (k <- 1 to rounds if frontier.nonEmpty) {
-          frontier = frontier.flatMap(adj.getOrElse(_, Array.empty[Long]))
-            .distinct.filterNot(dist.contains)
-          frontier.foreach(n => dist(n) = k.toLong)
-        }
-        dist.toSeq.toDF("node", "dd")
-      } else {
-        // dist never exceeds the reached node set: ≤ 2·nEdges endpoints
-        // plus the source batch — gate on the MEASURED sum of both (ADVICE
-        // r13: gating on 2·nEdges alone left a large source set with a
-        // small edge list force-broadcast at any size; the source count is
-        // one cheap job over the batch frame, paid only in this arm).
-        // && short-circuits: when 2·nEdges alone already exceeds the cap
-        // the outcome cannot flip, so the source-count job is skipped
-        // (ADVICE r14 — it was paid unconditionally).
-        val useBroadcast = 2 * nEdges <= broadcastNodeCap &&
-          2 * nEdges + sources.count() <= broadcastNodeCap
-        countArm("bfsHopsBcast", useBroadcast)
-        def side(df: DataFrame): DataFrame =
-          // bcast-ok: cap-gated — broadcast only below the derived node cap
-          if (useBroadcast) broadcast(df) else df
-        var dist = sources.select(col("node").cast("long"), lit(0L).as("dd"))
-          .persist()
-        val rounds0 = scala.collection.mutable.ArrayBuffer(dist)
-        for (_ <- 1 to rounds) {
-          dist = e.join(side(dist), e("src") === dist("node"))
-            .select(col("dst").as("node"), (col("dd") + 1L).as("dd"))
-            .unionByName(dist)
-            .groupBy("node").agg(min("dd").as("dd"))
-            .persist()
-          rounds0 += dist
-        }
-        val out = dist.localCheckpoint(true)
-        rounds0.foreach(_.unpersist())
-        out
+    gated("bfsHops", edges.select(col("src").cast("long"), col("dst").cast("long")),
+        maxLocalEdges) { es =>
+      val adj = es.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2) }
+      val dist = scala.collection.mutable.LinkedHashMap[Long, Long]()
+      sources.select(col("node").cast("long")).as[Long].collect()
+        .foreach(s => dist(s) = 0L)
+      var frontier = dist.keys.toArray
+      for (k <- 1 to rounds if frontier.nonEmpty) {
+        frontier = frontier.flatMap(adj.getOrElse(_, Array.empty[Long]))
+          .distinct.filterNot(dist.contains)
+        frontier.foreach(n => dist(n) = k.toLong)
       }
-    } finally e.unpersist()
+      dist.toSeq.toDF("node", "dd")
+    } { e =>
+      // dist never exceeds the reached node set: ≤ 2·nEdges endpoints
+      // plus the source batch — gate on the MEASURED sum of both (ADVICE
+      // r13: gating on 2·nEdges alone left a large source set with a
+      // small edge list force-broadcast at any size). The edge count is
+      // one job over the persisted frame and the source count one over
+      // the batch, both paid only in this arm; && short-circuits, so when
+      // 2·nEdges alone already exceeds the cap the source-count job is
+      // skipped (ADVICE r14).
+      val nEdges = e.count()
+      val side = broadcastBelow("bfsHopsBcast", 2 * nEdges <= broadcastNodeCap &&
+        2 * nEdges + sources.count() <= broadcastNodeCap)
+      var dist = sources.select(col("node").cast("long"), lit(0L).as("dd"))
+        .persist()
+      val rounds0 = scala.collection.mutable.ArrayBuffer(dist)
+      for (_ <- 1 to rounds) {
+        dist = e.join(side(dist), e("src") === dist("node"))
+          .select(col("dst").as("node"), (col("dd") + 1L).as("dd"))
+          .unionByName(dist)
+          .groupBy("node").agg(min("dd").as("dd"))
+          .persist()
+        rounds0 += dist
+      }
+      val out = dist.localCheckpoint(true)
+      rounds0.foreach(_.unpersist())
+      out
+    }
   }
 
   /** HITS hubs/authorities over a bipartite edge list, all-integer ppm
@@ -514,13 +510,13 @@ object Graph {
     * broadcast would grow with the graph (the r11 verdict caveat), so
     * the per-round join runs as a plain shuffle hash join on the node
     * key instead — the standard large-graph shape. Values are identical
-    * either way (GraphSpec pins the arms equal); [[armCounts]] records
+    * either way (GraphSpec pins the arms equal); [[broadcastBelow]] records
     * which arm ran (`hitsAuthPpm:local` = broadcast). Each round's score
     * frame is localCheckpoint'ed so lineage does not grow with rounds;
     * all intermediate blocks are freed before returning.
     */
   def hitsAuthPpm(edges: DataFrame, hubCol: String, authCol: String,
-      rounds: Int, broadcastNodeCap: Long = 2000000L): DataFrame = {
+      rounds: Int, broadcastNodeCap: Long = BroadcastNodeCap): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1 (got $rounds)")
     val e = edges.select(col(hubCol).cast("long").as("hub"),
       col(authCol).cast("long").as("auth")).distinct().persist()
@@ -536,12 +532,8 @@ object Graph {
         count(when(col("hub").isNull || col("auth").isNull, 1))).head()
       require(nRow.getLong(2) == 0L,
         s"hitsAuthPpm: ${nRow.getLong(2)} edges carry null hub/auth keys")
-      val nNodes = math.max(nRow.getLong(0), nRow.getLong(1))
-      val useBroadcast = nNodes <= broadcastNodeCap
-      countArm("hitsAuthPpm", useBroadcast)
-      def side(df: DataFrame): DataFrame =
-        // bcast-ok: cap-gated — broadcast only below the measured node cap
-        if (useBroadcast) broadcast(df) else df
+      val side = broadcastBelow("hitsAuthPpm",
+        math.max(nRow.getLong(0), nRow.getLong(1)) <= broadcastNodeCap)
       val kept = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       def keep(df: DataFrame): DataFrame = {
         val out = df.localCheckpoint(true); kept += out; out

@@ -245,29 +245,6 @@ class ApiSpec extends SparkSpec {
     assert(c3 eq patched)
   }
 
-  /** Jobs `body` starts on this thread, counted by a listener after the
-    * listener bus is drained (suites sharing the session cannot leak in). */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.jobTag"
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(key) == tag)) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(key, tag)
-    try {
-      val out = body
-      org.apache.spark.graft.ListenerBridge.drain(sc, 30000L)
-      (out, jobs.get)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("queryCached: a hit runs no Spark job; a miss ranks rows in the search's order") {
     import spark.implicits._
     val empty = Seq.empty[(String, Long, String, Double)]

@@ -49,6 +49,9 @@ Soundness rules used when resolving (round-14 hardening, ADVICE r13):
     anywhere in the CONTIGUOUS comment-only block directly above it — a
     code line breaks adjacency, and comment lines cannot host other
     sites, so one comment can no longer certify an adjacent site;
+  - comment text is never a site: `//`, `/* ... */` and scaladoc
+    comments are blanked before the site scans (string literals are
+    kept whole, so a `/*` inside one opens no comment);
   - identifier args resolve through `val` chains (depth 4) in-file;
   - local `def` helper calls resolve to the def body (depth 1);
   - row-count-non-increasing tails (.select/.filter/.where/.as/.alias/
@@ -156,6 +159,67 @@ def scala_files(root):
 def strip_comments(line):
     i = line.find("//")
     return line if i < 0 else line[:i]
+
+
+CHAR_LIT = re.compile(r"'(?:\\.|[^\\'])'")
+_CODE_MEMO = {}
+
+
+def code_only(lines):
+    """Each line with its comments blanked: `//` line comments and
+    `/* ... */` block and scaladoc comments (nested, as Scala nests them,
+    and across lines). String and char literals are copied whole, so a
+    `/*` or `//` inside one (a glob path, a URL) opens no comment. The
+    site scans read these lines, so comment text naming `broadcast(x)`
+    or `.crossJoin(x)` is never a site. Memoized per file (the lines
+    list's identity)."""
+    hit = _CODE_MEMO.get(id(lines))
+    if hit and hit[0] is lines:
+        return hit[1]
+    out = []
+    depth = 0        # block-comment nesting
+    triple = False   # inside a triple-quoted literal
+    for line in lines:
+        buf = []
+        i, n = 0, len(line)
+        while i < n:
+            if depth:
+                if line.startswith("/*", i):
+                    depth, i = depth + 1, i + 2
+                elif line.startswith("*/", i):
+                    depth, i = depth - 1, i + 2
+                else:
+                    i += 1
+                continue
+            if triple:
+                j = line.find('"""', i)
+                end = n if j < 0 else j + 3
+                buf.append(line[i:end])
+                triple, i = j < 0, end
+                continue
+            if line.startswith('"""', i):
+                buf.append('"""')
+                triple, i = True, i + 3
+            elif line[i] == '"':
+                j = i + 1
+                while j < n and line[j] != '"':
+                    j += 2 if line[j] == "\\" else 1
+                buf.append(line[i:j + 1])
+                i = j + 1
+            elif CHAR_LIT.match(line, i):
+                m = CHAR_LIT.match(line, i)
+                buf.append(m.group(0))
+                i = m.end()
+            elif line.startswith("//", i):
+                break
+            elif line.startswith("/*", i):
+                depth, i = 1, i + 2
+            else:
+                buf.append(line[i])
+                i += 1
+        out.append("".join(buf))
+    _CODE_MEMO[id(lines)] = (lines, out)
+    return out
 
 
 def balanced_arg(text, start):
@@ -276,8 +340,8 @@ def bound_annotation(lines, idx):
     # site can sit between the marker and this one). The block may be
     # arbitrarily tall: the binding guarantee is adjacency, not distance.
     j = idx - 1
-    while j >= 0 and not strip_comments(lines[j]).strip() \
-            and lines[j].strip():
+    code = code_only(lines)
+    while j >= 0 and not code[j].strip() and lines[j].strip():
         kind, reason = ann_of(lines[j])
         if kind:
             return kind, reason
@@ -286,15 +350,15 @@ def bound_annotation(lines, idx):
 
 
 def find_sites(path, lines):
-    for idx, raw in enumerate(lines):
-        code = strip_comments(raw)
+    codes = code_only(lines)
+    for idx, code in enumerate(codes):
         if re.search(r"^\s*import ", code):
             continue
         for m in re.finditer(r"(?<![\w.])broadcast\(", code):
             blob = code[m.start():]
             k = idx + 1
             while blob.count("(") > blob.count(")") and k < min(idx + 14, len(lines)):
-                blob += "\n" + strip_comments(lines[k])
+                blob += "\n" + codes[k]
                 k += 1
             arg = balanced_arg(blob, blob.find("("))
             kind, ann = bound_annotation(lines, idx)
@@ -655,13 +719,13 @@ def find_cross_sites(path, lines):
     """Un-broadcast `.crossJoin(arg)` sites: (lineno, receiver, arg, ann).
     Sites whose arg is wrapped in broadcast(...) are already covered by
     the broadcast census (the wrap IS the classified site)."""
-    for idx, raw in enumerate(lines):
-        code = strip_comments(raw)
+    codes = code_only(lines)
+    for idx, code in enumerate(codes):
         for m in re.finditer(r"\.crossJoin\(", code):
             blob = code[m.start():]
             k = idx + 1
             while blob.count("(") > blob.count(")") and k < min(idx + 14, len(lines)):
-                blob += "\n" + strip_comments(lines[k])
+                blob += "\n" + codes[k]
                 k += 1
             arg = balanced_arg(blob, blob.find("(")).strip()
             if re.match(r"broadcast\(", arg):
@@ -675,8 +739,7 @@ def find_cross_sites(path, lines):
             while back > 0 and re.match(r"\s*\.", lines[back].lstrip()[:1] and lines[back]) \
                     and re.match(r"\s*[.)]", lines[back]):
                 back -= 1
-            recv_text = "\n".join(
-                strip_comments(x) for x in lines[back:idx]) + "\n" + code[: m.start()]
+            recv_text = "\n".join(codes[back:idx]) + "\n" + code[: m.start()]
             recv = None
             rm = re.search(r"(?<![\w.])([A-Za-z_][\w]*)\s*$", code[: m.start()])
             if rm:
