@@ -21,6 +21,14 @@ import graft.functions.VectorFunctions
   *
   * Centroid selection here is deterministic sampling (every k-th vector);
   * k-means refinement would slot in without changing either dataflow.
+  *
+  * Every per-query ranking goes through three helpers. [[perQueryTopK]]
+  * holds the one per-query rank window. [[exactTopK]] is the exact tail
+  * of every search: [[SearchEngine.topKJoin]], [[reRank]], [[lshSearch]],
+  * [[ivfSearch]] and stage 2 of [[binarySearch]] and [[prefixSearch]].
+  * [[probeCells]] is the nearest-cells gate of the IVF searches.
+  * The exact ranking is cosine01 rounded to 6 decimals, descending, then
+  * `vec_id` ascending, with `rnk` a long 1..k within each `query_id`.
   */
 object Ann {
   // Broadcast-bound contracts for the parameters every search entry point
@@ -202,13 +210,7 @@ object Ann {
     // bcast-ok: query batch × (1 + signBits) probe buckets — batch-sized
     val qKeyed = queries.select(col("query_id"), col("qe"))
       .withColumn("bucket", explode(probeSet))
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), asc("vec_id"))
-    keyed
-      .join(broadcast(qKeyed), "bucket")
-      .withColumn("sim", round(VectorFunctions.cosine01(col("embedding"), col("qe")), 6))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"), col("rnk"), col("sim"))
+    exactTopK(keyed.join(broadcast(qKeyed), "bucket"), k)
   }
 
   /** Exact-cosine re-rank of a per-query candidate pool (VERDICT r8 #5):
@@ -226,14 +228,9 @@ object Ann {
       corpus: DataFrame,
       queries: DataFrame,
       k: Int): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), asc("vec_id"))
-    candidates.select(col("query_id"), col("vec_id"))
+    exactTopK(candidates.select(col("query_id"), col("vec_id"))
       .join(corpus.select(col("vec_id"), col("embedding")), "vec_id")
-      .join(broadcast(queries.select(col("query_id"), col("qe"))), "query_id")
-      .withColumn("sim", round(VectorFunctions.cosine01(col("embedding"), col("qe")), 6))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"), col("rnk"), col("sim"))
+      .join(broadcast(queries.select(col("query_id"), col("qe"))), "query_id"), k)
   }
 
   /** Hard-negative mining for contrastive embedding training: for each
@@ -256,13 +253,11 @@ object Ann {
       queries: DataFrame,
       k: Int,
       dupCos: Double): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), asc("vec_id"))
-    corpus.crossJoin(broadcast(queries))
+    val guarded = corpus.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("query_id") && col("label") =!= col("qlabel"))
       .withColumn("sim", VectorFunctions.cosine01(col("embedding"), col("qe")))
       .filter(col("sim") < dupCos)
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    perQueryTopK(guarded, k, "rnk", desc("sim"), asc("vec_id"))
       .select(col("query_id"), col("vec_id"), col("rnk"), col("sim"))
   }
 
@@ -289,12 +284,11 @@ object Ann {
       nprobe: Int): DataFrame = {
     val pool = ivfSearch(assigned, centroids,
       queries.select(col("query_id"), col("qe")), poolK, nprobe)
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), asc("vec_id"))
     // Re-rank on UNROUNDED cosine (ivfSearch's sim is rounded to 6
     // decimals for oracle stability) so the dupCos guard sees the same
     // values as the brute-force [[hardNegatives]] path — the pool-sized
     // joins here are the documented fp32 re-rank step.
-    pool.select(col("query_id"), col("vec_id"))
+    val guarded = pool.select(col("query_id"), col("vec_id"))
       .join(labels.select(col("vec_id"), col("label")), "vec_id")
       .join(assigned.select(col("vec_id"), col("embedding")), "vec_id")
       .join(broadcast(queries.select(
@@ -302,8 +296,7 @@ object Ann {
       .filter(col("vec_id") =!= col("query_id") && col("label") =!= col("qlabel"))
       .withColumn("sim", VectorFunctions.cosine01(col("embedding"), col("qe")))
       .filter(col("sim") < dupCos)
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    perQueryTopK(guarded, k, "rnk", desc("sim"), asc("vec_id"))
       .select(col("query_id"), col("vec_id"), col("rnk"), col("sim"))
   }
 
@@ -349,13 +342,11 @@ object Ann {
       queries: DataFrame,
       k: Int,
       pool: Int): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(desc("qsim"), asc("vec_id"))
-    val candidates = quantized
+    val scored = quantized
       .crossJoin(broadcast(queries.select(col("query_id"), col("qe"))))
       .withColumn("qsim",
         VectorFunctions.cosine01(dequantizeInt8(col("qscale"), col("qvec")), col("qe")))
-      .withColumn("prnk", row_number().over(w))
-      .filter(col("prnk") <= pool)
+    val candidates = perQueryTopK(scored, pool, "prnk", desc("qsim"), asc("vec_id"))
       .select(col("query_id"), col("vec_id"))
     reRank(candidates, corpus, queries, k)
   }
@@ -410,24 +401,17 @@ object Ann {
     // bcast-ok: one binary-quantized row per query — batch-sized
     val qb = quantizeBinary(queries.select(col("query_id").as("vec_id"), col("qe").as("embedding")))
       .select(col("vec_id").as("query_id"), col("blo").as("qlo"), col("bhi").as("qhi"))
-    val wHam = Window.partitionBy("query_id").orderBy(asc("ham"), asc("vec_id"))
-    // bcast-ok: rank-limited to `pool` rows per query — batch × pool
-    val candidates = binary
+    val scored = binary
       .crossJoin(broadcast(qb))
       .withColumn("ham",
         bit_count(col("blo").bitwiseXOR(col("qlo"))) +
           bit_count(col("bhi").bitwiseXOR(col("qhi"))))
-      .withColumn("prnk", row_number().over(wHam))
-      .filter(col("prnk") <= pool)
+    // bcast-ok: rank-limited to `pool` rows per query — batch × pool
+    val candidates = perQueryTopK(scored, pool, "prnk", asc("ham"), asc("vec_id"))
       .select(col("query_id"), col("vec_id"), col("ham").cast("long").as("ham"))
-    val wSim = Window.partitionBy("query_id").orderBy(desc("sim"), asc("vec_id"))
-    corpus.select(col("vec_id"), col("embedding"))
+    exactTopK(corpus.select(col("vec_id"), col("embedding"))
       .join(broadcast(candidates), "vec_id")
-      .join(broadcast(queries.select(col("query_id"), col("qe"))), "query_id")
-      .withColumn("sim", round(VectorFunctions.cosine01(col("embedding"), col("qe")), 6))
-      .withColumn("rnk", row_number().over(wSim).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"), col("rnk"), col("sim"), col("ham"))
+      .join(broadcast(queries.select(col("query_id"), col("qe"))), "query_id"), k, "ham")
   }
 
   /** Matryoshka (MRL) prefix-dimension two-stage search: stage 1 ranks the
@@ -446,23 +430,16 @@ object Ann {
       prefixDim: Int,
       k: Int,
       pool: Int): DataFrame = {
-    val wPre = Window.partitionBy("query_id").orderBy(desc("psim"), asc("vec_id"))
-    // bcast-ok: rank-limited to `pool` rows per query — batch × pool
-    val candidates = corpus.select(col("vec_id"), col("embedding"))
+    val scored = corpus.select(col("vec_id"), col("embedding"))
       .crossJoin(broadcast(queries.select(col("query_id"), col("qe"))))
       .withColumn("psim", round(VectorFunctions.cosine01(
         slice(col("embedding"), 1, prefixDim), slice(col("qe"), 1, prefixDim)), 6))
-      .withColumn("prnk", row_number().over(wPre))
-      .filter(col("prnk") <= pool)
+    // bcast-ok: rank-limited to `pool` rows per query — batch × pool
+    val candidates = perQueryTopK(scored, pool, "prnk", desc("psim"), asc("vec_id"))
       .select(col("query_id"), col("vec_id"), col("psim"))
-    val wSim = Window.partitionBy("query_id").orderBy(desc("sim"), asc("vec_id"))
-    corpus.select(col("vec_id"), col("embedding"))
+    exactTopK(corpus.select(col("vec_id"), col("embedding"))
       .join(broadcast(candidates), "vec_id")
-      .join(broadcast(queries.select(col("query_id"), col("qe"))), "query_id")
-      .withColumn("sim", round(VectorFunctions.cosine01(col("embedding"), col("qe")), 6))
-      .withColumn("rnk", row_number().over(wSim).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"), col("rnk"), col("sim"), col("psim"))
+      .join(broadcast(queries.select(col("query_id"), col("qe"))), "query_id"), k, "psim")
   }
 
   /** Late-interaction (multi-vector) retrieval — MaxSim scoring in the
@@ -671,12 +648,10 @@ object Ann {
       queries: DataFrame, m: Int, dsub: Int, ksub: Int, k: Int,
       pool: Int): DataFrame = {
     val qtab = pqQueryTables(queries, codebook, dsub, ksub)
-    val w = Window.partitionBy("query_id").orderBy(desc("qsim"), asc("vec_id"))
-    val cands = encoded.crossJoin(broadcast(qtab))
+    val scored = encoded.crossJoin(broadcast(qtab))
       .withColumn("a", pqAdcFold(m, ksub))
       .withColumn("qsim", pqAdcSim)
-      .withColumn("prnk", row_number().over(w))
-      .filter(col("prnk") <= pool)
+    val cands = perQueryTopK(scored, pool, "prnk", desc("qsim"), asc("vec_id"))
       .select(col("query_id"), col("vec_id"))
     reRank(cands, corpus, queries, k)
   }
@@ -735,14 +710,7 @@ object Ann {
       centroids: DataFrame, codebook: DataFrame, corpus: DataFrame,
       queries: DataFrame, m: Int, dsub: Int, ksub: Int, k: Int, pool: Int,
       nprobe: Int): DataFrame = {
-    val wCell = Window.partitionBy("query_id").orderBy(asc("dist2"), asc("centroid_id"))
-    val cells = queries
-      // the hinted frame here is the √n-grained centroid table (the
-      // file-level bcast-sqrt-param contract), NOT the derived cells
-      .crossJoin(broadcast(centroids))
-      .withColumn("dist2", round(VectorFunctions.l2sq(col("qe"), col("cvec")), 6))
-      .withColumn("rn", row_number().over(wCell))
-      .filter(col("rn") <= nprobe)
+    val cells = probeCells(queries, centroids, nprobe)
       .select(col("query_id"), col("centroid_id"))
     // restrict the code scan to the probed cells per query: the join with
     // the broadcast (query × cell) frame is exactly the gate ivfSearch
@@ -763,13 +731,11 @@ object Ann {
       corpus: DataFrame, queries: DataFrame, m: Int, dsub: Int, ksub: Int,
       k: Int, pool: Int): DataFrame = {
     val qtab = pqQueryTables(queries, codebook, dsub, ksub)
-    val w = Window.partitionBy("query_id").orderBy(desc("qsim"), asc("vec_id"))
-    val cands = gated
+    val scored = gated
       .join(broadcast(qtab), "query_id")
       .withColumn("a", pqAdcFold(m, ksub))
       .withColumn("qsim", pqAdcSim)
-      .withColumn("prnk", row_number().over(w))
-      .filter(col("prnk") <= pool)
+    val cands = perQueryTopK(scored, pool, "prnk", desc("qsim"), asc("vec_id"))
       .select(col("query_id"), col("vec_id"))
     reRank(cands, corpus, queries, k)
   }
@@ -807,26 +773,48 @@ object Ann {
       queries: DataFrame,
       k: Int,
       nprobe: Int): DataFrame = {
-    val wCell = Window.partitionBy("query_id").orderBy(asc("dist2"), asc("centroid_id"))
-    val cells = queries
-      // the hinted frame here is the √n-grained centroid table (the
-      // file-level bcast-sqrt-param contract), NOT the derived cells
-      .crossJoin(broadcast(centroids))
-      .withColumn("dist2", round(VectorFunctions.l2sq(col("qe"), col("cvec")), 6))
-      .withColumn("rn", row_number().over(wCell))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("qe"), col("centroid_id"))
-
     // queries × nprobe rows — always broadcastable; the corpus side is only
     // touched in the probed cells (partition pruning when the table is
     // written partitioned by centroid_id).
-    val wRank = Window.partitionBy("query_id").orderBy(desc("sim"), asc("vec_id"))
-    assigned
-      // bcast-ok: nprobe probed cells per query — batch × nprobe rows
-      .join(broadcast(cells), "centroid_id")
-      .withColumn("sim", round(VectorFunctions.cosine01(col("embedding"), col("qe")), 6))
-      .withColumn("rnk", row_number().over(wRank).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"), col("rnk"), col("sim"))
+    val cells = probeCells(queries, centroids, nprobe)
+    // bcast-ok: nprobe probed cells per query — batch × nprobe rows
+    exactTopK(assigned.join(broadcast(cells), "centroid_id"), k)
+  }
+
+  /** The one per-query top-k: `rank` is the long row number 1..k of each
+    * row within its `query_id` under `order`, and rows past k are cut
+    * (Spark plans the cut as a WindowGroupLimit below the window sort).
+    * `scored` must carry `query_id` and every column `order` reads.
+    */
+  private[graft] def perQueryTopK(scored: DataFrame, k: Int, rank: String,
+      order: Column*): DataFrame =
+    scored
+      .withColumn(rank,
+        row_number().over(Window.partitionBy("query_id").orderBy(order: _*)).cast("long"))
+      .filter(col(rank) <= k)
+
+  /** The exact tail of every vector search: each query's top-k of
+    * `joined` (query_id, vec_id, embedding, qe) under the exact ranking
+    * (see the object doc). Returns (query_id, vec_id, rnk, sim) and then
+    * each `keep` column.
+    */
+  private[graft] def exactTopK(joined: DataFrame, k: Int, keep: String*): DataFrame =
+    perQueryTopK(
+      joined.withColumn("sim", round(VectorFunctions.cosine01(col("embedding"), col("qe")), 6)),
+      k, "rnk", desc("sim"), asc("vec_id"))
+      .select((Seq("query_id", "vec_id", "rnk", "sim") ++ keep).map(col): _*)
+
+  /** The IVF gate: each query's `nprobe` nearest cells by squared L2
+    * rounded to 6 decimals, ties to the lower centroid_id. `queries`
+    * carries (query_id, qe); returns (query_id, qe, centroid_id).
+    */
+  private[graft] def probeCells(queries: DataFrame, centroids: DataFrame,
+      nprobe: Int): DataFrame = {
+    // the hinted frame here is the √n-grained centroid table (the
+    // file-level bcast-sqrt-param contract), NOT the derived cells
+    val dists = queries.crossJoin(broadcast(centroids))
+      .withColumn("dist2", round(VectorFunctions.l2sq(col("qe"), col("cvec")), 6))
+    perQueryTopK(dists, nprobe, "rn", asc("dist2"), asc("centroid_id"))
+      .select(col("query_id"), col("qe"), col("centroid_id"))
   }
 }

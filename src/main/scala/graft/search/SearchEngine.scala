@@ -1,7 +1,6 @@
 package graft.search
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.api.EngineApi
@@ -250,24 +249,15 @@ object SearchEngine {
 
   /** Batch top-k similarity join — the beyond-reference capability: MANY
     * queries × corpus in one job (the reference only does 1×N,
-    * `Searchdomain.cs:193-197`). Queries are broadcast; ranking is a
-    * per-query window (row_number), so the corpus is scanned once total,
-    * not once per query.
+    * `Searchdomain.cs:193-197`). `queries` and `corpus` both carry
+    * (vec_id, embedding); a query's vec_id becomes its query_id. Queries
+    * are broadcast and ranked by [[Ann.exactTopK]] (the per-query window),
+    * so the corpus is scanned once total, not once per query. Returns
+    * (query_id, vec_id, rnk, sim).
     */
   // bcast-ok-param: queries — caller probe batch (API contract); for
   // corpus-scale query sets gate through Ann.ivfSearch/lshSearch instead
-  def topKJoin(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val scored = corpus.as("c")
-      .join(broadcast(queries.as("q")))
-      .withColumn("sim",
-        round(VectorFunctions.cosine01(col("c.embedding"), col("q.embedding")), 6))
-    val w = Window.partitionBy(col("q.vec_id")).orderBy(desc("sim"), asc("c.vec_id"))
-    scored
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(
-        col("q.vec_id").as("query_id"),
-        col("c.vec_id").as("vec_id"),
-        col("rnk"), col("sim"))
-  }
+  def topKJoin(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    Ann.exactTopK(corpus.crossJoin(broadcast(
+      queries.select(col("vec_id").as("query_id"), col("embedding").as("qe")))), k)
 }

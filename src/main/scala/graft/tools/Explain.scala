@@ -1,5 +1,5 @@
 // Plan audit driver: prints the formatted physical plan of selected
-// registered queries. Run with:
+// registered queries (or bench-only entries, Queries.benchOnly). Run with:
 //   sbt -batch 'runMain graft.tools.Explain q35_search_twolevel q60_search_documents'
 package graft.tools
 
@@ -18,9 +18,10 @@ object Explain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else graft.Queries.queries.keys.toSeq.sorted
+    val entries = graft.Queries.queries ++ graft.Queries.benchOnly
     names.foreach { n =>
       println(s"\n===== $n =====")
-      try graft.Queries.queries(n)(spark, sfDir).explain("formatted")
+      try entries(n)(spark, sfDir).explain("formatted")
       catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
     }
     spark.stop()

@@ -423,7 +423,7 @@ class AnnSpec extends SparkSpec {
     val old = embs.filter(col("vec_id") < 250)
     val fresh = embs.filter(col("vec_id") >= 250).limit(40)
     val cents = Ann.sampleCentroids(old, 25)
-    val path = "target/annspec-ivf-append"
+    val path = tempDir("annspec-ivf-append-")
     Ann.writeIvfLayout(Ann.ivfAssign(old, cents), path)
     def cellFiles(): Map[String, Set[String]] = {
       val base = new java.io.File(path)
@@ -606,5 +606,37 @@ class AnnSpec extends SparkSpec {
     for (qd <- qdocs)
       assert(got(qd) == expected(qd),
         s"maxSim mismatch for query bag $qd:\n got ${got(qd)}\nwant ${expected(qd)}")
+  }
+
+  test("every exact tail ranks sim desc, then vec_id asc, as the plain-Scala ranking") {
+    import spark.implicits._
+    // 24 vectors of 64 dims where vec i + 12 duplicates vec i, so every
+    // query's sims tie pairwise and only the vec_id tie-break orders them;
+    // the recall gates above cannot see order or tie-breaks
+    val vecs = (0L until 24L).map { i =>
+      i -> (0 until 64).map(j => math.sin((i % 12) * 31 + j * 7).toFloat).toArray
+    }.toMap
+    val e = vecs.toSeq.map { case (i, v) => (i, v.toSeq) }.toDF("vec_id", "embedding")
+    val qs = e.filter(col("vec_id") < 3)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    val (k, n) = (7, vecs.size)
+    val want = SearchEngineSpec.bruteTopK(0L until 3L, vecs, k)
+    val cents = Ann.sampleCentroids(e, 6)
+    val cb = Ann.pqSeedCodebook(e, m = 8, dsub = 8, ksub = 8)
+    val tails = Seq(
+      "topKJoin" -> SearchEngine.topKJoin(e.filter(col("vec_id") < 3), e, k),
+      "reRank" -> Ann.reRank(
+        qs.select("query_id").crossJoin(e.select("vec_id")), e, qs, k),
+      "ivfSearch" -> Ann.ivfSearch(Ann.ivfAssign(e, cents), cents, qs, k,
+        nprobe = cents.count().toInt),
+      "binarySearch" -> Ann.binarySearch(Ann.quantizeBinary(e), e, qs, k, pool = n),
+      "prefixSearch" -> Ann.prefixSearch(e, qs, prefixDim = 16, k, pool = n),
+      "pqSearch" -> Ann.pqSearch(Ann.pqEncode(e, cb, m = 8, dsub = 8), cb, e, qs,
+        m = 8, dsub = 8, ksub = 8, k, pool = n))
+    tails.foreach { case (name, df) =>
+      val got = df.select("query_id", "vec_id", "rnk").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got == want, s"$name: ${(got diff want).toSeq.sorted} vs ${(want diff got).toSeq.sorted}")
+    }
   }
 }

@@ -12,16 +12,13 @@ import graft.search.Ann
 class ModelsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String) = java.nio.file.Files
-    .createTempDirectory(java.nio.file.Paths.get("target"), prefix).toString
-
   test("classifier weights round-trip bit-for-bit and score identically") {
     val docs = Seq((0L, "alpha beta alpha", 1.0), (1L, "omega delta", 0.0),
       (2L, "alpha omega beta", 1.0)).toDF("doc_id", "text", "y")
     val feats = Classifier.featurize(docs.select("doc_id", "text"), 32)
     val w = Classifier.train(feats, docs.select("doc_id", "y"),
       nFeatures = 32, iters = 3, lr = 1.0)
-    val dir = tmp("weights-")
+    val dir = tempDir("weights-")
     Models.saveWeights(spark, w, dir)
     val w2 = Models.loadWeights(spark, dir)
     assert(w.sameElements(w2))
@@ -34,7 +31,7 @@ class ModelsSpec extends SparkSpec {
     val vocab = Seq(("low", 5L), ("lower", 2L), ("newest", 6L), ("widest", 3L))
       .toDF("tok", "n")
     val (merges, _) = Bpe.learnMergesBatched(vocab, k = 8)
-    val dir = tmp("merges-")
+    val dir = tempDir("merges-")
     Models.saveMerges(spark, merges, dir)
     val m2 = Models.loadMerges(spark, dir)
     assert(merges == m2)
@@ -61,7 +58,7 @@ class ModelsSpec extends SparkSpec {
       .select(col("id").as("doc_id"), col("component").as("cluster"),
         when(col("id") === col("component"), 1L).otherwise(0L).as("is_keeper"))
     val rows = built.orderBy("doc_id").collect().map(_.toSeq).toSeq
-    val dir = tmp("clusters-")
+    val dir = tempDir("clusters-")
     Models.saveClusters(built, dir)
     graft.ops.Caches.release() // artifact read must not depend on CC scratch
     val loaded = Models.loadClusters(spark, dir)
@@ -78,7 +75,7 @@ class ModelsSpec extends SparkSpec {
   test("PQ codebook round-trips and the ADC search is unchanged") {
     val embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cb = Ann.pqTrain(embs, Ann.pqSeedCodebook(embs, 8, 8, 16), 8, 8, iters = 1)
-    val dir = tmp("codebook-")
+    val dir = tempDir("codebook-")
     Models.saveCodebook(cb, dir)
     val cb2 = Models.loadCodebook(spark, dir)
     assert(cb.orderBy("sub", "code").collect().map(_.toSeq).toSeq ==

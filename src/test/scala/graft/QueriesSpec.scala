@@ -124,6 +124,8 @@ class QueriesSpec extends SparkSpec {
         Seq(helper(Queries.sqlSignWordCte))),
       ("brute-force top-10", "brute AS (",
         Seq(helper(Queries.sqlBruteCte(anyText)))),
+      ("IVF assignment", "CROSS JOIN cent c) WHERE rn = 1",
+        Seq(helper(Queries.sqlIvfAssignCte(anyText, anyText, anyText)))),
       ("BM25 scaffold", "avg(CAST(len(toks) AS DOUBLE)) AS avgdl",
         Seq(helper(Queries.sqlBm25Ctes()),
           helper(Queries.sqlBm25Ctes(anyText -> anyText)))))

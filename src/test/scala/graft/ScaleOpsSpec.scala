@@ -20,8 +20,7 @@ class ScaleOpsSpec extends SparkSpec {
       .toSeq.toDF("doc_id", "text", "lang", "source")
     val domain = SearchEngine.buildDomain(spark, docs, Seq("stub:alpha"), dim = 8)
 
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "bucketed-").toString
+    val dir = tempDir("bucketed-")
     Tables.writeDomainBucketed(domain, dir, "graft_test", buckets = 4)
     try {
       val bucketed = Tables.readDomainBucketed(spark, "graft_test")
@@ -64,8 +63,7 @@ class ScaleOpsSpec extends SparkSpec {
     val embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val centroids = Ann.sampleCentroids(embs, 25)
     val assigned = Ann.ivfAssign(embs, centroids)
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "ivf-").toString
+    val dir = tempDir("ivf-")
     Ann.writeIvfLayout(assigned, dir)
 
     val onDisk = spark.read.parquet(dir)

@@ -10,6 +10,7 @@ import graft.search.SearchEngine
   */
 class SearchEngineSpec extends SparkSpec {
   import spark.implicits._
+  import SearchEngineSpec.{bruteTopK, cos01}
 
   val models = Seq("stub:alpha", "stub:beta")
   val dim = 16
@@ -23,10 +24,6 @@ class SearchEngineSpec extends SparkSpec {
 
   // ---- straight-line oracle ----
   private val embedder = new StubEmbedder(dim)
-  private def dot(a: Array[Float], b: Array[Float]): Double =
-    a.indices.foldLeft(0.0)((acc, i) => acc + a(i).toDouble * b(i).toDouble)
-  private def cos01(a: Array[Float], b: Array[Float]): Double =
-    (dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))) + 1.0) / 2.0
   private def euclid01(a: Array[Float], b: Array[Float]): Double = {
     val s = a.indices.foldLeft(0.0) { (acc, i) =>
       val d = a(i).toDouble - b(i).toDouble; acc + d * d
@@ -83,14 +80,7 @@ class SearchEngineSpec extends SparkSpec {
     val vecs = (0L to 19L).map { i =>
       i -> (0 until 8).map(j => math.sin(i * 31 + j * 7).toFloat).toArray
     }.toMap
-    val want = (0L until 3L).flatMap { qid =>
-      vecs.toSeq.map { case (vid, v) =>
-        val s = BigDecimal(cos01(v, vecs(qid))).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-        (vid, s)
-      }.sortBy { case (vid, s) => (-s, vid) }.take(4).zipWithIndex
-        .map { case ((vid, _), rank) => (qid, vid, rank + 1L) }
-    }.toSet
-    assert(got == want)
+    assert(got == bruteTopK(0L until 3L, vecs, 4))
   }
 
   test("mmrSelect: mu=0 reduces to pure top-k; heavy mu excludes the exact clone") {
@@ -124,4 +114,25 @@ class SearchEngineSpec extends SparkSpec {
     assert(div.drop(1).forall(_.getDouble(3) == 0.5),
       "orthogonal picks must carry the cos01 floor 0.5 redundancy")
   }
+}
+
+object SearchEngineSpec {
+  private def dot(a: Array[Float], b: Array[Float]): Double =
+    a.indices.foldLeft(0.0)((acc, i) => acc + a(i).toDouble * b(i).toDouble)
+  def cos01(a: Array[Float], b: Array[Float]): Double =
+    (dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))) + 1.0) / 2.0
+
+  /** The exact per-query top-k in plain Scala: each query (a vec_id of
+    * `vecs`) ranks every vector by cos01 rounded half-up to 6 decimals,
+    * descending, ties to the lower vec_id. Returns (query_id, vec_id, rnk).
+    */
+  def bruteTopK(queries: Seq[Long], vecs: Map[Long, Array[Float]],
+      k: Int): Set[(Long, Long, Long)] =
+    queries.flatMap { qid =>
+      vecs.toSeq.map { case (vid, v) =>
+        val s = BigDecimal(cos01(v, vecs(qid))).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        (vid, s)
+      }.sortBy { case (vid, s) => (-s, vid) }.take(k).zipWithIndex
+        .map { case ((vid, _), rank) => (qid, vid, rank + 1L) }
+    }.toSet
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.ops.Shards
@@ -40,7 +38,7 @@ class ShardsSpec extends SparkSpec {
   }
 
   test("writeShards: one directory per shard, lossless read-back, pruned single-shard scan") {
-    val path = Files.createTempDirectory("shards").toString
+    val path = tempDir("shards-")
     val df = docs(200)
     Shards.writeShards(df, "doc_id", path, 8)
     val dirs = new java.io.File(path).listFiles().filter(_.isDirectory)

@@ -16,7 +16,7 @@ import graft.sources.{FileCorpus, JsonlCorpus}
 class SourcesSpec extends SparkSpec {
 
   test("FileCorpus.read: first line = title, rest = text, name from path") {
-    val dir = Files.createTempDirectory(java.nio.file.Paths.get("target"), "corpus-")
+    val dir = java.nio.file.Paths.get(tempDir("corpus-"))
     Files.writeString(dir.resolve("one.txt"), "Title One\nbody a\nbody b")
     Files.writeString(dir.resolve("two.txt"), "Only title, no body")
     val rows = FileCorpus.read(spark, dir.toString).orderBy("filename")
@@ -28,7 +28,7 @@ class SourcesSpec extends SparkSpec {
 
   test("JsonlCorpus: schema-enforced read, malformed lines quarantined not fatal") {
     import spark.implicits._
-    val dir = Files.createTempDirectory(java.nio.file.Paths.get("target"), "jsonl-").toString
+    val dir = tempDir("jsonl-")
     Files.writeString(java.nio.file.Paths.get(dir, "shard-0.jsonl"),
       """{"doc_id": 1, "text": "alpha doc", "lang": "en", "source": "web"}
         |{"doc_id": 2, "text": "beta doc", "lang": "de", "source": "web"}
@@ -46,7 +46,7 @@ class SourcesSpec extends SparkSpec {
 
   test("JsonlCorpus: read/quarantine partition every line; count() works") {
     import spark.implicits._
-    val dir = Files.createTempDirectory(java.nio.file.Paths.get("target"), "jsonl-").toString
+    val dir = tempDir("jsonl-")
     Files.writeString(java.nio.file.Paths.get(dir, "shard-0.jsonl"),
       """{"doc_id": 1, "text": "good", "lang": "en", "source": "web"}
         |{"doc_id": "abc", "text": "valid json, fails schema", "lang": "en", "source": "web"}
@@ -79,7 +79,7 @@ class SourcesSpec extends SparkSpec {
       Seq("stub:alpha"), dim = 4, domainName = name)
     val a = mk("domain_a", 0 until 5)
     val b = mk("domain_b", 100 until 110)
-    val dir = Files.createTempDirectory(java.nio.file.Paths.get("target"), "domains-").toString
+    val dir = tempDir("domains-")
     Tables.writeDomain(graft.core.Domain(
       a.entities.unionByName(b.entities),
       a.datapoints.unionByName(b.datapoints),

@@ -10,6 +10,30 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  /** A new directory under `target/` whose name starts with `prefix`;
+    * `afterAll` deletes it with everything in it. */
+  def tempDir(prefix: String): String = tempDirs.synchronized {
+    val d = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get("target"), prefix)
+    tempDirs += d
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try {
+      if (tempDirs.nonEmpty) {
+        // a streaming query still running would keep writing into them
+        spark.streams.active.foreach(_.stop())
+        tempDirs.foreach { d =>
+          val paths = java.nio.file.Files.walk(d)
+          try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+            .forEach(p => java.nio.file.Files.deleteIfExists(p))
+          finally paths.close()
+        }
+      }
+    } finally super.afterAll()
+
   def approx(a: Double, b: Double, tol: Double = 1e-9): Boolean =
     (a.isNaN && b.isNaN) || math.abs(a - b) <= tol * math.max(1.0, math.max(math.abs(a), math.abs(b)))
 

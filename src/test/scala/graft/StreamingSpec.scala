@@ -17,12 +17,6 @@ import graft.streaming.{Sessions, Triggers, Windowed}
   */
 class StreamingSpec extends SparkSpec {
 
-  private def tmpDir(prefix: String): String = {
-    val d = Files.createTempDirectory(java.nio.file.Paths.get("target"), prefix)
-    d.toFile.deleteOnExit()
-    d.toString
-  }
-
   test("trigger specs map to the reference's four call types") {
     assert(Triggers.forSpec("runonce") == Trigger.AvailableNow())
     assert(Triggers.forSpec("schedule:0 0 * * *") == Trigger.AvailableNow())
@@ -32,9 +26,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("fileupdate stream ingests new files as (filename, title, text) rows") {
-    val src = tmpDir("stream-src-")
-    val out = tmpDir("stream-out-")
-    val ckpt = tmpDir("stream-ckpt-")
+    val src = tempDir("stream-src-")
+    val out = tempDir("stream-out-")
+    val ckpt = tempDir("stream-ckpt-")
     Files.writeString(java.nio.file.Paths.get(src, "a.txt"), "Title A\nbody line 1\nbody line 2")
     Files.writeString(java.nio.file.Paths.get(src, "b.txt"), "Title B only")
 
@@ -106,9 +100,9 @@ class StreamingSpec extends SparkSpec {
 
   test("continuous index pipeline: file stream -> diff upsert -> versioned snapshots") {
     import graft.streaming.IndexPipeline
-    val src = tmpDir("idx-src-")
-    val dom = tmpDir("idx-dom-")
-    val ckpt = tmpDir("idx-ckpt-")
+    val src = tempDir("idx-src-")
+    val dom = tempDir("idx-dom-")
+    val ckpt = tempDir("idx-ckpt-")
     val models = Seq("stub:alpha")
 
     // round 1: two files arrive
@@ -149,9 +143,9 @@ class StreamingSpec extends SparkSpec {
     // stage by model, the parallel arm spreads batches — placement must
     // be invisible in the snapshots (identical vectors, entities).
     def run(parallel: Boolean): graft.core.Domain = {
-      val src = tmpDir(s"idxp$parallel-src-")
-      val dom = tmpDir(s"idxp$parallel-dom-")
-      val ckpt = tmpDir(s"idxp$parallel-ckpt-")
+      val src = tempDir(s"idxp$parallel-src-")
+      val dom = tempDir(s"idxp$parallel-dom-")
+      val ckpt = tempDir(s"idxp$parallel-ckpt-")
       val settings = graft.core.DomainSettings(parallelEmbeddingsPrefetch = parallel)
       Files.writeString(java.nio.file.Paths.get(src, "a.txt"), "Alpha doc\nabout spark shuffles")
       Files.writeString(java.nio.file.Paths.get(src, "b.txt"), "Beta doc\nabout broadcast joins")
