@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark harness. Each registered query is materialized with a
   * noop-format write (forces full evaluation of every column — `count()`
   * would let Catalyst prune unevaluated projections and report fiction).
@@ -29,33 +27,26 @@ object Bench {
           "recorded in the artifact)")
     }
 
+  /** The storage-layout probes timed after the registry entries. */
+  private[graft] val layoutProbes = Set("b70_search_parquet", "b71_search_bucketed")
+
   def main(args: Array[String]): Unit = {
+    import Harness.json
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
-    // optional comma-separated subset for local iteration, e.g.
-    // SPARK_GRAFT_ONLY=q41_text_stats,q47_ngram_jaccard. An empty/blank
-    // value is treated as unset (not as "run nothing"); a subset matching
-    // no registered query fails loudly instead of emitting empty metrics.
-    val benchOnlyNames = Set("b70_search_parquet", "b71_search_bucketed")
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet -- benchOnlyNames --
-        Queries.benchOnly.map(_._1)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names unregistered queries: ${unknown.toSeq.sorted.mkString(",")}")
-    }
+    // optional subset for local iteration (Harness.selection): a
+    // comma-separated SPARK_GRAFT_ONLY, e.g. q41_text_stats,q47_ngram_jaccard,
+    // and/or SPARK_GRAFT_TIER=core (SURVEY §2.13's fast subset; bench-only
+    // twins of core queries ride along). With neither set, BENCH_r{N}
+    // is the full suite. The layout-probe entries below are
+    // gated on SPARK_GRAFT_ONLY alone.
+    val names = Harness.entries.keySet ++ layoutProbes
+    val selected = Harness.selection(
+      sys.env.get("SPARK_GRAFT_ONLY"), sys.env.get("SPARK_GRAFT_TIER"), names)
+    val onlySelected = Harness.selection(sys.env.get("SPARK_GRAFT_ONLY"), None, names)
     // Untimed warmup: JVM/codegen/parquet-reader startup otherwise lands
     // on whichever query happens to run first (alphabetically q01 — which
     // then reads ~3 s slower than the identical query later in the run).
@@ -128,29 +119,10 @@ object Bench {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(_.getCollectionTime).sum
     }
-    // oracled registry + bench-only production-hash twins (Queries.benchOnly
-    // — same dataflow, xxhash64 instead of the oracle-portable md5)
-    // optional tier filter (SPARK_GRAFT_TIER=core — SURVEY §2.13's fast
-    // subset) for local iteration; bench-only twins of core queries ride
-    // along. The driver never sets it, so BENCH_r{N} stays the full suite.
-    val tier = sys.env.get("SPARK_GRAFT_TIER").map {
-      case "core" => {
-        // match by parsed numeric id (Queries.queryIdOpt), not raw
-        // digit-prefix strings — string equality would silently admit any
-        // future bench-only name whose prefix happens to collide (ADVICE
-        // r12); a name with NO numeric id is simply non-matching instead
-        // of a NumberFormatException (ADVICE r13)
-        val coreIds = Queries.coreTier.map(Queries.queryId)
-        Queries.coreTier ++
-          (Queries.benchOnly.map(_._1) ++ benchOnlyNames)
-            .filter(n => Queries.queryIdOpt(n).exists(coreIds.contains))
-      }
-      case other => sys.error(s"unknown SPARK_GRAFT_TIER '$other' (known: core)")
-    }
     // calibration only matters for the full-suite artifacts the rounds
     // compare; don't tax SPARK_GRAFT_ONLY / tier dev iterations with
     // ~4 s of fixed spin (review r14)
-    val calibrated = only.isEmpty && tier.isEmpty
+    val calibrated = selected.isEmpty
     val (calibSingle0, calibMt0, calibMax0) =
       if (calibrated) calibrate() else (0.0, 0.0, 0.0)
     // Load PROFILE (round 16): the start/end spins bracket the suite but
@@ -175,9 +147,8 @@ object Bench {
       threads.foreach(_.start()); threads.foreach(_.join())
       (System.nanoTime() - t0) / 1e9
     }
-    (SparkEntry.queries.toSeq ++ Queries.benchOnly).sortBy(_._1)
-      .filter { case (name, _) =>
-        only.forall(_.contains(name)) && tier.forall(_.contains(name)) }
+    Harness.entries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => selected.forall(_(name)) }
       .foreach { case (name, fn) =>
       locally {
         val elapsed = (System.nanoTime() - suiteT0) / 1e9
@@ -186,25 +157,20 @@ object Bench {
             (loadProfile.isEmpty || elapsed - loadProfile.last._1 >= 30.0))
           loadProfile += ((r3(elapsed), r3(quickAllCores())))
       }
-      // One timed rep. Cleanup runs INSIDE the rep boundary so every rep
-      // starts from the same state: pipelines persist() shared
-      // intermediates; drop them so later reps/queries are measured cold,
-      // and collect the garbage NOW so heavy queries don't tax their
-      // successor's measurement with GC debt.
-      def rep(): Either[String, (Double, Long)] = {
-        val g0 = gcMs(); val t0 = System.nanoTime()
-        try {
+      // One timed rep. Cleanup runs INSIDE the rep boundary (but outside
+      // the timed region) so every rep starts from the same state:
+      // pipelines persist() shared intermediates; drop them so later
+      // reps/queries are measured cold, and collect the garbage NOW so
+      // heavy queries don't tax their successor's measurement with GC debt.
+      def rep(): Either[String, (Double, Long)] =
+        try Harness.released(spark) {
+          val g0 = gcMs(); val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           Right(((System.nanoTime() - t0) / 1e9, gcMs() - g0))
         } catch {
           case e: Throwable =>
             Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
-        } finally {
-          spark.catalog.clearCache()
-          graft.ops.Caches.release()
-          System.gc()
-        }
-      }
+        } finally System.gc()
       rep() match {
         case Left(err) => errors(name) = err
         case Right(first) =>
@@ -243,7 +209,7 @@ object Bench {
     // these entries carry the measured number into BENCH). Setup (domain
     // build + both writes) is untimed — at scale it's a one-off index
     // build amortized over every query.
-    val runLayoutProbe = benchOnlyNames.exists(n => only.forall(_.contains(n)))
+    val runLayoutProbe = layoutProbes.exists(n => onlySelected.forall(_(n)))
     if (runLayoutProbe) {
       import graft.core.Tables
       import graft.search.SearchEngine
@@ -255,7 +221,7 @@ object Bench {
         Tables.writeDomain(domain, base)
         Tables.writeDomainBucketed(domain, s"$base-bucketed", "bench", buckets = cpus.toInt)
         def timeSearch(name: String, d: => graft.core.Domain): Unit =
-          if (only.forall(_.contains(name))) {
+          if (onlySelected.forall(_(name))) {
             try {
               val dd = d
               def once(): Double = {
@@ -285,29 +251,22 @@ object Bench {
       }
     }
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     val calibField =
       if (calibrated) {
         val (calibSingle1, calibMt1, calibMax1) = calibrate()
         val lp = loadProfile.map { case (t, s) => s"[$t,$s]" }
           .mkString("[", ",", "]")
-        val qo = queryOffsets.map { case (k, v) => s"${jstr(k)}:$v" }
+        val qo = queryOffsets.map { case (k, v) => s"${json(k)}:$v" }
           .mkString("{", ",", "}")
         s""""calibration":{"single_s":[$calibSingle0,$calibSingle1],""" +
           s""""all_cores_s":[$calibMt0,$calibMt1],""" +
           s""""slowest_core_s":[$calibMax0,$calibMax1]},""" +
           s""""load_profile":$lp,"query_offsets":$qo,"""
       } else ""
-    val qs = timings.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    val qs = timings.map { case (k, v) => s"${json(k)}:$v" }.mkString("{", ",", "}")
+    val es = errors.map { case (k, v) => s"${json(k)}:${json(v)}" }.mkString("{", ",", "}")
     val total = timings.values.sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$es,$calibField"sf":${jstr(sfDir)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$es,$calibField"sf":${json(sfDir)}}"""
     // Complete machine-readable artifact (VERDICT r10 #2): the driver's
     // BENCH_r{N}.json has truncated the stdout tail (60 of 153 entries at
     // r10), so the harness itself writes every entry — plus run metadata
@@ -316,15 +275,15 @@ object Bench {
     // re-stamp audit trail (VERDICT r17 #3): when the write-once override
     // is used, the operator's stated reason travels IN the artifact
     val restamp = sys.env.get("SPARK_GRAFT_RESTAMP").map(_.trim).filter(_.nonEmpty)
-    val restampField = restamp.map(r => s""","restamp_reason":${jstr(r)}""").getOrElse("")
+    val restampField = restamp.map(r => s""","restamp_reason":${json(r)}""").getOrElse("")
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","n_entries":${timings.size},""" +
-      s""""env":{"cpus":${jstr(cpus)},"sf_dir":${jstr(sfDir)},"reps":"min-of-reps; per-rep detail in target/bench_diag.txt"$restampField},""" +
+      s""""env":{"cpus":${json(cpus)},"sf_dir":${json(sfDir)},"reps":"min-of-reps; per-rep detail in target/bench_diag.txt"$restampField},""" +
       calibField +
-      s""""queries":$qs,"errors":$es,"sf":${jstr(sfDir)}}"""
+      s""""queries":$qs,"errors":$es,"sf":${json(sfDir)}}"""
     // Subset runs (SPARK_GRAFT_ONLY) are local iteration — don't clobber
     // the complete record with a 1-entry file.
-    if (only.isEmpty && tier.isEmpty) {
+    if (selected.isEmpty) {
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get("bench_full.json"), full)
       catch { case _: Throwable => () }
@@ -359,6 +318,7 @@ object Bench {
       }
     }
     println(line)
+    Queries.dropArtifacts()
     spark.stop()
   }
 }

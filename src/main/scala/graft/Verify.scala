@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -23,18 +22,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // classic (non-ANSI) eval: div-by-zero/log(0) -> null inside guarded
-      // when-branches, matching the reference's IEEE float semantics
-      .config("spark.sql.ansi.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark rejects by
-      // default; read as long (ns since epoch) — ordering semantics intact
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // WindowExec warning census (VERDICT r15 #4): a full run emits ~1.4k
     // "No Partition Defined" warnings, every one from the known bounded
@@ -68,56 +56,34 @@ object Verify {
       ctx.updateLoggers()
     }
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated subset for local iteration (same contract as
-    // Bench); the driver never sets it, so the full dump is unaffected
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    // optional tier filter for local iteration (SPARK_GRAFT_TIER=core runs
-    // the core tier, count in QUERIES.md); the driver never sets it
-    val tier = sys.env.get("SPARK_GRAFT_TIER").map {
-      case "core" => Queries.coreTier
-      case other => sys.error(s"unknown SPARK_GRAFT_TIER '$other' (known: core)")
-    }
+    // optional subset for local iteration (SPARK_GRAFT_ONLY /
+    // SPARK_GRAFT_TIER, the same rule as Bench); with neither set, every
+    // entry is dumped
+    val selected = Harness.selection(sys.env.get("SPARK_GRAFT_ONLY"),
+      sys.env.get("SPARK_GRAFT_TIER"), SparkEntry.queries.keySet)
     val windowQueries = scala.collection.mutable.TreeMap[String, Long]()
     SparkEntry.queries
-      .filter { case (name, _) =>
-        only.forall(_.contains(name)) && tier.forall(_.contains(name)) }
+      .filter { case (name, _) => selected.forall(_(name)) }
       .foreach { case (name, fn) =>
       val before = windowWarnings.get()
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try Harness.released(spark) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       finally {
-        spark.catalog.clearCache()
-        // free checkpoint blocks clearCache does not cover (Graph CC)
-        graft.ops.Caches.release()
         val d = windowWarnings.get() - before
         if (d > 0) windowQueries(name) = d
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // keep the oracle dump consistent with the dumped subset: a tier/only
     // run would otherwise hand check.py 252 oracles with no parquet to
     // compare against (the driver's full run is unaffected — no filters)
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) =>
-        only.forall(_.contains(k)) && tier.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .filter { case (k, _) => selected.forall(_(k)) }
+      .map { case (k, v) => s"${Harness.json(k)}: ${Harness.json(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Queries.dropArtifacts()
     spark.stop()
     println(s"[verify] window_warnings=${windowWarnings.get()} " +
       s"window_queries=${windowQueries.size}")
@@ -128,7 +94,7 @@ object Verify {
     // copy (ADVICE r16: the r16 `name count` dump diffed 100% against the
     // names-only stamp); per-query counts wobble ±1.5% run-to-run anyway
     // and the gate is the plan-shape boolean, not the count
-    if (only.isEmpty && tier.isEmpty)
+    if (selected.isEmpty)
       Files.writeString(Paths.get(s"$outDir/window_census.txt"),
         windowQueries.keys.mkString("", "\n", "\n"))
     sys.env.get("SPARK_GRAFT_WINDOW_CENSUS").foreach { raw =>
@@ -140,7 +106,7 @@ object Verify {
       // spuriously and point at a census file the run deliberately did
       // not write (ADVICE r16); fail the COMBINATION loudly rather than
       // silently skipping the gate the operator asked for
-      if (only.nonEmpty || tier.nonEmpty) sys.error(
+      if (selected.nonEmpty) sys.error(
         "SPARK_GRAFT_WINDOW_CENSUS is a full-run gate — unset it or drop " +
           "SPARK_GRAFT_ONLY/SPARK_GRAFT_TIER (a subset never emits all " +
           s"$expected census queries)")

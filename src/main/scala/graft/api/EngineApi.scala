@@ -67,15 +67,18 @@ object EngineApi {
     * (searchdomain, id), so on a multi-domain Domain the domains score
     * independently (no cross-domain fan-out) and the top-N is taken
     * across them.
+    *
+    * The query string is embedded through `embedder`, which must be the
+    * provider that indexed the domain (the stub or the real HTTP provider).
     */
   def query(
       spark: SparkSession,
       domain: Domain,
       queryText: String,
       topN: Int,
-      dim: Int,
-      returnAttributes: Boolean = false): DataFrame = {
-    val qEmb = SearchEngine.queryEmbeddings(spark, domain, queryText, dim)
+      embedder: Embedder,
+      returnAttributes: Boolean): DataFrame = {
+    val qEmb = SearchEngine.queryEmbeddings(spark, domain, queryText, embedder)
     if (!returnAttributes) SearchEngine.search(domain, qEmb, topN)
     else
       // joined on (searchdomain, name), not name alone: domains may reuse
@@ -88,6 +91,16 @@ object EngineApi {
         .select(col("name"), col("score"), col("attributes"))
         .orderBy(desc("score"), asc("name"))
   }
+
+  /** [[query]] embedding with the deterministic stub of width `dim`. */
+  def query(
+      spark: SparkSession,
+      domain: Domain,
+      queryText: String,
+      topN: Int,
+      dim: Int,
+      returnAttributes: Boolean = false): DataFrame =
+    query(spark, domain, queryText, topN, new StubEmbedder(dim), returnAttributes)
 
   /** The endpoint's full cache flow (`Searchdomain.cs:183-208` + C1):
     * probe the query cache by the query STRING alone (not topN — the
@@ -104,7 +117,8 @@ object EngineApi {
     * reference equality. A miss runs that probe, the search's jobs and one
     * collect of the top-N (TakeOrderedAndProject), whose rows arrive in
     * `score desc, name asc` order: each row's position is its rank, so no
-    * window or sort job runs.
+    * window or sort job runs. A miss embeds the query through `embedder`,
+    * as [[query]] does.
     */
   def queryCached(
       spark: SparkSession,
@@ -112,7 +126,7 @@ object EngineApi {
       cache: DataFrame,
       queryText: String,
       topN: Int,
-      dim: Int): (DataFrame, DataFrame) = {
+      embedder: Embedder): (DataFrame, DataFrame) = {
     val probe = cache.filter(col("query") === queryText)
       .select(col("rank").cast("long"), col("name"), col("score"))
     val stored = probe.collect()
@@ -121,7 +135,7 @@ object EngineApi {
       (spark.createDataFrame(java.util.Arrays.asList(byRank: _*), probe.schema)
         .select(col("name"), col("score")), cache)
     } else {
-      val top = query(spark, domain, queryText, topN, dim)
+      val top = query(spark, domain, queryText, topN, embedder, returnAttributes = false)
       val ranked = top.collect().zipWithIndex.map { case (r, i) =>
         Row(r.get(0), r.get(1), i + 1L, queryText) }
       val local = spark.createDataFrame(java.util.Arrays.asList(ranked: _*),
@@ -130,6 +144,16 @@ object EngineApi {
         cache.unionByName(local.select(cache.columns.map(col).toIndexedSeq: _*)))
     }
   }
+
+  /** [[queryCached]] embedding a miss with the deterministic stub of width `dim`. */
+  def queryCached(
+      spark: SparkSession,
+      domain: Domain,
+      cache: DataFrame,
+      queryText: String,
+      topN: Int,
+      dim: Int): (DataFrame, DataFrame) =
+    queryCached(spark, domain, cache, queryText, topN, new StubEmbedder(dim))
 
   /** `GET /Entities?searchdomain&returnModels&returnEmbeddings`
     * (`EntityController.cs:42-86`): the three verbosity levels — names

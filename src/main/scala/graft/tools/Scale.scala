@@ -203,14 +203,7 @@ object Scale {
       else Seq("q45_dedup_minhash", "q78_dup_clusters", "q63_pack_sequences",
         "q65_search_flagship")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Harness.session(32)
     spark.sparkContext.setLogLevel("WARN")
 
     val outDir = materialize(spark, sfDir, copies)
@@ -315,36 +308,35 @@ object Scale {
         .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
 
     names.foreach { name =>
-      val fn = graft.Queries.queries.get(name)
-        .orElse(graft.Queries.benchOnly.toMap.get(name))
-        .orElse(extra.get(name))
-        .getOrElse(sys.error(s"unknown query $name"))
+      val fn = (graft.Harness.entries ++ extra)
+        .getOrElse(name, sys.error(s"unknown query $name"))
       (1 to reps).foreach { i =>
-        val before = metrics.snapshot()
-        metrics.peakTaskMem.set(0L)
-        val armsBefore = graft.ops.Graph.armSnapshot()
-        val t0 = System.nanoTime()
-        fn(spark, outDir).write.format("noop").mode("overwrite").save()
-        val secs = (System.nanoTime() - t0) / 1e9
-        // listener events are delivered asynchronously; drain the bus
-        // deterministically before the post-run snapshot (a fixed sleep
-        // attributed late TaskEnd events to the next run on loaded hosts)
-        org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext, 30000L)
-        val after = metrics.snapshot()
-        val delta = after.map { case (k, v) => k -> (v - before(k)) }
-        val arms = graft.ops.Graph.armSnapshot()
-          .map { case (k, v) => k -> (v - armsBefore.getOrElse(k, 0L)) }
-          .filter(_._2 > 0)
-        println(f"""[scale] {"k":$copies,"query":"$name","run":$i,""" +
-          f""""sec":$secs%.3f,"peak_task_mem_b":${metrics.peakTaskMem.get},""" +
-          s""""metrics":${fmtJson(delta)},"arms":${
-            arms.toSeq.sorted.map { case (k, v) => s""""$k":$v""" }
-              .mkString("{", ",", "}")}}""")
-        spark.catalog.clearCache()
-        graft.ops.Caches.release()
+        graft.Harness.released(spark) {
+          val before = metrics.snapshot()
+          metrics.peakTaskMem.set(0L)
+          val armsBefore = graft.ops.Graph.armSnapshot()
+          val t0 = System.nanoTime()
+          fn(spark, outDir).write.format("noop").mode("overwrite").save()
+          val secs = (System.nanoTime() - t0) / 1e9
+          // listener events are delivered asynchronously; drain the bus
+          // deterministically before the post-run snapshot (a fixed sleep
+          // attributed late TaskEnd events to the next run on loaded hosts)
+          org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext, 30000L)
+          val after = metrics.snapshot()
+          val delta = after.map { case (k, v) => k -> (v - before(k)) }
+          val arms = graft.ops.Graph.armSnapshot()
+            .map { case (k, v) => k -> (v - armsBefore.getOrElse(k, 0L)) }
+            .filter(_._2 > 0)
+          println(f"""[scale] {"k":$copies,"query":"$name","run":$i,""" +
+            f""""sec":$secs%.3f,"peak_task_mem_b":${metrics.peakTaskMem.get},""" +
+            s""""metrics":${fmtJson(delta)},"arms":${
+              arms.toSeq.sorted.map { case (k, v) => s""""$k":$v""" }
+                .mkString("{", ",", "}")}}""")
+        }
         System.gc()
       }
     }
+    graft.Queries.dropArtifacts()
     spark.stop()
   }
 }

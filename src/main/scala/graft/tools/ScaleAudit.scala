@@ -123,7 +123,7 @@ object ScaleAudit {
     var flaggedW, flaggedB, flaggedC, flaggedS = 0
     try {
       val perSf: Seq[(Seq[Long], Seq[(Long, Long)], Seq[Long], Seq[Long])] =
-        sfs.map { sf =>
+        graft.Harness.released(spark)(sfs.map { sf =>
           val df = fn(spark, sf)
           // Materialize THIS queryExecution's plan (df.write would build
           // a fresh execution whose metrics this tree never sees).
@@ -131,8 +131,7 @@ object ScaleAudit {
           plan.execute().count()
           (unpartitionedWindows(plan).map(rowsInto), broadcasts(plan),
             nestedLoops(plan), shuffles(plan))
-        }
-      spark.catalog.clearCache()
+        })
       val (small, big) = (perSf.head._1, perSf.last._1)
       // Positional pairing is only sound when both SFs produced the
       // same operator count — otherwise the static planner picked
@@ -276,17 +275,10 @@ object ScaleAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE off so the executed plan (and its metrics) is the static
-      // tree — the audit reads per-operator metrics, not wall time.
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Harness.session(32)
+    // AQE off so the executed plan (and its metrics) is the static
+    // tree — the audit reads per-operator metrics, not wall time.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
 
     // sf0.01 → sf0.1 is the informative pair: EVERY table grows 10×
@@ -318,6 +310,7 @@ object ScaleAudit {
     println(s"[bcast]   flagged: ${totals("bcast")}")
     println(s"[cross]   flagged: ${totals("cross")}")
     println(s"[shuffle] flagged: ${totals("shuffle")}")
+    graft.Queries.dropArtifacts()
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -87,7 +87,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 object StreamScale {
   private def jmap(m: Seq[(String, Any)]): String =
     m.map {
-      case (k, v: String) => s""""$k":"$v""""
+      case (k, v: String) => s""""$k":${graft.Harness.json(v)}"""
       case (k, v) => s""""$k":$v"""
     }.mkString("{", ",", "}")
 
@@ -224,14 +224,7 @@ object StreamScale {
       s"unknown ops: ${(ops -- KnownOps).toSeq.sorted.mkString(",")} " +
         s"(known: ${KnownOps.toSeq.sorted.mkString(",")})")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Harness.session(32)
     spark.sparkContext.setLogLevel("WARN")
 
     // the soak only streams documents + events (+ embeddings when the

@@ -53,6 +53,34 @@ class GraphSpec extends SparkSpec {
     Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (6L, 7L)).toDF("a", "b")
   }
 
+  /** Runs a cap-gated op at cap 0 (forced distributed/shuffle arm) and at
+    * its default cap, asserts both arms agree and returns the value. */
+  private def same[T](gate: String, default: Long)(run: Long => T): T = {
+    val (forced, dflt) = (run(0L), run(default))
+    assert(forced == dflt, s"$gate: cap 0 != default cap\n $forced\n $dflt")
+    dflt
+  }
+
+  // Each arm pair runs once per suite: the per-op tests below assert on these
+  // values, and the all-gates spec forces every one of them.
+  private lazy val ccIncrArms: Map[Long, Long] = {
+    import spark.implicits._
+    val assign = Graph.connectedComponents(
+      Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L)).toDF("a", "b"), "a", "b")
+    val newEdges = Seq((40L, 41L), (42L, 10L), (3L, 21L), (41L, 20L)).toDF("a", "b")
+    same("ccIncremental", Graph.MaxLocalEdges)(cap =>
+      pairs(Graph.ccIncremental(assign, newEdges, "a", "b", maxLocalEdges = cap)))
+  }
+  private lazy val prArms: Map[Long, Long] =
+    same("pagerankInt", Graph.MaxLocalEdges)(cap =>
+      pairs(Graph.pagerankInt(prEdges, iters = 8, maxLocalEdges = cap)))
+  private lazy val bfsArms: Map[Long, Long] =
+    same("bfsHops", Graph.MaxLocalEdges)(cap =>
+      pairs(Graph.bfsHops(bfsEdges, bfsSources, rounds = 2, maxLocalEdges = cap)))
+  private lazy val hitsArms: Map[Long, Long] =
+    same("hitsAuthPpm", Graph.BroadcastNodeCap)(cap =>
+      pairs(Graph.hitsAuthPpm(purchases, "ck", "pk", rounds = 3, broadcastNodeCap = cap)))
+
   test("chain merges transitively to the minimum id") {
     // 1-2, 2-3, 3-4: one component labelled 1 — a pairwise keeper rule
     // would wrongly retain 2 of the 4.
@@ -123,16 +151,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("incremental CC: local union-find arm equals the distributed arm") {
-    import spark.implicits._
-    val oldEdges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L)).toDF("a", "b")
-    val assign = Graph.connectedComponents(oldEdges, "a", "b")
-    val newEdges = Seq((40L, 41L), (42L, 10L), (3L, 21L), (41L, 20L)).toDF("a", "b")
-    def run(maxLocal: Long) =
-      pairs(Graph.ccIncremental(assign, newEdges, "a", "b", maxLocalEdges = maxLocal))
-    val local = run(Graph.MaxLocalEdges) // small graph -> union-find arm
-    val dist = run(0L)                   // force the distributed arm on the same input
-    assert(local == dist)
-    assert(local(41L) == 1L) // chain 40-41-20-21-3-2-1 collapses to min 1
+    assert(ccIncrArms(41L) == 1L) // chain 40-41-20-21-3-2-1 collapses to min 1
   }
 
   test("incremental CC with an empty increment is the identity") {
@@ -146,26 +165,17 @@ class GraphSpec extends SparkSpec {
 
   test("integer PageRank: driver arm equals the distributed arm, " +
       "and a hub outranks leaves") {
-    def run(maxLocal: Long) =
-      pairs(Graph.pagerankInt(prEdges, iters = 8, maxLocalEdges = maxLocal))
-    val local = run(Graph.MaxLocalEdges)
-    val dist = run(0L) // force the distributed arm on the same input
-    assert(local == dist, s"driver arm != distributed arm\n $local\n $dist")
+    val pr = prArms
     // the hub accumulates its three leaves' full rank plus 7's
-    assert(local(1L) > local(2L) && local(2L) == local(3L))
+    assert(pr(1L) > pr(2L) && pr(2L) == pr(3L))
     // 5-6 swap rank symmetrically; 7 has out-degree but no in-edges
-    assert(local(5L) == local(6L))
-    assert(local(7L) == 150000L)
+    assert(pr(5L) == pr(6L))
+    assert(pr(7L) == 150000L)
   }
 
   test("multi-source BFS: driver arm equals the distributed arm, " +
       "rounds bound reach, nearest source wins") {
-    def run(maxLocal: Long) =
-      pairs(Graph.bfsHops(bfsEdges, bfsSources, rounds = 2, maxLocalEdges = maxLocal))
-    val local = run(Graph.MaxLocalEdges)
-    val dist = run(0L) // force the distributed arm on the same input
-    assert(local == dist, s"driver arm != distributed arm\n $local\n $dist")
-    assert(local == Map(1L -> 0L, 5L -> 0L, 2L -> 1L, 4L -> 1L, 6L -> 1L,
+    assert(bfsArms == Map(1L -> 0L, 5L -> 0L, 2L -> 1L, 4L -> 1L, 6L -> 1L,
       3L -> 2L)) // 8/9 unreached within 2 rounds; 3 reached at min hop 2
   }
 
@@ -221,14 +231,10 @@ class GraphSpec extends SparkSpec {
 
   test("HITS: broadcast arm equals the shuffle arm, and the universal " +
       "authority wins") {
-    def run(cap: Long) =
-      pairs(Graph.hitsAuthPpm(purchases, "ck", "pk", rounds = 3, broadcastNodeCap = cap))
-    val bcast = run(Graph.BroadcastNodeCap)
-    val shuf = run(0L) // force the shuffle arm on the same input
-    assert(bcast == shuf, s"broadcast arm != shuffle arm\n $bcast\n $shuf")
+    val hits = hitsArms
     // authority ordering follows coverage; scores normalize to ~1e6 total
-    assert(bcast(10L) > bcast(11L) && bcast(11L) > bcast(12L))
-    assert(math.abs(bcast.values.sum - 1000000L) <= bcast.size)
+    assert(hits(10L) > hits(11L) && hits(11L) > hits(12L))
+    assert(math.abs(hits.values.sum - 1000000L) <= hits.size)
   }
 
   test("HITS rejects an edge with a null hub key") {
@@ -273,32 +279,17 @@ class GraphSpec extends SparkSpec {
   }
 
   test("every cap-gated gate returns equal values at cap 0 and at its default cap") {
-    import spark.implicits._
-    def same[T](gate: String, default: Long)(run: Long => T): T = {
-      val (forced, dflt) = (run(0L), run(default))
-      assert(forced == dflt, s"$gate: cap 0 != default cap\n $forced\n $dflt")
-      dflt
-    }
-    val assign = Graph.connectedComponents(
-      Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L)).toDF("a", "b"), "a", "b")
-    val newEdges = Seq((40L, 41L), (42L, 10L), (3L, 21L), (41L, 20L)).toDF("a", "b")
-    same("ccIncremental", Graph.MaxLocalEdges)(cap =>
-      pairs(Graph.ccIncremental(assign, newEdges, "a", "b", maxLocalEdges = cap)))
+    ccIncrArms
     // pagerankInt, then pagerankIntBcast inside its distributed arm
-    val pr = same("pagerankInt", Graph.MaxLocalEdges)(cap =>
-      pairs(Graph.pagerankInt(prEdges, iters = 8, maxLocalEdges = cap)))
-    assert(pr == same("pagerankIntBcast", Graph.BroadcastNodeCap)(cap =>
+    assert(prArms == same("pagerankIntBcast", Graph.BroadcastNodeCap)(cap =>
       pairs(Graph.pagerankInt(prEdges, iters = 8, maxLocalEdges = 0L,
         broadcastNodeCap = cap))))
     same("kcoreTrace", Graph.MaxLocalEdges)(cap =>
       Graph.kcoreTrace(kcoreEdges, "a", "b", k = 2, rounds = 3, maxLocalEdges = cap))
     // bfsHops, then bfsHopsBcast inside its distributed arm
-    val bfs = same("bfsHops", Graph.MaxLocalEdges)(cap =>
-      pairs(Graph.bfsHops(bfsEdges, bfsSources, rounds = 2, maxLocalEdges = cap)))
-    assert(bfs == same("bfsHopsBcast", Graph.BroadcastNodeCap)(cap =>
+    assert(bfsArms == same("bfsHopsBcast", Graph.BroadcastNodeCap)(cap =>
       pairs(Graph.bfsHops(bfsEdges, bfsSources, rounds = 2, maxLocalEdges = 0L,
         broadcastNodeCap = cap))))
-    same("hitsAuthPpm", Graph.BroadcastNodeCap)(cap =>
-      pairs(Graph.hitsAuthPpm(purchases, "ck", "pk", rounds = 3, broadcastNodeCap = cap)))
+    hitsArms
   }
 }

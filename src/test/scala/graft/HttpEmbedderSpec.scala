@@ -26,10 +26,10 @@ class HttpEmbedderSpec extends SparkSpec {
   /** Start a provider fixture; hands the base endpoint to `f`. The
     * fixture re-prefixes the scheme onto the model name it receives —
     * the full model URI is the stub's seed, and a real provider likewise
-    * knows its own identity.
+    * knows its own identity. `seen` collects every text it embedded.
     */
-  private def withServer(dim: Int, posted: java.util.concurrent.atomic.AtomicLong =
-      new java.util.concurrent.atomic.AtomicLong)(f: String => Unit): Unit = {
+  private def withServer(dim: Int, seen: java.util.Queue[String] =
+      new java.util.concurrent.ConcurrentLinkedQueue[String])(f: String => Unit): Unit = {
     val mapper = new ObjectMapper
     val stub = new StubEmbedder(dim)
     def handler(scheme: String)(wrap: (Seq[Array[Float]], ObjectMapper) => String): HttpHandler =
@@ -38,9 +38,9 @@ class HttpEmbedderSpec extends SparkSpec {
           val body = mapper.readTree(new String(
             ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
           val model = scheme + ":" + body.get("model").asText()
-          val vecs = body.get("input").elements().asScala.toSeq
-            .map(t => stub.embed(model, t.asText()))
-          posted.addAndGet(vecs.size.toLong)
+          val texts = body.get("input").elements().asScala.toSeq.map(_.asText())
+          texts.foreach(seen.add)
+          val vecs = texts.map(stub.embed(model, _))
           val resp = wrap(vecs, mapper).getBytes(StandardCharsets.UTF_8)
           ex.getResponseHeaders.set("Content-Type", "application/json")
           ex.sendResponseHeaders(200, resp.length)
@@ -134,29 +134,31 @@ class HttpEmbedderSpec extends SparkSpec {
   }
 
   test("index→search end-to-end through the HTTP provider equals the stub path") {
-    withServer(8) { base =>
+    import spark.implicits._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    withServer(8, seen) { base =>
       val cfg = ProviderConfig(base, dim = 8, batchSize = 16)
       val http = new HttpEmbedder(cfg)
       val docs = spark.read
         .parquet("/root/testdata/sf0.001/documents.parquet")
         .limit(40)
       val models = Seq("ollama:bge-m3", "openai:text-embedding-3-small")
+      val empty = Seq.empty[(String, Long, String, Double)]
+        .toDF("query", "rank", "name", "score")
+      val q = "what is a graft query"
 
       // the full production composition: buildDomain AND the query-time
-      // embedding both flow through the HTTP provider — no stub anywhere
-      // in the pipeline under test
+      // embedding behind the cached query endpoint both flow through the
+      // HTTP provider — no stub anywhere in the pipeline under test
       val domain = SearchEngine.buildDomain(spark, docs, models, 8, "docs",
         http, parallelPrefetch = true)
-      val qEmb = SearchEngine.queryEmbeddings(spark, domain,
-        "what is a graft query", http)
-      val got = SearchEngine.search(domain, qEmb, 10)
+      val got = EngineApi.queryCached(spark, domain, empty, q, 10, http)._1
         .collect().map(_.toSeq).toSeq
+      assert(seen.contains(q), "the query text never reached the provider")
 
       // reference arm: the same pipeline entirely on the stub
       val sDomain = SearchEngine.buildDomain(spark, docs, models, 8)
-      val sQEmb = SearchEngine.queryEmbeddings(spark, sDomain,
-        "what is a graft query", 8)
-      val want = SearchEngine.search(sDomain, sQEmb, 10)
+      val want = EngineApi.queryCached(spark, sDomain, empty, q, 10, 8)._1
         .collect().map(_.toSeq).toSeq
 
       assert(got.size == 10)
@@ -182,8 +184,8 @@ class HttpEmbedderSpec extends SparkSpec {
       d.datapoints.orderBy("datapoint_id"),
       d.embeddings.orderBy("datapoint_id", "model"))
       .map(_.collect().map(_.toSeq).toSeq)
-    val posted = new java.util.concurrent.atomic.AtomicLong
-    withServer(8, posted) { base =>
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    withServer(8, seen) { base =>
       val http = new HttpEmbedder(ProviderConfig(base, dim = 8, batchSize = 16))
       val viaHttp = EngineApi.upsertEntities(spark, stored,
         SearchEngine.docEntities(batch), SearchEngine.docDatapoints(batch),
@@ -192,7 +194,7 @@ class HttpEmbedderSpec extends SparkSpec {
         SearchEngine.docEntities(batch), SearchEngine.docDatapoints(batch), models, 8)
       val embeddings = viaHttp.embeddings.collect()
       // only the 20 created/changed texts reached the provider, per model
-      assert(posted.get == 20L * models.size)
+      assert(seen.size == 20 * models.size)
       assert(embeddings.length == 25 * 2 * models.size)
       assert(tables(viaHttp) == tables(viaStub))
     }

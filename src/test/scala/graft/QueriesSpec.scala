@@ -42,11 +42,12 @@ class QueriesSpec extends SparkSpec {
   test("every registered query executes at sf0.001") {
     val failures = Queries.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       try {
-        fn(spark, "/root/testdata/sf0.001").collect(); None
+        Harness.released(spark)(fn(spark, "/root/testdata/sf0.001").collect()); None
       } catch {
         case e: Throwable => Some(s"$name: ${e.getMessage}")
-      } finally spark.catalog.clearCache()
+      }
     }
+    Queries.dropArtifacts()
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 

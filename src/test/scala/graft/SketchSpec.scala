@@ -170,7 +170,7 @@ class SketchSpec extends SparkSpec {
     val sf = "/root/testdata/sf0.01"
     val exact = Queries.queries("q88_ccnet_buckets")(spark, sf)
       .collect().map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2), r.getString(3))).toMap
-    val approx = Queries.benchOnly.toMap.apply("b88_ccnet_approx")(spark, sf)
+    val approx = Harness.entries("b88_ccnet_approx")(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
     assert(exact.nonEmpty && exact.keySet == approx.keySet)
 
