@@ -2,7 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.core.{Domain, DomainSettings, Embedder, StubEmbedder}
 import graft.functions.TextFunctions
@@ -11,9 +11,14 @@ import graft.search.SearchEngine
 /** Batch equivalents of the reference's REST surface (SURVEY.md §2.12;
   * controllers at `src/Server/Controllers/`) — the library face a user of
   * the reference would call. Every method is a DataFrame transform over
-  * [[graft.core.Domain]] tables. Only request-sized payloads collect to
-  * the driver: a query-cache probe's rows and a search's top-N
-  * ([[queryCached]]); nothing corpus-sized does.
+  * [[graft.core.Domain]] tables. Request-sized payloads collect to the
+  * driver: a query-cache probe's rows and a search's top-N
+  * ([[queryCached]]). One corpus-sized collect exists, capped: the first
+  * [[query]] of a `Domain` instance collects its scoring rows into a
+  * columnar [[graft.core.DomainSnapshot]] when they hold at most 16M
+  * vector floats (about 64 MB; `DomainSnapshot.FloatBudget`), and that
+  * instance holds it until it is itself unreachable. A larger domain is
+  * never collected: it is searched by the distributed plan.
   *
   * | reference endpoint                           | here                 |
   * |----------------------------------------------|----------------------|
@@ -57,9 +62,11 @@ object EngineApi {
 
   /** `POST /Searchdomain/Query?searchdomain&query&topN&returnAttributes`
     * (`SearchdomainController.cs:158-171`): embed the query under every
-    * model in use, run the two-level scored search, optionally attach the
-    * entity attribute map (P3, applied AFTER the top-k cut so the join
-    * touches topN rows, not the corpus).
+    * model in use, run the two-level scored search
+    * ([[SearchEngine.serveQuery]]: on the driver from the domain's
+    * snapshot at or below the size cap, else the distributed plan),
+    * optionally attach the entity attribute map (P3, applied AFTER the
+    * top-k cut so the join touches topN rows, not the corpus).
     *
     * Like the endpoint, a query is normally per searchdomain: scope a
     * shared table set first with `Tables.readDomain(spark, dir, name)`
@@ -78,13 +85,13 @@ object EngineApi {
       topN: Int,
       embedder: Embedder,
       returnAttributes: Boolean): DataFrame = {
-    val qEmb = SearchEngine.queryEmbeddings(spark, domain, queryText, embedder)
-    if (!returnAttributes) SearchEngine.search(domain, qEmb, topN)
+    val top = SearchEngine.serveQuery(spark, domain, queryText, topN, embedder)
+    if (!returnAttributes) top.select(col("name"), col("score"))
     else
       // joined on (searchdomain, name), not name alone: domains may reuse
       // entity names, and a name-only join would fan the top-N out
       // against every same-named entity of every domain
-      SearchEngine.searchWithDomain(domain, qEmb, topN)
+      top
         .join(domain.entities.select(
           col("searchdomain"), col("name"), col("attributes")),
           Seq("searchdomain", "name"), "left_outer")
@@ -114,11 +121,15 @@ object EngineApi {
     * local rows, as it is when the caller holds it between requests (the
     * reference's in-memory QueryCache). A hit adds nothing, so the input
     * cache object itself comes back: the caller tells a hit from a miss by
-    * reference equality. A miss runs that probe, the search's jobs and one
-    * collect of the top-N (TakeOrderedAndProject), whose rows arrive in
-    * `score desc, name asc` order: each row's position is its rank, so no
-    * window or sort job runs. A miss embeds the query through `embedder`,
-    * as [[query]] does.
+    * reference equality. A miss runs that probe, the search and one
+    * collect of its top-N, whose rows arrive in `score desc, name asc`
+    * order: each row's position is its rank, so no window or sort job
+    * runs. On a domain within the snapshot cap the search is a local
+    * frame, so a miss runs no Spark job after the first search of the
+    * `Domain` instance (which builds the snapshot); above the cap it runs
+    * the distributed plan's jobs. A miss embeds the query through
+    * `embedder`, as [[query]] does. A miss on a local cache returns a
+    * local cache ([[appended]]).
     */
   def queryCached(
       spark: SparkSession,
@@ -132,17 +143,35 @@ object EngineApi {
     val stored = probe.collect()
     if (stored.nonEmpty) {
       val byRank = stored.sortBy(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
-      (spark.createDataFrame(java.util.Arrays.asList(byRank: _*), probe.schema)
-        .select(col("name"), col("score")), cache)
+      (spark.createDataFrame(rowList(byRank.map(r => Row(r.get(1), r.get(2)))),
+        StructType(probe.schema.drop(1))), cache)
     } else {
       val top = query(spark, domain, queryText, topN, embedder, returnAttributes = false)
-      val ranked = top.collect().zipWithIndex.map { case (r, i) =>
-        Row(r.get(0), r.get(1), i + 1L, queryText) }
-      val local = spark.createDataFrame(java.util.Arrays.asList(ranked: _*),
-        top.schema.add("rank", LongType).add("query", StringType))
-      (local.select(col("name"), col("score")),
-        cache.unionByName(local.select(cache.columns.map(col).toIndexedSeq: _*)))
+      val found = top.collect()
+      val ranked = found.zipWithIndex.map { case (r, i) => Row(r.get(0), r.get(1), i + 1L, queryText) }
+      (spark.createDataFrame(rowList(found), top.schema), appended(spark, cache, ranked,
+        top.schema.add("rank", LongType).add("query", StringType)))
     }
+  }
+
+  private def rowList(rs: Seq[Row]): java.util.List[Row] = java.util.Arrays.asList(rs: _*)
+
+  /** `cache` with `rows` (of `schema`) appended. A local cache with the
+    * same column names and types stays ONE local relation (its rows are
+    * collected without a job), so a later probe plans one filter over it,
+    * not a union that grows by one child per miss. Any other cache gets a
+    * union.
+    */
+  private def appended(spark: SparkSession, cache: DataFrame, rows: Seq[Row],
+      schema: StructType): DataFrame = {
+    def types(s: StructType) = s.map(f => f.name -> f.dataType).toMap
+    if (cache.isLocal && types(cache.schema) == types(schema)) {
+      val at = cache.columns.map(schema.fieldIndex)
+      spark.createDataFrame(rowList(cache.collect() ++ rows.map(r => Row.fromSeq(at.map(r.get)))),
+        StructType(cache.schema.map(_.copy(nullable = true))))
+    } else
+      cache.unionByName(spark.createDataFrame(rowList(rows), schema)
+        .select(cache.columns.map(col).toIndexedSeq: _*))
   }
 
   /** [[queryCached]] embedding a miss with the deterministic stub of width `dim`. */
@@ -208,7 +237,9 @@ object EngineApi {
     * Domain.
     *
     * `incoming` carries (entity_id, datapoint_id, name, probmethod,
-    * similaritymethod, text); `entities` the matching entity rows.
+    * similaritymethod, text); `entities` the matching entity rows. Each
+    * keeps its last row per key ([[lastPerKey]]): an entity named twice in
+    * one batch is stored once, as its later occurrence.
     *
     * The content-hash diff is two anti-joins on (searchdomain,
     * datapoint_id, hash), null-safe on the hash: incoming rows without a
@@ -233,12 +264,31 @@ object EngineApi {
       incoming: DataFrame,
       models: Seq[String],
       embedder: Embedder,
-      settings: DomainSettings): Domain = {
+      settings: DomainSettings): Domain =
+    upsert(spark, domain, entities, incoming, models, embedder, settings, keysDistinct = false)
+
+  /** [[upsertEntities]]. `keysDistinct` says the caller's batch names each
+    * entity and datapoint once, so the last-row-per-key cut
+    * ([[lastPerKey]]) is skipped: it costs a shuffle in every table write
+    * (measured +25% on a 5,000-document first index).
+    */
+  private[graft] def upsert(
+      spark: SparkSession,
+      domain: Domain,
+      entities: DataFrame,
+      incoming: DataFrame,
+      models: Seq[String],
+      embedder: Embedder,
+      settings: DomainSettings,
+      keysDistinct: Boolean): Domain = {
+    def lastRows(df: DataFrame, key: Seq[String]) =
+      if (keysDistinct) df else lastPerKey(df, key)
     // Every merge key includes `searchdomain`: a Domain may legitimately
     // hold several domains side by side (the catalog operators below work
     // on that shape), and two domains reusing entity_id/datapoint_id
     // values must never cross-contaminate.
-    val hashed = incoming.withColumn("hash", TextFunctions.contentHash(col("text")))
+    val hashed = lastRows(incoming, Seq("searchdomain", "datapoint_id"))
+      .withColumn("hash", TextFunctions.contentHash(col("text")))
     // rows of `left` with no (searchdomain, datapoint_id, hash) twin in `right`
     def withoutTwin(left: DataFrame, right: DataFrame): DataFrame = {
       val r = right.select(col("searchdomain").as("__sd"),
@@ -280,9 +330,25 @@ object EngineApi {
       .unionByName(fresh.select(domain.embeddings.columns.map(col).toIndexedSeq: _*))
     val mergedEntities = domain.entities
       .join(touched, entKey, "left_anti")
-      .unionByName(entities.select(domain.entities.columns.map(col).toIndexedSeq: _*))
+      .unionByName(lastRows(entities, entKey)
+        .select(domain.entities.columns.map(col).toIndexedSeq: _*))
     Domain(mergedEntities, mergedDatapoints, mergedEmbeddings)
   }
+
+  /** The last row of `df` per `key`, in `df`'s row order. A batch that
+    * names one entity (or datapoint) twice keeps its later row, as the
+    * reference applies a PUT list in order; without the cut both rows
+    * would land, and the entity would be stored twice. A batch without
+    * repeated keys passes through whole. "Last" is the batch's own row
+    * order, so a batch with repeated keys must have a stable one (a local
+    * or file-read batch does).
+    */
+  private def lastPerKey(df: DataFrame, key: Seq[String]): DataFrame =
+    df.withColumn("__ord", monotonically_increasing_id())
+      .withColumn("__last", max(col("__ord")).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(key.map(col): _*)))
+      .where(col("__ord") === col("__last"))
+      .drop("__ord", "__last")
 
   /** Session finalize (`PUT /Entities?sessionComplete=true` — the call is
     * per searchdomain, `EntityController.cs:163-199`): delete every entity

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Engine storage model (SURVEY.md §1.3): the reference's 5 MySQL tables
   * re-expressed as Parquet-backed DataFrames partitioned by `searchdomain`
@@ -26,6 +27,26 @@ final case class Domain(
 
   def persisted(): Domain =
     Domain(entities.cache(), datapoints.cache(), embeddings.cache())
+
+  /** The models in use (U1), sorted: one distinct collect per instance,
+    * i.e. per version, on first use (not at load, so a commit runs no
+    * extra job). */
+  @transient private[graft] lazy val models: Seq[String] =
+    embeddings.select(col("model")).where(col("model").isNotNull).distinct()
+      .collect().map(_.getString(0)).toSeq.sorted
+
+  @transient private lazy val snapshots =
+    new java.util.concurrent.ConcurrentHashMap[Int, Option[DomainSnapshot]]()
+
+  /** The search's driver-arm [[DomainSnapshot]] for query vectors of
+    * width `dim`, or None above [[DomainSnapshot.cap]]`(dim)` embeddings:
+    * built by one collect the first time it is asked for, then held by
+    * this instance, so it lives and dies with this version of the domain.
+    * Every caller embeds with the provider that indexed the domain, so one
+    * width, and one snapshot, is the rule.
+    */
+  private[graft] def snapshot(dim: Int): Option[DomainSnapshot] =
+    snapshots.computeIfAbsent(dim, d => DomainSnapshot.build(this, DomainSnapshot.cap(d)))
 }
 
 /** Per-domain settings (`SearchdomainController.cs:53-62`, `Searchdomain.cs:345-348`,
@@ -110,7 +131,6 @@ object Tables {
     */
   def readDomain(spark: SparkSession, baseDir: String, domainName: String): Domain = {
     val d = readDomain(spark, baseDir)
-    import org.apache.spark.sql.functions.col
     Domain(
       d.entities.filter(col("searchdomain") === domainName),
       d.datapoints.filter(col("searchdomain") === domainName),

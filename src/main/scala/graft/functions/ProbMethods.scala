@@ -237,6 +237,144 @@ object ProbMethods {
       .otherwise(raise_error(concat(lit("Unknown probmethod: "), m)).cast(DoubleType))
   }
 
+  /** One group's rows, as the scalar forms below read them: rows `from`
+    * until `until` of `x`, where `isNull(i)` marks a null value (counted by
+    * `count(lit(1))`, skipped by every sum, min and max) and `w(i)` is the
+    * row's DictionaryWeightedAverage weight ([[dwaWeightCol]]'s value).
+    */
+  private[graft] final case class Group(
+      x: Array[Double], isNull: Array[Boolean], w: Array[Double], from: Int, until: Int) {
+    def n: Int = until - from
+
+    /** Spark's `sum(f(x))` over the non-null rows: rows where `f` gives
+      * null are skipped too, and no summed row gives null. */
+    def sum(f: Double => java.lang.Double): java.lang.Double = {
+      var acc = 0.0
+      var any = false
+      var i = from
+      while (i < until) {
+        if (!isNull(i)) {
+          val v = f(x(i))
+          if (v != null) { acc += v; any = true }
+        }
+        i += 1
+      }
+      if (any) acc else null
+    }
+
+    /** Spark's `avg(f(x))`, nulls skipped as in [[sum]]. */
+    def avg(f: Double => java.lang.Double): java.lang.Double = {
+      var acc = 0.0
+      var c = 0
+      var i = from
+      while (i < until) {
+        if (!isNull(i)) {
+          val v = f(x(i))
+          if (v != null) { acc += v; c += 1 }
+        }
+        i += 1
+      }
+      if (c == 0) null else acc / c
+    }
+
+    /** Spark's `min(f(x))` (`sign` 1) or `max(f(x))` (`sign` -1) under
+      * Spark's double order: NaN above every number, -0.0 equal to 0.0. */
+    def extreme(sign: Int, f: Double => Double = identity): java.lang.Double = {
+      var best: java.lang.Double = null
+      var i = from
+      while (i < until) {
+        if (!isNull(i)) {
+          val v = f(x(i))
+          if (best == null || sign * Group.compare(v, best) < 0) best = v
+        }
+        i += 1
+      }
+      best
+    }
+  }
+
+  private[graft] object Group {
+    /** Spark's double order (`SQLOrderingUtil.compareDoubles`). */
+    def compare(a: Double, b: Double): Int =
+      if (a == b) 0 else java.lang.Double.compare(a, b)
+
+    /** Spark's double `===`: NaN equals NaN, -0.0 equals 0.0. */
+    def same(a: java.lang.Double, b: Double): Boolean =
+      a != null && ((a.isNaN && b.isNaN) || a == b)
+
+    /** Spark's non-ANSI division: null on a null operand or a zero divisor. */
+    def div(a: java.lang.Double, b: java.lang.Double): java.lang.Double =
+      if (a == null || b == null || b.doubleValue == 0.0) null
+      else a.doubleValue / b.doubleValue
+  }
+
+  /** Scalar twin of [[forMethodCol]]: the value its aggregate gives one
+    * group, by the same arithmetic and with the same SQL nulls (null
+    * result = `null`). The search's driver arm
+    * ([[graft.core.DomainSnapshot]]) scores both levels with it;
+    * ProbMethodsSpec pins it equal to the Column form.
+    */
+  private[graft] def forMethod(method: String, g: Group): java.lang.Double = {
+    import Group.{div, same}
+    val n = g.n.toDouble
+    def boxed(x: Double): java.lang.Double = x
+    method match {
+      case "Mean" =>
+        val a = g.avg(boxed)
+        if (a == null) 0.0 else a
+      case "HarmonicMean" =>
+        var nNz, nzSum = 0.0
+        var i = g.from
+        while (i < g.until) {
+          if (!g.isNull(i) && g.x(i) != 0.0) { nNz += 1.0; nzSum += 1.0 / g.x(i) }
+          i += 1
+        }
+        if (nNz == 0.0) 0.0
+        else {
+          val q = div(nNz, nzSum)
+          if (q == null) null else q * (nNz / n)
+        }
+      case "QuadraticMean" =>
+        if (g.n == 0) Double.NaN
+        else {
+          val s = g.sum(x => x * x)
+          math.sqrt((if (s == null) 0.0 else s.doubleValue) / n)
+        }
+      case "GeometricMean" =>
+        if (g.n == 0) 0.0
+        else if (g.n == 1) { if (g.isNull(g.from)) null else g.x(g.from) }
+        else if (same(g.extreme(1, math.abs), 0.0)) 0.0
+        else if ((g.from until g.until).count(i => !g.isNull(i) && g.x(i) < 0.0) % 2 == 1)
+          Double.NaN
+        else {
+          // Spark's ln: null at or below 0; StrictMath like Spark's Log and Exp
+          val m = g.avg(x => { val a = math.abs(x); if (a <= 0.0) null else StrictMath.log(a) })
+          if (m == null) null else StrictMath.exp(m)
+        }
+      case "EVEWAvg" =>
+        if (same(g.extreme(-1), 1.0)) 1.0
+        else if (same(g.extreme(1), 0.0)) 0.0
+        else div(g.sum(x => div(x, x * (1.0 - x))), g.sum(x => div(1.0, x * (1.0 - x))))
+      case "HVEWAvg" =>
+        if (same(g.extreme(-1), 1.0)) 1.0
+        else div(g.sum(x => div(x, 1.0 - x)), g.sum(x => div(1.0, 1.0 - x)))
+      case "LVEWAvg" =>
+        if (same(g.extreme(1), 0.0)) 0.0
+        else div(n, g.sum(x => div(1.0, x)))
+      case "DictionaryWeightedAverage" =>
+        var num, den = 0.0
+        var any = false
+        var i = g.from
+        while (i < g.until) {
+          if (!g.isNull(i)) { num += g.w(i) * g.x(i); any = true }
+          den += g.w(i)
+          i += 1
+        }
+        div(if (any) num else null, den)
+      case other => throw new IllegalArgumentException(s"Unknown probmethod: $other")
+    }
+  }
+
   /** Minimal JSON object parser for `{"key": number, ...}` weight maps — the
     * only JSON shape the reference accepts here (`Probmethods.cs:161`).
     */

@@ -19,6 +19,12 @@ import org.apache.spark.sql.types._
   * accumulation, Spark's null-on-zero-divisor division, null result for
   * null inputs / mismatched lengths / null elements.
   *
+  * Each kernel's interpreted form is one `private[graft]` scalar function
+  * in its companion (`score`), over `n` non-null elements read as doubles:
+  * `nullSafeEval` calls it, and so does the search's driver arm
+  * ([[graft.core.DomainSnapshot]]), so both arms and the generated loop
+  * run the same arithmetic in the same order.
+  *
   * Reference formulas: `src/Server/SimilarityMethods.cs:55-113`.
   */
 abstract class SimilarityKernel extends BinaryExpression {
@@ -48,7 +54,9 @@ abstract class SimilarityKernel extends BinaryExpression {
   protected def accumulators: Seq[String] // java double accumulator names
   protected def perElement(x: String, y: String): String
   protected def finish(ev: ExprCode, n: String): String
-  protected def computeResult(accs: Array[Double], n: Int): Option[Double]
+
+  /** The companion's scalar form; null for a null result. */
+  protected def scalar(n: Int, x: Int => Double, y: Int => Double): java.lang.Double
 
   private def elemGet(arr: String, et: DataType, i: String): String = et match {
     case FloatType   => s"(double) $arr.getFloat($i)"
@@ -57,35 +65,25 @@ abstract class SimilarityKernel extends BinaryExpression {
     case LongType    => s"(double) $arr.getLong($i)"
   }
 
+  private def elem(arr: ArrayData, et: DataType): Int => Double = et match {
+    case FloatType   => i => arr.getFloat(i).toDouble
+    case DoubleType  => i => arr.getDouble(i)
+    case IntegerType => i => arr.getInt(i).toDouble
+    case LongType    => i => arr.getLong(i).toDouble
+  }
+
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val n = x.numElements()
     if (y.numElements() != n) return null
-    val lt = elemType(left); val rt = elemType(right)
-    val accs = new Array[Double](accumulators.length)
     var i = 0
     while (i < n) {
       if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xv = lt match {
-        case FloatType => x.getFloat(i).toDouble
-        case DoubleType => x.getDouble(i)
-        case IntegerType => x.getInt(i).toDouble
-        case LongType => x.getLong(i).toDouble
-      }
-      val yv = rt match {
-        case FloatType => y.getFloat(i).toDouble
-        case DoubleType => y.getDouble(i)
-        case IntegerType => y.getInt(i).toDouble
-        case LongType => y.getLong(i).toDouble
-      }
-      accumulate(accs, xv, yv)
       i += 1
     }
-    computeResult(accs, n).map(Double.box).orNull
+    scalar(n, elem(x, elemType(left)), elem(y, elemType(right)))
   }
-
-  protected def accumulate(accs: Array[Double], x: Double, y: Double): Unit
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -129,15 +127,24 @@ case class CosineSim01(left: Expression, right: Expression) extends SimilarityKe
     s"""final double _den = java.lang.Math.sqrt(_na) * java.lang.Math.sqrt(_nb);
        |if (_den == 0.0) { ${ev.isNull} = true; }
        |else { ${ev.value} = (_dot / _den + 1.0) / 2.0; }""".stripMargin
-  protected def accumulate(accs: Array[Double], x: Double, y: Double): Unit = {
-    accs(0) += x * y; accs(1) += x * x; accs(2) += y * y
-  }
-  protected def computeResult(accs: Array[Double], n: Int): Option[Double] = {
-    val den = math.sqrt(accs(1)) * math.sqrt(accs(2))
-    if (den == 0.0) None else Some((accs(0) / den + 1.0) / 2.0)
-  }
+  protected def scalar(n: Int, x: Int => Double, y: Int => Double): java.lang.Double =
+    CosineSim01.score(n, x, y)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+object CosineSim01 {
+  private[graft] def score(n: Int, x: Int => Double, y: Int => Double): java.lang.Double = {
+    var dot, na, nb = 0.0
+    var i = 0
+    while (i < n) {
+      val a = x(i); val b = y(i)
+      dot += a * b; na += a * a; nb += b * b
+      i += 1
+    }
+    val den = math.sqrt(na) * math.sqrt(nb)
+    if (den == 0.0) null else (dot / den + 1.0) / 2.0
+  }
 }
 
 /** Squared L2 distance (raw). */
@@ -147,12 +154,19 @@ case class L2Sq(left: Expression, right: Expression) extends SimilarityKernel {
   protected def perElement(x: String, y: String): String =
     s"final double _d = $x - $y; _ss += _d * _d;"
   protected def finish(ev: ExprCode, n: String): String = s"${ev.value} = _ss;"
-  protected def accumulate(accs: Array[Double], x: Double, y: Double): Unit = {
-    val d = x - y; accs(0) += d * d
-  }
-  protected def computeResult(accs: Array[Double], n: Int): Option[Double] = Some(accs(0))
+  protected def scalar(n: Int, x: Int => Double, y: Int => Double): java.lang.Double =
+    L2Sq.score(n, x, y)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+object L2Sq {
+  private[graft] def score(n: Int, x: Int => Double, y: Int => Double): java.lang.Double = {
+    var ss = 0.0
+    var i = 0
+    while (i < n) { val d = x(i) - y(i); ss += d * d; i += 1 }
+    ss
+  }
 }
 
 /** Reference Euclidian (sic): 1/(1 + sqrt(Σ(aᵢ-bᵢ)²)). */
@@ -163,13 +177,15 @@ case class EuclidianSim01(left: Expression, right: Expression) extends Similarit
     s"final double _d = $x - $y; _ss += _d * _d;"
   protected def finish(ev: ExprCode, n: String): String =
     s"${ev.value} = 1.0 / (1.0 + java.lang.Math.sqrt(_ss));"
-  protected def accumulate(accs: Array[Double], x: Double, y: Double): Unit = {
-    val d = x - y; accs(0) += d * d
-  }
-  protected def computeResult(accs: Array[Double], n: Int): Option[Double] =
-    Some(1.0 / (1.0 + math.sqrt(accs(0))))
+  protected def scalar(n: Int, x: Int => Double, y: Int => Double): java.lang.Double =
+    EuclidianSim01.score(n, x, y)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+object EuclidianSim01 {
+  private[graft] def score(n: Int, x: Int => Double, y: Int => Double): java.lang.Double =
+    1.0 / (1.0 + math.sqrt(L2Sq.score(n, x, y)))
 }
 
 /** Reference Manhattan: 1/(1 + Σ|aᵢ-bᵢ|). */
@@ -180,12 +196,19 @@ case class ManhattanSim01(left: Expression, right: Expression) extends Similarit
     s"_sa += java.lang.Math.abs($x - $y);"
   protected def finish(ev: ExprCode, n: String): String =
     s"${ev.value} = 1.0 / (1.0 + _sa);"
-  protected def accumulate(accs: Array[Double], x: Double, y: Double): Unit =
-    accs(0) += math.abs(x - y)
-  protected def computeResult(accs: Array[Double], n: Int): Option[Double] =
-    Some(1.0 / (1.0 + accs(0)))
+  protected def scalar(n: Int, x: Int => Double, y: Int => Double): java.lang.Double =
+    ManhattanSim01.score(n, x, y)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+object ManhattanSim01 {
+  private[graft] def score(n: Int, x: Int => Double, y: Int => Double): java.lang.Double = {
+    var sa = 0.0
+    var i = 0
+    while (i < n) { sa += math.abs(x(i) - y(i)); i += 1 }
+    1.0 / (1.0 + sa)
+  }
 }
 
 /** Reference Pearson: textbook correlation, range [-1,1] (NOT remapped);
@@ -203,17 +226,26 @@ case class PearsonSim(left: Expression, right: Expression) extends SimilarityKer
        |  final double _den = java.lang.Math.sqrt((_q1 - _s1 * _s1 / _nd) * (_q2 - _s2 * _s2 / _nd));
        |  ${ev.value} = (_den == 0.0) ? 0.0 : (_p - _s1 * _s2 / _nd) / _den;
        |}""".stripMargin
-  protected def accumulate(accs: Array[Double], x: Double, y: Double): Unit = {
-    accs(0) += x; accs(1) += y; accs(2) += x * x; accs(3) += y * y; accs(4) += x * y
-  }
-  protected def computeResult(accs: Array[Double], n: Int): Option[Double] = {
-    if (n == 0) None
-    else {
-      val nd = n.toDouble
-      val den = math.sqrt((accs(2) - accs(0) * accs(0) / nd) * (accs(3) - accs(1) * accs(1) / nd))
-      Some(if (den == 0.0) 0.0 else (accs(4) - accs(0) * accs(1) / nd) / den)
-    }
-  }
+  protected def scalar(n: Int, x: Int => Double, y: Int => Double): java.lang.Double =
+    PearsonSim.score(n, x, y)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+object PearsonSim {
+  private[graft] def score(n: Int, x: Int => Double, y: Int => Double): java.lang.Double = {
+    var s1, s2, q1, q2, p = 0.0
+    var i = 0
+    while (i < n) {
+      val a = x(i); val b = y(i)
+      s1 += a; s2 += b; q1 += a * a; q2 += b * b; p += a * b
+      i += 1
+    }
+    if (n == 0) null
+    else {
+      val nd = n.toDouble
+      val den = math.sqrt((q1 - s1 * s1 / nd) * (q2 - s2 * s2 / nd))
+      if (den == 0.0) 0.0 else (p - s1 * s2 / nd) / den
+    }
+  }
 }

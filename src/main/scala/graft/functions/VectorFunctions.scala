@@ -122,4 +122,17 @@ object VectorFunctions {
       .when(method === "Manhattan", manhattan01(a, b))
       .when(method === "Pearson", pearson(a, b))
       .otherwise(raise_error(concat(lit("Unknown similarity method: "), method)).cast("double"))
+
+  /** Scalar twin of [[similarityCol]] for the search's driver arm: the
+    * kernel's `score` over (n, x, y), null for a null result. Throws on an
+    * unknown method, as the Column form's `raise_error` does.
+    */
+  private[graft] def similarityScalar(method: String)
+      : (Int, Int => Double, Int => Double) => java.lang.Double = method match {
+    case "Cosine"    => CosineSim01.score
+    case "Euclidian" => EuclidianSim01.score
+    case "Manhattan" => ManhattanSim01.score
+    case "Pearson"   => PearsonSim.score
+    case other => throw new IllegalArgumentException(s"Unknown similarity method: $other")
+  }
 }

@@ -1,7 +1,8 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 import graft.api.EngineApi
 import graft.core.{Domain, DomainSchemas, DomainSettings, StubEmbedder}
@@ -15,13 +16,30 @@ import graft.functions.{ProbMethods, TextFunctions, VectorFunctions}
   * DATAPOINT), per-entity aggregation across datapoints (level 2, method
   * chosen by the ENTITY), global sort desc, top-N.
   *
-  * Spark mapping: broadcast the (model, query_vec) rows (M rows — always
-  * tiny), BroadcastHashJoin against the embeddings table, two data-driven
-  * HashAggregates, then `orderBy(desc).limit(n)` which Spark plans as
-  * TakeOrderedAndProject (no global sort shuffle). The only wide exchange is
-  * the level-1 groupBy keyed by (entity_id, datapoint name); level 2 groups
-  * by a prefix of the same key, so with partial aggregation the second
-  * shuffle moves one row per (entity, datapoint) — negligible.
+  * The serving path ([[serveQuery]], behind [[graft.api.EngineApi.query]])
+  * has two arms and one gate, a fixed size cap:
+  *
+  *   - Driver arm, at or below [[graft.core.DomainSnapshot.cap]] scored
+  *     embeddings (16M floats / dim, about 64 MB of vectors): scores from
+  *     the domain's columnar [[graft.core.DomainSnapshot]], built by one
+  *     collect the first time a `Domain` instance (a version) is searched
+  *     and held by that instance. A later search embeds the query on the
+  *     driver and runs no Spark job. It scores with the kernels' scalar
+  *     forms (`SimilarityExprs.scala`) and [[ProbMethods.forMethod]], the
+  *     arithmetic of the Column forms below, as the reference scores in
+  *     process over its in-memory domain (`Searchdomain.cs:23`).
+  *   - Distributed arm, above the cap: [[searchWithDomain]]. Broadcast the
+  *     (model, query_vec) rows (M rows — always tiny), BroadcastHashJoin
+  *     against the embeddings table, two data-driven HashAggregates, then
+  *     `orderBy(desc).limit(n)` which Spark plans as TakeOrderedAndProject
+  *     (no global sort shuffle). The only wide exchange is the level-1
+  *     groupBy keyed by (entity_id, datapoint name); level 2 groups by a
+  *     prefix of the same key, so with partial aggregation the second
+  *     shuffle moves one row per (entity, datapoint) — negligible.
+  *
+  * Both arms rank `score desc, name asc` and are value-equal
+  * (SearchEngineSpec). Registry entries and benches that call [[search]]
+  * directly always take the distributed arm.
   */
 object SearchEngine {
 
@@ -88,7 +106,8 @@ object SearchEngine {
     * [[graft.core.HttpEmbedder]] flow through the identical batched
     * mapPartitions source (HttpEmbedderSpec pins value-identical domains).
     * `parallelPrefetch` is the `ParallelEmbeddingsPrefetch` placement
-    * toggle (`SearchdomainHelper.cs:61-93`).
+    * toggle (`SearchdomainHelper.cs:61-93`). A corpus holds one row per
+    * `doc_id`, so the upsert skips its last-row-per-key cut.
     */
   def buildDomain(
       spark: SparkSession,
@@ -98,9 +117,9 @@ object SearchEngine {
       domainName: String,
       embedder: graft.core.Embedder,
       parallelPrefetch: Boolean): Domain =
-    EngineApi.upsertEntities(spark, DomainSchemas.emptyDomain(spark),
+    EngineApi.upsert(spark, DomainSchemas.emptyDomain(spark),
       docEntities(docs, domainName), docDatapoints(docs, domainName), models, embedder,
-      DomainSettings(parallelEmbeddingsPrefetch = parallelPrefetch))
+      DomainSettings(parallelEmbeddingsPrefetch = parallelPrefetch), keysDistinct = true)
 
   /** Embed a query string under every model in use (U1 distinct models —
     * `Searchdomain.cs:260-282`) and return the broadcastable
@@ -111,19 +130,38 @@ object SearchEngine {
 
   /** [[queryEmbeddings]] through any [[graft.core.Embedder]]: the SAME
     * provider that indexed the domain embeds the query string. The
-    * models-in-use list (U1) is tiny and bounded, so the provider call is
-    * one driver-side round-trip per model — exactly the reference server's
-    * query-time shape — and the resulting (model, query_vec) frame is the
-    * broadcast side of the scoring join, never a per-row UDF.
+    * models-in-use list (U1, `Domain.models`, collected once per domain
+    * version) is tiny and bounded, so the provider call is one driver-side
+    * round-trip per model — exactly the reference server's query-time
+    * shape — and the resulting (model, query_vec) frame is the broadcast
+    * side of the scoring join, never a per-row UDF.
     */
   def queryEmbeddings(spark: SparkSession, domain: Domain, query: String,
       embedder: graft.core.Embedder): DataFrame = {
     import spark.implicits._
-    val models = domain.embeddings.select(col("model")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    models.map(m => (m, embedder.embed(m, query).toSeq))
+    domain.models.map(m => (m, embedder.embed(m, query).toSeq))
       .toDF("model", "query_vec")
   }
+
+  /** The serving search: the top-N (searchdomain, name, score) of
+    * `queryText`, embedded through `embedder`, from the driver arm when
+    * the domain has a snapshot for `embedder.dim` and from
+    * [[searchWithDomain]] otherwise (see the object doc). The driver arm
+    * answers with a local frame.
+    */
+  def serveQuery(spark: SparkSession, domain: Domain, queryText: String, topN: Int,
+      embedder: graft.core.Embedder): DataFrame =
+    domain.snapshot(embedder.dim) match {
+      case Some(snap) =>
+        val rows = snap.top(snap.models.map(embedder.embed(_, queryText)), topN)
+          .map { case (sd, name, score) => Row(sd, name, score) }
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), ServedSchema)
+      case None =>
+        searchWithDomain(domain, queryEmbeddings(spark, domain, queryText, embedder), topN)
+    }
+
+  private val ServedSchema = StructType(Seq(StructField("searchdomain", StringType),
+    StructField("name", StringType), StructField("score", DoubleType)))
 
   /** The search pipeline. `qEmb` has (model, query_vec) — always broadcast.
     * Returns (searchdomain, name, score) top-N descending; [[search]] is

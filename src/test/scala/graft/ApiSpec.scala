@@ -152,6 +152,30 @@ class ApiSpec extends SparkSpec {
       .select("probmethod").as[String].collect().forall(_ == "Mean"))
   }
 
+  test("upsert of a batch naming one entity twice stores its last occurrence once") {
+    import spark.implicits._
+    // doc 3 twice: first edited, then as stored; doc 9 twice, both new
+    val batch = Seq((3L, "an edit that a later row overrides", "en", "web"),
+      (9L, "first text of a new doc", "en", "web"),
+      (3L, "broadcast joins avoid the shuffle entirely", "en", "news"),
+      (9L, "second text of a new doc, longer than its eight token title", "en", "web"))
+      .toDF("doc_id", "text", "lang", "source")
+    domain.embeddings.count() // the counter sees only this upsert's embeds
+    val acc = graft.core.StubEmbedder.installCounter(spark)
+    val merged = EngineApi.upsertEntities(spark, domain,
+      SearchEngine.docEntities(batch), SearchEngine.docDatapoints(batch), models, dim)
+    val vecs = merged.embeddings.select("datapoint_id", "embedding").as[(Long, Seq[Float])]
+      .collect().toMap
+    assert(acc.value == 2L, "only doc 9's last title and body embed")
+    assert(merged.entities.count() == 4 && merged.datapoints.count() == 8 && vecs.size == 8)
+    assert(merged.entities.filter(col("entity_id") === 3)
+      .select(col("attributes")("source")).as[String].collect().toSeq == Seq("news"))
+    // doc 3's last row is its stored text: its vectors are kept
+    assert(vecs(7L) == vecOf(domain, 7L))
+    assert(vecs(19L) == new graft.core.StubEmbedder(dim).embed(models.head,
+      "second text of a new doc, longer than its eight token title").toSeq)
+  }
+
   test("deleteEntity cascades across all three tables") {
     val after = EngineApi.deleteEntity(domain, "docs", "doc_2")
     assert(after.entities.count() == 2)
@@ -251,18 +275,30 @@ class ApiSpec extends SparkSpec {
       .toDF("query", "rank", "name", "score")
     def pairs(rs: Array[org.apache.spark.sql.Row]) =
       rs.toSeq.map(r => (r.getAs[String]("name"), r.getAs[Double]("score")))
-    def cached(q: String, cache: org.apache.spark.sql.DataFrame) = jobsDuring {
-      val (res, next) = EngineApi.queryCached(spark, domain, cache, q, 2, dim)
-      (pairs(res.collect()), next)
-    }
+    def cached(q: String, cache: org.apache.spark.sql.DataFrame, d: graft.core.Domain = domain) =
+      jobsDuring {
+        val (res, next) = EngineApi.queryCached(spark, d, cache, q, 2, dim)
+        (pairs(res.collect()), next)
+      }
 
-    // two misses: the cache becomes a union of two local frames
+    // two misses on a new Domain instance: the first builds its snapshot
+    // (jobs), the second scores from it (none); the cache becomes a union
+    // of two local frames
+    val fresh = domain.copy()
+    val ((m1, c1), firstJobs) = cached("spark shuffle", empty, fresh)
+    val ((m2, c2), missJobs) = cached("cats sleep", c1, fresh)
+    assert(firstJobs > 0, "the first search of a Domain instance ran no job")
+    assert(missJobs == 0, "a miss scored from the snapshot ran a Spark job")
     val searched = Seq("spark shuffle", "cats sleep").map(q =>
       q -> pairs(EngineApi.query(spark, domain, q, 2, dim).collect())).toMap
-    val ((m1, c1), missJobs) = cached("spark shuffle", empty)
-    val ((m2, c2), _) = cached("cats sleep", c1)
-    assert(missJobs > 0, "the listener saw no job of a miss")
     assert(m1 == searched("spark shuffle") && m2 == searched("cats sleep"))
+    // with the cap forced to 0 the miss runs the distributed plan: jobs,
+    // and the same rows
+    val ((capped, _), cappedJobs) = graft.core.DomainSnapshot.withCap(0)(
+      cached("cats sleep", empty, domain.copy()))
+    assert(cappedJobs > 0, "the distributed arm ran no job")
+    assert(capped.map(_._1) == m2.map(_._1) &&
+      capped.zip(m2).forall { case ((_, a), (_, b)) => approx(a, b, 1e-12) })
     Seq("spark shuffle", "cats sleep").foreach { q =>
       val stored = c2.filter(col("query") === q).orderBy("rank")
         .select("rank", "name", "score").as[(Long, String, Double)].collect().toSeq

@@ -49,7 +49,8 @@ class HttpEmbedderSpec extends SparkSpec {
         }
       }
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    server.setExecutor(pool)
     server.createContext("/api/embed", handler("ollama") { (vecs, m) =>
       val root = m.createObjectNode()
       val arr = root.putArray("embeddings")
@@ -66,7 +67,11 @@ class HttpEmbedderSpec extends SparkSpec {
     })
     server.start()
     try f(s"http://127.0.0.1:${server.getAddress.getPort}")
-    finally server.stop(0)
+    finally {
+      server.stop(0)
+      // stop(0) leaves the executor's threads running
+      pool.shutdownNow()
+    }
   }
 
   test("ollama wire shape: HTTP vectors == stub vectors, batched POST") {

@@ -147,6 +147,41 @@ class ProbMethodsSpec extends SparkSpec {
     }
   }
 
+  test("forMethod (scalar) == forMethodCol over random groups with 0, 1, negatives and nulls") {
+    val rnd = new scala.util.Random(23)
+    def value(): Option[Double] = rnd.nextInt(7) match {
+      case 0 => None
+      case 1 => Some(0.0)
+      case 2 => Some(1.0)
+      case 3 => Some(-rnd.nextDouble())
+      case _ => Some(rnd.nextDouble())
+    }
+    def weight(): Double = if (rnd.nextInt(12) == 0) 0.0 else 0.25 + 2 * rnd.nextDouble()
+    val groups = for (m <- PM.Names; g <- 0 until 60)
+      yield (s"$m#$g", m, Seq.fill(1 + rnd.nextInt(6))((value(), weight())))
+    val rows = for ((id, m, xs) <- groups; (x, w) <- xs) yield (id, m, x, w)
+    // count(lit(1)) in the Column forms counts the null rows too
+    val byColumn = rows.toDF("id", "m", "x", "w").groupBy("id", "m")
+      .agg(PM.forMethodCol(col("m"), col("x"), col("w")).as("r"))
+      .collect().map(r => r.getString(0) -> Option(r.get(2)).map(_.asInstanceOf[Double]))
+      .toMap
+    val scalar = groups.map { case (id, m, xs) =>
+      id -> Option(PM.forMethod(m, PM.Group(xs.map(_._1.getOrElse(0.0)).toArray,
+        xs.map(_._1.isEmpty).toArray, xs.map(_._2).toArray, 0, xs.size))).map(_.doubleValue)
+    }.toMap
+    assert(byColumn.keySet == scalar.keySet)
+    scalar.foreach { case (id, want) =>
+      val got = byColumn(id)
+      assert(got.isDefined == want.isDefined && got.forall(g => approx(g, want.get, 1e-12)),
+        s"$id: Column $got, scalar $want")
+    }
+    // the draw reaches the null, NaN and zero-guard results
+    assert(scalar.values.exists(_.isEmpty) && scalar.values.exists(_.exists(_.isNaN)))
+    assert(scalar.values.count(_.contains(0.0)) > 10)
+    intercept[IllegalArgumentException](PM.forMethod("Nope",
+      PM.Group(Array(0.5), Array(false), Array(1.0), 0, 1)))
+  }
+
   test("GeometricMeanAgg is bit-faithful to the reference float product") {
     // reference: running float product, then Math.Pow(product, 1f/n)
     def ref(xs: Seq[Float]): Float = {

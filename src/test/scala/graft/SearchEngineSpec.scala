@@ -70,6 +70,104 @@ class SearchEngineSpec extends SparkSpec {
     assert(domain.embeddings.select("datapoint_id", "model").distinct().count() == 20)
   }
 
+  test("driver arm == distributed arm: every method, DWA specs, nulls, NaN, ties, two domains") {
+    import graft.core.{Domain, DomainSchemas, DomainSnapshot}
+    import org.apache.spark.sql.Row
+    val q = "two arms one gate"
+    val qv = models.map(m => m -> embedder.embed(m, q)).toMap
+    val rnd = new scala.util.Random(5)
+    val entMethods = graft.functions.ProbMethods.Names.init :+
+      """DictionaryWeightedAverage:{"title": 3.0, "body": 0.5}"""
+    val dpMethods = graft.functions.ProbMethods.Names.init :+
+      """DictionaryWeightedAverage:{"stub:alpha": 2.5}"""
+    val sims = Seq("Cosine", "Euclidian", "Manhattan", "Pearson")
+    // (entity name, entity method, datapoints: (name, method, similarity, model -> vector))
+    type Dp = (String, String, String, Map[String, Array[Float]])
+    def vector(kind: Int, m: String): Array[Float] = kind match {
+      case 0 => qv(m).clone() // Euclidian/Manhattan sim exactly 1
+      case 1 => qv(m).map(-_) // Pearson -1
+      case 2 => Array.fill(dim)(0.25f) // Pearson exactly 0
+      case 3 => null
+      case _ => Array.fill(dim)(rnd.nextGaussian().toFloat)
+    }
+    val random: Seq[(String, String, Seq[Dp])] = (0 until 32).map { e =>
+      (f"ent_$e%02d", entMethods(e % 8), Seq("title", "body", "extra").zipWithIndex.map {
+        case (dn, k) => (dn, dpMethods((e / 8 + 3 * k + e) % 8), sims((e + k) % 4),
+          models.zipWithIndex.map { case (m, mi) =>
+            m -> vector(if (rnd.nextInt(3) == 0) (e + k + mi) % 4 else 4, m) }.toMap)
+      })
+    }
+    // GeometricMean over one positive and one negative Pearson sim -> NaN
+    val nan = ("geo_nan", "Mean", Seq[Dp](("title", "GeometricMean", "Pearson",
+      Map("stub:alpha" -> qv("stub:alpha"), "stub:beta" -> qv("stub:beta").map(-_)))))
+    val ties = Seq("tie_a", "tie_b").map(n => (n, random(3)._2, random(3)._3))
+    val ents = random ++ Seq(nan) ++ ties
+
+    def domainOf(sds: Seq[String], es: Seq[(String, String, Seq[Dp])]): Domain = {
+      val rows = for (sd <- sds; ((name, em, dps), e) <- es.zipWithIndex) yield (sd, e.toLong, name, em, dps)
+      def frame(rs: Seq[Row], schema: org.apache.spark.sql.types.StructType) =
+        spark.createDataFrame(java.util.Arrays.asList(rs: _*), schema)
+      Domain(
+        frame(rows.map { case (sd, e, name, em, _) => Row(sd, e, name, em, Map("k" -> name)) },
+          DomainSchemas.entities),
+        frame(for ((sd, e, _, _, dps) <- rows; ((dn, dm, sm, _), k) <- dps.zipWithIndex)
+          yield Row(sd, e, e * 10 + k, dn, dm, sm, "h"), DomainSchemas.datapoints),
+        frame(for ((sd, e, _, _, dps) <- rows; ((_, _, _, vs), k) <- dps.zipWithIndex;
+            (m, v) <- vs.toSeq) yield Row(sd, e, e * 10 + k, m, Option(v).map(_.toSeq).orNull),
+          DomainSchemas.embeddings))
+    }
+    type Hit = (String, String, Option[Double])
+    def serve(d: Domain, topN: Int): Seq[Hit] =
+      SearchEngine.serveQuery(spark, d, q, topN, embedder).collect().toSeq.map(r =>
+        (r.getString(0), r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Double])))
+    def distributed(d: => Domain, topN: Int): Seq[Hit] =
+      DomainSnapshot.withCap(0)(serve(d, topN))
+    def close(a: Option[Double], b: Option[Double]) =
+      a.isDefined == b.isDefined && a.forall(x => approx(x, b.get, 1e-12))
+    // equal scores in order; names in order except within a 1e-12 tie
+    def sameRanking(got: Seq[Hit], want: Seq[Hit]): Unit = {
+      assert(got.size == want.size)
+      assert(got.zip(want).forall { case (g, w) => close(g._3, w._3) }, s"$got\n$want")
+      def blocks(hs: Seq[Hit]) = hs.foldLeft(List.empty[List[Hit]]) {
+        case (b :: bs, h) if close(b.head._3, h._3) => (h :: b) :: bs
+        case (bs, h) => List(h) :: bs
+      }.map(_.map(h => (h._1, h._2)).sorted)
+      assert(blocks(got) == blocks(want))
+    }
+
+    val two = () => domainOf(Seq("A", "B"), ents)
+    val d = two()
+    val (driver, _) = jobsDuring(serve(d, 1000))
+    assert(d.snapshot(embedder.dim).exists(_.rows > 0), "the driver arm did not run")
+    val (again, warmJobs) = jobsDuring(serve(d, 1000))
+    assert(warmJobs == 0, "a search from the built snapshot ran a Spark job")
+    sameRanking(again, driver)
+    sameRanking(driver, distributed(two(), 1000))
+    assert(driver.size == 2 * ents.size)
+    assert(driver.exists(h => h._2 == "geo_nan" && h._3.exists(_.isNaN)))
+    assert(driver.head._3.exists(_.isNaN), "NaN ranks first under score desc")
+    assert(driver.filter(h => h._1 == "A" && h._2.startsWith("tie_")).map(_._3).distinct.size == 1)
+    assert(ents.exists(_._3.exists(_._4.values.exists(_ == null))), "no null embedding")
+    sameRanking(serve(two(), 7), distributed(two(), 7))
+
+    // one searchdomain whose ids and names the other reuses, with other vectors
+    val (a, b) = (domainOf(Seq("A"), ents), domainOf(Seq("B"), ents.reverse))
+    val other = Domain(a.entities.unionByName(b.entities),
+      a.datapoints.unionByName(b.datapoints), a.embeddings.unionByName(b.embeddings))
+    sameRanking(serve(other, 1000), distributed(other.copy(), 1000))
+
+    val empty = DomainSchemas.emptyDomain(spark)
+    assert(serve(empty, 10).isEmpty && distributed(DomainSchemas.emptyDomain(spark), 10).isEmpty)
+
+    for (bad <- Seq(
+        domainOf(Seq("A"), ents.take(2) :+ ("bad", "Median", ents.head._3)),
+        domainOf(Seq("A"), ents.take(2) :+ ("bad", "Mean",
+          Seq[Dp](("title", "Mean", "Jaccard", Map("stub:alpha" -> qv("stub:alpha")))))))) {
+      intercept[Exception](serve(bad.copy(), 10))
+      intercept[Exception](distributed(bad.copy(), 10))
+    }
+  }
+
   test("topKJoin matches brute-force per-query ranking") {
     val e = (0L to 19L).map { i =>
       (i, (0 until 8).map(j => math.sin(i * 31 + j * 7).toFloat))

@@ -106,4 +106,26 @@ class VectorFunctionsSpec extends SparkSpec {
     assert(e(0).isNullAt(0) && e(0).isNullAt(1))
     assert(e(1).isNullAt(0) && e(1).isNullAt(1))
   }
+
+  test("interpreted kernels (each companion's scalar score) are bit-identical to codegen") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    import graft.functions._
+    val rnd = new scala.util.Random(13)
+    val rows = (1 to 20).map(_ => (Seq.fill(17)(rnd.nextFloat() * 2 - 1), Seq.fill(17)(rnd.nextFloat() * 2 - 1))) ++
+      Seq((Seq(0f, 0f), Seq(1f, 2f)), (Seq(1f, 2f), Seq(1f)), (Seq(0.5f, 0.5f), Seq(0.5f, 0.5f)))
+    val kernels: Seq[(Expression, Expression) => Expression] = Seq(
+      CosineSim01(_, _), EuclidianSim01(_, _), ManhattanSim01(_, _), PearsonSim(_, _), L2Sq(_, _))
+    val generated = rows.toDF("a", "b").select(
+      VF.cosine01(col("a"), col("b")), VF.euclidian01(col("a"), col("b")),
+      VF.manhattan01(col("a"), col("b")), VF.pearson(col("a"), col("b")),
+      VF.l2sq(col("a"), col("b"))).collect()
+    def lit32(v: Seq[Float]) = Literal.create(v.toArray, ArrayType(FloatType, containsNull = false))
+    rows.zip(generated).foreach { case ((a, b), g) =>
+      kernels.zipWithIndex.foreach { case (k, i) =>
+        val interpreted = k(lit32(a), lit32(b)).eval()
+        assert(interpreted == (if (g.isNullAt(i)) null else g.getDouble(i)), s"kernel $i on $a, $b")
+      }
+    }
+  }
 }

@@ -2,9 +2,10 @@
 """Local replica of the driver's correctness gate: load each Verify output
 parquet, run the registered oracle SQL in DuckDB against the same testdata
 tables, and compare rows/schema/values (exact after the queries' own
-rounding). Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+rounding), printing each oracle's elapsed seconds on its PASS/FAIL
+line. Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 """
-import json, math, sys
+import json, math, sys, time
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -63,6 +64,40 @@ def lint(sf_dir, out_dir):
           f"of {len(oracle)} oracles")
     return 1 if n_fail else 0
 
+def check_one(con, name, sql, out_dir):
+    """(passed, detail) for one oracle against its Verify output."""
+    try:
+        got = con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
+        got_cols = sorted(got.columns)
+        got_rows = sorted(
+            (tuple(norm(v) for v in row)
+             for row in con.sql(
+                f"SELECT {', '.join(got_cols)} FROM '{out_dir}/{name}/*.parquet'").fetchall()),
+            key=row_key)
+    except Exception as e:
+        return False, f"spark output unreadable: {e}"
+    try:
+        exp = con.sql(sql)
+        bad_types = oracle_type_problems(exp)
+        exp_cols = sorted(exp.columns)
+        exp_df = con.sql(f"SELECT {', '.join(exp_cols)} FROM ({sql})")
+        exp_rows = sorted(
+            (tuple(norm(v) for v in row) for row in exp_df.fetchall()),
+            key=row_key)
+    except Exception as e:
+        return False, f"oracle sql error: {str(e)[:300]}"
+    if bad_types:
+        return False, (f"oracle result type drift "
+                       f"(driver hash will mismatch): {bad_types}")
+    if got_cols != exp_cols:
+        return False, f"columns {got_cols} vs {exp_cols}"
+    if len(got_rows) != len(exp_rows):
+        return False, f"rows {len(got_rows)} vs {len(exp_rows)}"
+    if got_rows != exp_rows:
+        bad = [(g, e) for g, e in zip(got_rows, exp_rows) if g != e][:3]
+        return False, f"value mismatch, first diffs: {bad}"
+    return True, f"({len(got_rows)} rows)"
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
@@ -76,47 +111,16 @@ def main(sf_dir, out_dir):
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         sql = sql.replace("/verify_fixtures/sf0.01/", f"/verify_fixtures/{sf_base}/")
-        try:
-            got = con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
-            got_cols = sorted(got.columns)
-            got_rows = sorted(
-                (tuple(norm(v) for v in row)
-                 for row in con.sql(
-                    f"SELECT {', '.join(got_cols)} FROM '{out_dir}/{name}/*.parquet'").fetchall()),
-                key=row_key)
-        except Exception as e:
-            print(f"FAIL {name}: spark output unreadable: {e}")
-            n_fail += 1
-            continue
-        try:
-            exp = con.sql(sql)
-            bad_types = oracle_type_problems(exp)
-            exp_cols = sorted(exp.columns)
-            exp_df = con.sql(f"SELECT {', '.join(exp_cols)} FROM ({sql})")
-            exp_rows = sorted(
-                (tuple(norm(v) for v in row) for row in exp_df.fetchall()),
-                key=row_key)
-        except Exception as e:
-            print(f"FAIL {name}: oracle sql error: {str(e)[:300]}")
-            n_fail += 1
-            continue
-        if bad_types:
-            print(f"FAIL {name}: oracle result type drift "
-                  f"(driver hash will mismatch): {bad_types}")
-            n_fail += 1
-        elif got_cols != exp_cols:
-            print(f"FAIL {name}: columns {got_cols} vs {exp_cols}")
-            n_fail += 1
-        elif len(got_rows) != len(exp_rows):
-            print(f"FAIL {name}: rows {len(got_rows)} vs {len(exp_rows)}")
-            n_fail += 1
-        elif got_rows != exp_rows:
-            bad = [(g, e) for g, e in zip(got_rows, exp_rows) if g != e][:3]
-            print(f"FAIL {name}: value mismatch, first diffs: {bad}")
-            n_fail += 1
-        else:
-            print(f"PASS {name} ({len(got_rows)} rows)")
+        t0 = time.perf_counter()
+        ok, detail = check_one(con, name, sql, out_dir)
+        # each oracle's own time, so a slow one shows in the log
+        secs = time.perf_counter() - t0
+        if ok:
+            print(f"PASS {name} {detail} {secs:.2f}s", flush=True)
             n_pass += 1
+        else:
+            print(f"FAIL {name} {secs:.2f}s: {detail}", flush=True)
+            n_fail += 1
     print(f"\n{n_pass} pass / {n_fail} fail")
     return 1 if n_fail else 0
 
