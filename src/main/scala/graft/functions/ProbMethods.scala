@@ -246,24 +246,19 @@ object ProbMethods {
       x: Array[Double], isNull: Array[Boolean], w: Array[Double], from: Int, until: Int) {
     def n: Int = until - from
 
-    /** Spark's `sum(f(x))` over the non-null rows: rows where `f` gives
-      * null are skipped too, and no summed row gives null. */
+    /** Spark's `sum(f(x))` and `avg(f(x))` over the non-null rows: rows
+      * where `f` gives null are skipped too; null when no row is left. */
     def sum(f: Double => java.lang.Double): java.lang.Double = {
-      var acc = 0.0
-      var any = false
-      var i = from
-      while (i < until) {
-        if (!isNull(i)) {
-          val v = f(x(i))
-          if (v != null) { acc += v; any = true }
-        }
-        i += 1
-      }
-      if (any) acc else null
+      val (acc, c) = fold(f)
+      if (c == 0) null else acc
     }
 
-    /** Spark's `avg(f(x))`, nulls skipped as in [[sum]]. */
     def avg(f: Double => java.lang.Double): java.lang.Double = {
+      val (acc, c) = fold(f)
+      if (c == 0) null else acc / c
+    }
+
+    private def fold(f: Double => java.lang.Double): (Double, Int) = {
       var acc = 0.0
       var c = 0
       var i = from
@@ -274,7 +269,7 @@ object ProbMethods {
         }
         i += 1
       }
-      if (c == 0) null else acc / c
+      (acc, c)
     }
 
     /** Spark's `min(f(x))` (`sign` 1) or `max(f(x))` (`sign` -1) under
