@@ -176,6 +176,22 @@ class ApiSpec extends SparkSpec {
       "second text of a new doc, longer than its eight token title").toSeq)
   }
 
+  test("lastPerKey: the driver cut and the window cut keep the same rows") {
+    import spark.implicits._
+    val batch = Seq((Some("a"), 1L, "x1"), (Some("a"), 2L, "y"), (Some("a"), 1L, "x2"),
+      (None, 1L, "n1"), (None, 1L, "n2"), (Some("b"), 1L, "z"))
+      .toDF("searchdomain", "entity_id", "text")
+    val key = Seq("searchdomain", "entity_id")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val local = EngineApi.lastPerKey(batch, key)
+    assert(local.isLocal, "a request-sized batch is cut on the driver")
+    assert(rows(local) == Set(Seq("a", 2L, "y"), Seq("a", 1L, "x2"),
+      Seq(null, 1L, "n2"), Seq("b", 1L, "z")))
+    val windowed = EngineApi.lastPerKey(batch, key, localRows = 5)
+    assert(!windowed.isLocal, "a batch above the row cap is cut by the window")
+    assert(rows(windowed) == rows(local))
+  }
+
   test("deleteEntity cascades across all three tables") {
     val after = EngineApi.deleteEntity(domain, "docs", "doc_2")
     assert(after.entities.count() == 2)
