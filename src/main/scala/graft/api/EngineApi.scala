@@ -19,7 +19,9 @@ import graft.search.SearchEngine
   * columnar [[graft.core.DomainSnapshot]] when they hold at most 16M
   * vector floats (about 64 MB; `DomainSnapshot.FloatBudget`), and that
   * instance holds it until it is itself unreachable. A larger domain is
-  * never collected: it is searched by the distributed plan.
+  * never collected: it is searched by the distributed plan. Both capped
+  * collects go through [[graft.ops.Arms.gate]], the one bounded collect of
+  * every driver arm, and `Arms.forcing` is their one override.
   *
   * | reference endpoint                           | here                 |
   * |----------------------------------------------|----------------------|
@@ -272,8 +274,10 @@ object EngineApi {
     * entity and datapoint once, so the last-row-per-key cut
     * ([[lastPerKey]]) is skipped: it collects a batch of up to
     * [[LocalBatchRows]] rows to the driver, and costs a shuffle in every
-    * table write above that (measured +25% on a 5,000-document first
-    * index).
+    * table write above that. A first index written to parquet took +30%
+    * with the cut at 5,000 documents (10,000 datapoint rows, driver cut;
+    * median 1.15 → 1.49 s) and +41% at 10,000 (20,000 rows, window cut;
+    * 1.58 → 2.22 s): 8 alternating reps each in one `local[4]` JVM, 4-core VM.
     */
   private[graft] def upsert(
       spark: SparkSession,
@@ -350,29 +354,29 @@ object EngineApi {
     * order, so a batch with repeated keys must have a stable one (a local
     * or file-read batch does).
     *
-    * A batch of at most `localRows` rows is collected once (one small job)
-    * and cut on the driver into a local frame, so the upsert's table
-    * writes read it as local rows rather than each re-running a window
-    * shuffle over it (a 200-document commit with three deletes took
-    * 6.7–7.0 s with the window and 5.0–5.7 s with the driver cut, on a
-    * 4-core VM). A larger batch is cut by the window, never collected.
+    * The `lastPerKey` gate of [[graft.ops.Arms.gate]]: a batch of at most
+    * [[LocalBatchRows]] rows is collected once (one small job) and cut on
+    * the driver into a local frame, so the upsert's table writes read it
+    * as local rows rather than each re-running a window shuffle over it (a
+    * 200-document commit with three deletes took 6.7–7.0 s with the window
+    * and 5.0–5.7 s with the driver cut, on a 4-core VM). A larger batch,
+    * or any batch under `Arms.forcing("lastPerKey")`, is cut by the
+    * window, never collected.
     */
-  private[graft] def lastPerKey(df: DataFrame, key: Seq[String],
-      localRows: Int = LocalBatchRows): DataFrame = {
-    val head = df.limit(localRows + 1).collect()
-    if (head.length <= localRows) {
+  private[graft] def lastPerKey(df: DataFrame, key: Seq[String]): DataFrame =
+    graft.ops.Arms.gate("lastPerKey", df, LocalBatchRows) { head =>
       val at = key.map(df.schema.fieldIndex)
       def keyOf(r: Row): Seq[Any] = at.map(r.get)
       val last = head.indices.map(i => keyOf(head(i)) -> i).toMap
       val kept = head.indices.collect { case i if last(keyOf(head(i))) == i => head(i) }
       df.sparkSession.createDataFrame(rowList(kept), df.schema)
-    } else
+    } {
       df.withColumn("__ord", monotonically_increasing_id())
         .withColumn("__last", max(col("__ord")).over(
           org.apache.spark.sql.expressions.Window.partitionBy(key.map(col): _*)))
         .where(col("__ord") === col("__last"))
         .drop("__ord", "__last")
-  }
+    }
 
   /** Session finalize (`PUT /Entities?sessionComplete=true` — the call is
     * per searchdomain, `EntityController.cs:163-199`): delete every entity

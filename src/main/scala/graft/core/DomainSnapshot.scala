@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{ProbMethods, VectorFunctions}
+import graft.ops.Arms
 
 /** One scored row as the snapshot's collect decodes it: an embedding with
   * its datapoint's and entity's scoring columns. `ent_row` tells apart
@@ -20,7 +21,9 @@ private[graft] final case class SnapshotRow(
 /** A driver-resident, columnar copy of a [[Domain]]'s scoring inputs: the
   * search's driver arm ([[graft.search.SearchEngine.serveQuery]]) scores a
   * query from it with no Spark job, by the arithmetic of the distributed
-  * arm ([[graft.search.SearchEngine.searchWithDomain]]).
+  * arm ([[graft.search.SearchEngine.searchWithDomain]]). It is built by
+  * the `domainSnapshot` gate of [[graft.ops.Arms]], the one gate of every
+  * driver arm ([[DomainSnapshot.build]]).
   *
   * Layout (primitive arrays, strings interned):
   *   - row i (one embedding): its vector is `vec(off(i) until off(i) +
@@ -114,55 +117,44 @@ object DomainSnapshot {
     */
   val FloatBudget: Long = 16L << 20
 
-  private val capOverride = new scala.util.DynamicVariable[Option[Int]](None)
-
-  /** The embedding cap for vectors of width `dim`: [[FloatBudget]] / dim,
-    * unless [[withCap]] is in force on this thread. */
-  private[graft] def cap(dim: Int): Int =
-    capOverride.value.getOrElse((FloatBudget / math.max(dim, 1)).toInt)
-
-  /** Specs only: run `body` with the cap forced to `cap` on this thread
-    * (0 turns the driver arm off for every domain first searched inside). */
-  private[graft] def withCap[T](cap: Int)(body: => T): T =
-    capOverride.withValue(Some(cap))(body)
+  /** The embedding cap for vectors of width `dim`: [[FloatBudget]] / dim. */
+  private[graft] def cap(dim: Int): Int = (FloatBudget / math.max(dim, 1)).toInt
 
   /** The snapshot of `domain`, or None when it scores more than `cap`
-    * embeddings. One `limit(cap + 1)` collect of embeddings ⋈ datapoints ⋈
-    * entities, on the inner-join keys the distributed arm uses; rows
-    * without a model are left out, as no query vector joins them there.
-    * The datapoint and entity probmethods are split, and their DWA weights
-    * computed, by the same Column expressions as in that arm.
+    * embeddings: the `domainSnapshot` gate of [[Arms.gate]], one bounded
+    * collect of embeddings ⋈ datapoints ⋈ entities, on the inner-join keys
+    * the distributed arm uses; rows without a model are left out, as no
+    * query vector joins them there. The datapoint and entity probmethods
+    * are split, and their DWA weights computed, by the same Column
+    * expressions as in that arm. Under `Arms.forcing("domainSnapshot")` it
+    * is None without a collect.
     */
-  private[graft] def build(domain: Domain, cap: Int): Option[DomainSnapshot] =
-    if (cap <= 0) None
-    else {
-      val spark = domain.embeddings.sparkSession
-      import spark.implicits._
-      val collected = domain.embeddings
-        .select(col("searchdomain"), col("entity_id"), col("datapoint_id"),
-          col("model"), col("embedding"))
-        .where(col("model").isNotNull)
-        .join(domain.datapoints.select(
-          col("searchdomain"), col("entity_id"), col("datapoint_id"),
-          col("name").as("dp_name"), col("probmethod").as("dp_probmethod"),
-          col("similaritymethod")), Seq("searchdomain", "entity_id", "datapoint_id"))
-        .join(domain.entities.select(
-          col("searchdomain"), col("entity_id"), monotonically_increasing_id().as("ent_row"),
-          col("name").as("ent_name"), col("probmethod").as("ent_probmethod")),
-          Seq("searchdomain", "entity_id"))
-        .select(col("searchdomain"), col("entity_id"), col("ent_row"), col("datapoint_id"),
-          col("dp_name"), ProbMethods.specNameCol(col("dp_probmethod")).as("dp_m"),
-          col("similaritymethod"), col("model"), col("embedding"),
-          ProbMethods.dwaWeightCol(col("model"),
-            ProbMethods.specParamCol(col("dp_probmethod"))).as("dp_w"),
-          col("ent_name"), ProbMethods.specNameCol(col("ent_probmethod")).as("ent_m"),
-          ProbMethods.dwaWeightCol(col("dp_name"),
-            ProbMethods.specParamCol(col("ent_probmethod"))).as("ent_w"))
-        .limit(cap + 1)
-        .as[SnapshotRow]
-        .collect()
-      if (collected.length > cap) None else Some(pack(collected))
-    }
+  private[graft] def build(domain: Domain, cap: Int): Option[DomainSnapshot] = {
+    val spark = domain.embeddings.sparkSession
+    import spark.implicits._
+    val rows = domain.embeddings
+      .select(col("searchdomain"), col("entity_id"), col("datapoint_id"),
+        col("model"), col("embedding"))
+      .where(col("model").isNotNull)
+      .join(domain.datapoints.select(
+        col("searchdomain"), col("entity_id"), col("datapoint_id"),
+        col("name").as("dp_name"), col("probmethod").as("dp_probmethod"),
+        col("similaritymethod")), Seq("searchdomain", "entity_id", "datapoint_id"))
+      .join(domain.entities.select(
+        col("searchdomain"), col("entity_id"), monotonically_increasing_id().as("ent_row"),
+        col("name").as("ent_name"), col("probmethod").as("ent_probmethod")),
+        Seq("searchdomain", "entity_id"))
+      .select(col("searchdomain"), col("entity_id"), col("ent_row"), col("datapoint_id"),
+        col("dp_name"), ProbMethods.specNameCol(col("dp_probmethod")).as("dp_m"),
+        col("similaritymethod"), col("model"), col("embedding"),
+        ProbMethods.dwaWeightCol(col("model"),
+          ProbMethods.specParamCol(col("dp_probmethod"))).as("dp_w"),
+        col("ent_name"), ProbMethods.specNameCol(col("ent_probmethod")).as("ent_m"),
+        ProbMethods.dwaWeightCol(col("dp_name"),
+          ProbMethods.specParamCol(col("ent_probmethod"))).as("ent_w"))
+      .as[SnapshotRow]
+    Arms.gate("domainSnapshot", rows, cap)(rs => Option(pack(rs)))(None)
+  }
 
   /** Groups the rows into both levels and packs them column-wise. */
   private def pack(rs: Array[SnapshotRow]): DomainSnapshot = {

@@ -39,9 +39,10 @@ final case class Domain(
     new java.util.concurrent.ConcurrentHashMap[Int, Option[DomainSnapshot]]()
 
   /** The search's driver-arm [[DomainSnapshot]] for query vectors of
-    * width `dim`, or None above [[DomainSnapshot.cap]]`(dim)` embeddings:
-    * built by one collect the first time it is asked for, then held by
-    * this instance, so it lives and dies with this version of the domain.
+    * width `dim`, or None above [[DomainSnapshot.cap]]`(dim)` embeddings
+    * (or under `Arms.forcing("domainSnapshot")`): built by one collect the
+    * first time it is asked for, then held by this instance, so it lives
+    * and dies with this version of the domain.
     * Every caller embeds with the provider that indexed the domain, so one
     * width, and one snapshot, is the rule.
     */

@@ -25,7 +25,8 @@ import org.apache.spark.sql.types.{DoubleType, MapType, StringType}
   *                   parameter map keyed by `key`; missing key -> weight 1
   *
   * Parameterized methods are encoded in the method-name string as
-  * `"Name:{json}"` — split on the FIRST colon only (`Probmethods.cs:55-59`).
+  * `"Name:{json}"` — split on the FIRST colon only (`Probmethods.cs:55-59`)
+  * by [[specNameCol]] / [[specParamCol]], weighted by [[dwaWeightCol]].
   */
 object ProbMethods {
 
@@ -157,34 +158,6 @@ object ProbMethods {
     val i = instr(spec, ":")
     when(i === 0, lit(null).cast(StringType))
       .otherwise(spec.substr(i + lit(1), length(spec) - i))
-  }
-
-  /** Split `"Name:{json}"` on the FIRST colon (reference `Probmethods.cs:55-59`).
-    * Returns (methodName, jsonParameter) — parameter is "" when absent.
-    */
-  def parseName(spec: String): (String, String) = {
-    val i = spec.indexOf(':')
-    if (i < 0) (spec, "") else (spec.substring(0, i), spec.substring(i + 1))
-  }
-
-  /** String-dispatched aggregation, mirroring the reference registry
-    * (`Probmethods.cs:31-41,49-71`). `spec` may carry a `:{json}` parameter.
-    * `key` is the level key (model URI at level 1, datapoint name at level 2).
-    */
-  def forSpec(spec: String, key: Column, x: Column): Column = {
-    val (name, param) = parseName(spec)
-    name match {
-      case "Mean"          => mean(x)
-      case "HarmonicMean"  => harmonicMean(x)
-      case "QuadraticMean" => quadraticMean(x)
-      case "GeometricMean" => geometricMean(x)
-      case "EVEWAvg"       => evewAvg(x)
-      case "HVEWAvg"       => hvewAvg(x)
-      case "LVEWAvg"       => lvewAvg(x)
-      case "DictionaryWeightedAverage" =>
-        dictionaryWeightedAverage(key, x, parseWeights(param))
-      case other => throw new IllegalArgumentException(s"Unknown probmethod: $other")
-    }
   }
 
   /** Data-driven dispatch: the method name is a per-group COLUMN (each
@@ -367,22 +340,6 @@ object ProbMethods {
         }
         div(if (any) num else null, den)
       case other => throw new IllegalArgumentException(s"Unknown probmethod: $other")
-    }
-  }
-
-  /** Minimal JSON object parser for `{"key": number, ...}` weight maps — the
-    * only JSON shape the reference accepts here (`Probmethods.cs:161`).
-    */
-  def parseWeights(json: String): Map[String, Double] = {
-    val t = json.trim
-    if (t.isEmpty || t == "{}") Map.empty
-    else {
-      // "key"<ws>:<ws>number — keys may contain colons (model URIs do).
-      val entry = """"((?:[^"\\]|\\.)*)"\s*:\s*(-?[0-9]+(?:\.[0-9]+)?(?:[eE][+-]?[0-9]+)?)""".r
-      entry.findAllMatchIn(t).map { m =>
-        val k = m.group(1).replace("\\\"", "\"").replace("\\\\", "\\")
-        k -> m.group(2).toDouble
-      }.toMap
     }
   }
 }

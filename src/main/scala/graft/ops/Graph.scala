@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Distributed graph helpers for dedup-cluster resolution: the pair lists
   * the dedup families emit (exact / minhash / simhash / n-gram) are EDGES;
@@ -12,68 +13,28 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Observability for the cap-gated hybrid operators: counts which arm
-    * each invocation took, keyed `op:local` / `op:distributed`. Seven
-    * gates count, all through [[gated]] or [[broadcastBelow]]:
-    *  - the edge caps of [[ccIncremental]], [[pagerankInt]],
-    *    [[kcoreTrace]] and [[bfsHops]] (`local` = the driver-side arm);
-    *  - the broadcast gates `pagerankIntBcast`, `bfsHopsBcast` (inside
-    *    the distributed arms of pagerankInt and bfsHops) and
-    *    [[hitsAuthPpm]], where `local` means the broadcast arm.
-    * The 10× scale soak (`tools/Scale`) reads these to PROVE — not assume
-    * — that above the cap the distributed branch runs, and perfbench
-    * reports all seven keys. The map is process-global, so specs pin the
-    * helpers' selection rule directly instead of reading deltas here.
-    */
-  val armCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-  private def countArm(op: String, local: Boolean): Unit =
-    armCounts
-      .computeIfAbsent(s"$op:${if (local) "local" else "distributed"}",
-        _ => new java.util.concurrent.atomic.AtomicLong())
-      .incrementAndGet()
-  def armSnapshot(): Map[String, Long] = {
-    import scala.jdk.CollectionConverters._
-    armCounts.asScala.map { case (k, v) => k -> v.get() }.toMap
-  }
+  /** The arm counts of every [[Arms]] gate (`op:local` / `op:distributed`),
+    * the view perfbench and `tools/Scale` read. */
+  def armSnapshot(): Map[String, Long] =
+    Arms.armCounts.asScala.map { case (k, v) => k -> v.get() }.toMap
 
   /** Default edge cap of the driver arms and node cap of the broadcast arms. */
   val MaxLocalEdges = 200000L
   val BroadcastNodeCap = 2000000L
 
-  /** The edge gate of the hybrid operators: persists the (long, long)
-    * edge frame, collects `limit(cap + 1)` of it once, and runs `driver`
-    * over those rows when there are at most `cap`; otherwise
-    * `distributed` runs over the persisted frame. No count precedes the
-    * collect and no arm collects the edges again, so `cap` bounds driver
-    * memory at ~16 B/edge (the 200k default ≈ 3 MB). The frame is
-    * unpersisted on return, so `distributed` must materialize whatever it
-    * returns from it (checkpoint or collect).
+  /** The edge gate of the hybrid operators: [[Arms.gate]] over the
+    * persisted (long, long) edge frame, so `cap` bounds driver memory at
+    * ~16 B/edge (the 200k default ≈ 3 MB). The frame is unpersisted on
+    * return, so `distributed` must materialize whatever it returns from it
+    * (checkpoint or collect).
     */
   private[graft] def gated[T](op: String, edges: DataFrame, cap: Long)(
       driver: Array[(Long, Long)] => T)(distributed: DataFrame => T): T = {
-    require(cap < Int.MaxValue,
-      s"$op: cap $cap overflows limit(cap + 1); need cap < ${Int.MaxValue}")
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.persist()
-    try {
-      val rows = e.limit(math.max(cap + 1, 0L).toInt).as[(Long, Long)].collect()
-      val local = rows.length <= cap
-      countArm(op, local)
-      if (local) driver(rows) else distributed(e)
-    } finally e.unpersist()
-  }
-
-  /** The broadcast gate: records the arm, and the returned side function
-    * broadcasts a node-sized frame only when the caller's MEASURED node
-    * count `fits` its cap (a forced hint would pin it at ANY size); above
-    * the cap the join shuffles.
-    */
-  private[graft] def broadcastBelow(op: String, fits: Boolean): DataFrame => DataFrame = {
-    countArm(op, fits)
-    // bcast-ok: cap-gated — broadcast only below the caller's measured node cap
-    df => if (fits) broadcast(df) else df
+    try Arms.gate(op, e.as[(Long, Long)], cap)(driver)(distributed(e))
+    finally e.unpersist()
   }
 
   /** `localCheckpoint` plus the ids of the RDDs backing the result. The
@@ -254,8 +215,7 @@ object Graph {
       newEdges: DataFrame,
       aCol: String,
       bCol: String,
-      maxIter: Int = 50,
-      maxLocalEdges: Long = MaxLocalEdges): DataFrame = {
+      maxIter: Int = 50): DataFrame = {
     val e = newEdges
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
     val am = assign.select(col("id").as("a"), col("component").as("ca"))
@@ -269,12 +229,12 @@ object Graph {
       .distinct()
     // Hybrid execution: the contracted graph is sized by the INCREMENT —
     // typically orders of magnitude below the corpus — so when its edges
-    // fit the EXPLICIT bound, a driver-local union-find over the rows the
+    // fit [[MaxLocalEdges]], a driver-local union-find over the rows the
     // [[gated]] collect returned replaces 3-8 distributed label-propagation
     // rounds (each a shuffle join + a checkpoint + a convergence count);
     // above it the distributed path runs unchanged. GraphSpec pins both
     // paths equal on the same input.
-    val superCC = gated("ccIncremental", superEdges, maxLocalEdges)(
+    val superCC = gated("ccIncremental", superEdges, MaxLocalEdges)(
       localCC(assign.sparkSession, _))(connectedComponents(_, "sa", "sb", maxIter))
     val remappedOld = assign
       .join(superCC
@@ -300,21 +260,19 @@ object Graph {
     * source (an isolated sink contributes nothing and is not ranked).
     *
     * Hybrid execution through [[gated]]: when the bounded collect returns
-    * at most `maxLocalEdges` edges, the rounds run as a driver loop over
+    * at most [[MaxLocalEdges]] edges, the rounds run as a driver loop over
     * those rows, else each round is the standard distributed shape —
     * edges ⋈ rank + one dst-keyed aggregate, chained lazily into a single
     * job. The rank side is node-sized, so it is only broadcast below
-    * `broadcastNodeCap` (measured on the persisted node frame, through
-    * [[broadcastBelow]]); above the cap the join shuffles. GraphSpec pins
-    * the arms equal.
+    * [[BroadcastNodeCap]] (measured on the persisted node frame, through
+    * [[Arms.broadcastBelow]]); above the cap the join shuffles. GraphSpec
+    * pins the arms equal, selecting them with [[Arms.forcing]].
     */
-  def pagerankInt(edges: DataFrame, iters: Int,
-      maxLocalEdges: Long = MaxLocalEdges,
-      broadcastNodeCap: Long = BroadcastNodeCap): DataFrame = {
+  def pagerankInt(edges: DataFrame, iters: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     gated("pagerankInt", edges.select(col("src").cast("long"), col("dst").cast("long")),
-        maxLocalEdges) { es =>
+        MaxLocalEdges) { es =>
       val deg = es.groupBy(_._1).map { case (s, xs) => s -> xs.length.toLong }
       val nodes = deg.keys.toArray.sorted
       var pr: Map[Long, Long] = nodes.map(_ -> 1000000L).toMap
@@ -330,7 +288,7 @@ object Graph {
     } { e =>
       val nodes = e.groupBy("src").agg(count(lit(1)).as("deg"))
         .select(col("src").as("node"), col("deg")).persist()
-      val side = broadcastBelow("pagerankIntBcast", nodes.count() <= broadcastNodeCap)
+      val side = Arms.broadcastBelow("pagerankIntBcast", nodes.count() <= BroadcastNodeCap)
       var pr = nodes.withColumn("pr", lit(1000000L))
       for (_ <- 1 to iters) {
         val contrib = e
@@ -371,8 +329,7 @@ object Graph {
       aCol: String,
       bCol: String,
       k: Int,
-      rounds: Int,
-      maxLocalEdges: Long = MaxLocalEdges): Seq[(Long, Long, Long)] = {
+      rounds: Int): Seq[(Long, Long, Long)] = {
     require(k > 0 && rounds >= 0, s"need k > 0, rounds >= 0 (got $k, $rounds)")
     val sc = edges.sparkSession.sparkContext
     val e = edges.select(
@@ -381,12 +338,12 @@ object Graph {
       .distinct()
     // Hybrid through [[gated]]: the peel is `rounds` driver-synced (degree
     // rollup + two semi-joins + localCheckpoint + stats) job chains whose
-    // data is edge-bounded — when the symmetric edges fit `maxLocalEdges`
+    // data is edge-bounded — when the symmetric edges fit [[MaxLocalEdges]]
     // the whole trace is a driver fold over the collected rows (the
     // per-round scheduling floor, not the data, dominates there); above
     // the cap the distributed peel below is unchanged. Arm-equality
     // spec-pinned.
-    gated("kcoreTrace", sym, maxLocalEdges) { rows =>
+    gated("kcoreTrace", sym, MaxLocalEdges) { rows =>
       var cur = rows
       def stat(r: Int): (Long, Long, Long) =
         (r.toLong, cur.map(_._1).distinct.length.toLong,
@@ -434,23 +391,21 @@ object Graph {
     * reached within `rounds` hops; dd = 0 for sources.
     *
     * Hybrid execution through [[gated]]: when the bounded collect returns
-    * at most `maxLocalEdges` edges the BFS is a driver loop over an
+    * at most [[MaxLocalEdges]] edges the BFS is a driver loop over an
     * adjacency map of those rows, else each round is ONE edge ⋈ distance
     * join + a min aggregate, persisted per round (each round reads its
     * predecessor TWICE — expand + union — so unpersisted lineage doubles
     * every iteration). The distance side is node-sized (≤ 2·|E| + the
     * source batch), so it is broadcast only when that MEASURED bound —
     * one count of the persisted edges plus one of the source batch —
-    * stays under `broadcastNodeCap`, and shuffle-joined above it.
+    * stays under [[BroadcastNodeCap]], and shuffle-joined above it.
     * GraphSpec pins the arms equal.
     */
-  def bfsHops(edges: DataFrame, sources: DataFrame, rounds: Int,
-      maxLocalEdges: Long = MaxLocalEdges,
-      broadcastNodeCap: Long = BroadcastNodeCap): DataFrame = {
+  def bfsHops(edges: DataFrame, sources: DataFrame, rounds: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     gated("bfsHops", edges.select(col("src").cast("long"), col("dst").cast("long")),
-        maxLocalEdges) { es =>
+        MaxLocalEdges) { es =>
       val adj = es.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2) }
       val dist = scala.collection.mutable.LinkedHashMap[Long, Long]()
       sources.select(col("node").cast("long")).as[Long].collect()
@@ -471,9 +426,10 @@ object Graph {
       // the batch, both paid only in this arm; && short-circuits, so when
       // 2·nEdges alone already exceeds the cap the source-count job is
       // skipped (ADVICE r14).
-      val nEdges = e.count()
-      val side = broadcastBelow("bfsHopsBcast", 2 * nEdges <= broadcastNodeCap &&
-        2 * nEdges + sources.count() <= broadcastNodeCap)
+      val side = Arms.broadcastBelow("bfsHopsBcast", {
+        val reach = 2 * e.count()
+        reach <= BroadcastNodeCap && reach + sources.count() <= BroadcastNodeCap
+      })
       var dist = sources.select(col("node").cast("long"), lit(0L).as("dd"))
         .persist()
       val rounds0 = scala.collection.mutable.ArrayBuffer(dist)
@@ -504,19 +460,19 @@ object Graph {
     * ("N edges carry null hub/auth keys") before any round runs.
     *
     * Scale shape, cap-gated like [[pagerankInt]]: score frames are
-    * node-sided, so below `broadcastNodeCap` (the larger of the two node
+    * node-sided, so below [[BroadcastNodeCap]] (the larger of the two node
     * cardinalities) they BROADCAST and the edge frame never shuffles —
     * right for catalog-sized graphs. Above the cap a node-sized
     * broadcast would grow with the graph (the r11 verdict caveat), so
     * the per-round join runs as a plain shuffle hash join on the node
     * key instead — the standard large-graph shape. Values are identical
-    * either way (GraphSpec pins the arms equal); [[broadcastBelow]] records
+    * either way (GraphSpec pins the arms equal); [[Arms.broadcastBelow]] records
     * which arm ran (`hitsAuthPpm:local` = broadcast). Each round's score
     * frame is localCheckpoint'ed so lineage does not grow with rounds;
     * all intermediate blocks are freed before returning.
     */
   def hitsAuthPpm(edges: DataFrame, hubCol: String, authCol: String,
-      rounds: Int, broadcastNodeCap: Long = BroadcastNodeCap): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1 (got $rounds)")
     val e = edges.select(col(hubCol).cast("long").as("hub"),
       col(authCol).cast("long").as("auth")).distinct().persist()
@@ -532,8 +488,8 @@ object Graph {
         count(when(col("hub").isNull || col("auth").isNull, 1))).head()
       require(nRow.getLong(2) == 0L,
         s"hitsAuthPpm: ${nRow.getLong(2)} edges carry null hub/auth keys")
-      val side = broadcastBelow("hitsAuthPpm",
-        math.max(nRow.getLong(0), nRow.getLong(1)) <= broadcastNodeCap)
+      val side = Arms.broadcastBelow("hitsAuthPpm",
+        math.max(nRow.getLong(0), nRow.getLong(1)) <= BroadcastNodeCap)
       val kept = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       def keep(df: DataFrame): DataFrame = {
         val out = df.localCheckpoint(true); kept += out; out

@@ -17,13 +17,14 @@ import graft.functions.{ProbMethods, TextFunctions, VectorFunctions}
   * chosen by the ENTITY), global sort desc, top-N.
   *
   * The serving path ([[serveQuery]], behind [[graft.api.EngineApi.query]])
-  * has two arms and one gate, a fixed size cap:
+  * has two arms and one gate, the `domainSnapshot` gate of
+  * [[graft.ops.Arms]] at a fixed size cap:
   *
   *   - Driver arm, at or below [[graft.core.DomainSnapshot.cap]] scored
   *     embeddings (16M floats / dim, about 64 MB of vectors): scores from
-  *     the domain's columnar [[graft.core.DomainSnapshot]], built by one
-  *     collect the first time a `Domain` instance (a version) is searched
-  *     and held by that instance. A later search embeds the query on the
+  *     the domain's columnar [[graft.core.DomainSnapshot]], built by the
+  *     gate's one collect the first time a `Domain` instance (a version) is
+  *     searched and held by that instance. A later search embeds the query on the
   *     driver and runs no Spark job. It scores with the kernels' scalar
   *     forms (`SimilarityExprs.scala`) and [[ProbMethods.forMethod]], the
   *     arithmetic of the Column forms below, as the reference scores in
@@ -37,9 +38,10 @@ import graft.functions.{ProbMethods, TextFunctions, VectorFunctions}
   *     prefix of the same key, so with partial aggregation the second
   *     shuffle moves one row per (entity, datapoint) — negligible.
   *
-  * Both arms rank `score desc, name asc` and are value-equal
-  * (SearchEngineSpec). Registry entries and benches that call [[search]]
-  * directly always take the distributed arm.
+  * Both arms rank `score desc, name asc`, are value-equal and reject a
+  * negative topN (SearchEngineSpec, which selects the distributed arm with
+  * `Arms.forcing("domainSnapshot")`). Registry entries and benches that
+  * call [[search]] directly always take the distributed arm.
   */
 object SearchEngine {
 
@@ -147,10 +149,11 @@ object SearchEngine {
     * `queryText`, embedded through `embedder`, from the driver arm when
     * the domain has a snapshot for `embedder.dim` and from
     * [[searchWithDomain]] otherwise (see the object doc). The driver arm
-    * answers with a local frame.
+    * answers with a local frame. `topN` must be at least 0 on both arms.
     */
   def serveQuery(spark: SparkSession, domain: Domain, queryText: String, topN: Int,
-      embedder: graft.core.Embedder): DataFrame =
+      embedder: graft.core.Embedder): DataFrame = {
+    require(topN >= 0, s"topN must be >= 0 (got $topN)")
     domain.snapshot(embedder.dim) match {
       case Some(snap) =>
         val rows = snap.top(snap.models.map(embedder.embed(_, queryText)), topN)
@@ -159,6 +162,7 @@ object SearchEngine {
       case None =>
         searchWithDomain(domain, queryEmbeddings(spark, domain, queryText, embedder), topN)
     }
+  }
 
   private val ServedSchema = StructType(Seq(StructField("searchdomain", StringType),
     StructField("name", StringType), StructField("score", DoubleType)))

@@ -243,7 +243,7 @@ object Scale {
           .select(col("doc_id"), tokens(col("text")).as("toks"))
       }),
       "pagerank_dist" -> ((sp, dir) => {
-        // q241's co-occurrence graph with the local cap forced to 0: the
+        // q241's co-occurrence graph with the local arm forced off: the
         // DISTRIBUTED pagerank arm measured on the scaled corpus. At 10×
         // the graph itself is still catalog-sized (below the 200k cap —
         // the designed shape), so without the override the soak could
@@ -259,7 +259,7 @@ object Scale {
           .filter(col("n_ab") >= 2)
         val edges = pairs.select(col("pa").as("src"), col("pb").as("dst"))
           .unionByName(pairs.select(col("pb").as("src"), col("pa").as("dst")))
-        graft.ops.Graph.pagerankInt(edges, iters = 8, maxLocalEdges = 0L)
+        graft.ops.Arms.forcing("pagerankInt")(graft.ops.Graph.pagerankInt(edges, iters = 8))
           .orderBy(desc("pr"), asc("node")).limit(15)
       }),
       "q45_pair_count" -> ((sp, dir) => {

@@ -187,8 +187,8 @@ class ApiSpec extends SparkSpec {
     assert(local.isLocal, "a request-sized batch is cut on the driver")
     assert(rows(local) == Set(Seq("a", 2L, "y"), Seq("a", 1L, "x2"),
       Seq(null, 1L, "n2"), Seq("b", 1L, "z")))
-    val windowed = EngineApi.lastPerKey(batch, key, localRows = 5)
-    assert(!windowed.isLocal, "a batch above the row cap is cut by the window")
+    val windowed = graft.ops.Arms.forcing("lastPerKey")(EngineApi.lastPerKey(batch, key))
+    assert(!windowed.isLocal, "a forced batch is cut by the window")
     assert(rows(windowed) == rows(local))
   }
 
@@ -308,9 +308,9 @@ class ApiSpec extends SparkSpec {
     val searched = Seq("spark shuffle", "cats sleep").map(q =>
       q -> pairs(EngineApi.query(spark, domain, q, 2, dim).collect())).toMap
     assert(m1 == searched("spark shuffle") && m2 == searched("cats sleep"))
-    // with the cap forced to 0 the miss runs the distributed plan: jobs,
-    // and the same rows
-    val ((capped, _), cappedJobs) = graft.core.DomainSnapshot.withCap(0)(
+    // with the snapshot gate forced the miss runs the distributed plan:
+    // jobs, and the same rows
+    val ((capped, _), cappedJobs) = graft.ops.Arms.forcing("domainSnapshot")(
       cached("cats sleep", empty, domain.copy()))
     assert(cappedJobs > 0, "the distributed arm ran no job")
     assert(capped.map(_._1) == m2.map(_._1) &&

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.Graph
+import graft.ops.{Arms, Graph}
 
 /** Connected components (ops/Graph HashMin label propagation) — the
   * dedup-cluster resolver behind q78. Checked against hand-computed
@@ -53,11 +53,12 @@ class GraphSpec extends SparkSpec {
     Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (6L, 7L)).toDF("a", "b")
   }
 
-  /** Runs a cap-gated op at cap 0 (forced distributed/shuffle arm) and at
-    * its default cap, asserts both arms agree and returns the value. */
-  private def same[T](gate: String, default: Long)(run: Long => T): T = {
-    val (forced, dflt) = (run(0L), run(default))
-    assert(forced == dflt, s"$gate: cap 0 != default cap\n $forced\n $dflt")
+  /** Runs a cap-gated op with its gate forced to the distributed/shuffle
+    * arm and at its default cap, asserts both arms agree and returns the
+    * value. */
+  private def same[T](gate: String)(run: => T): T = {
+    val (forced, dflt) = (Arms.forcing(gate)(run), run)
+    assert(forced == dflt, s"$gate: forced != default cap\n $forced\n $dflt")
     dflt
   }
 
@@ -68,18 +69,14 @@ class GraphSpec extends SparkSpec {
     val assign = Graph.connectedComponents(
       Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L)).toDF("a", "b"), "a", "b")
     val newEdges = Seq((40L, 41L), (42L, 10L), (3L, 21L), (41L, 20L)).toDF("a", "b")
-    same("ccIncremental", Graph.MaxLocalEdges)(cap =>
-      pairs(Graph.ccIncremental(assign, newEdges, "a", "b", maxLocalEdges = cap)))
+    same("ccIncremental")(pairs(Graph.ccIncremental(assign, newEdges, "a", "b")))
   }
   private lazy val prArms: Map[Long, Long] =
-    same("pagerankInt", Graph.MaxLocalEdges)(cap =>
-      pairs(Graph.pagerankInt(prEdges, iters = 8, maxLocalEdges = cap)))
+    same("pagerankInt")(pairs(Graph.pagerankInt(prEdges, iters = 8)))
   private lazy val bfsArms: Map[Long, Long] =
-    same("bfsHops", Graph.MaxLocalEdges)(cap =>
-      pairs(Graph.bfsHops(bfsEdges, bfsSources, rounds = 2, maxLocalEdges = cap)))
+    same("bfsHops")(pairs(Graph.bfsHops(bfsEdges, bfsSources, rounds = 2)))
   private lazy val hitsArms: Map[Long, Long] =
-    same("hitsAuthPpm", Graph.BroadcastNodeCap)(cap =>
-      pairs(Graph.hitsAuthPpm(purchases, "ck", "pk", rounds = 3, broadcastNodeCap = cap)))
+    same("hitsAuthPpm")(pairs(Graph.hitsAuthPpm(purchases, "ck", "pk", rounds = 3)))
 
   test("chain merges transitively to the minimum id") {
     // 1-2, 2-3, 3-4: one component labelled 1 — a pairwise keeper rule
@@ -218,15 +215,14 @@ class GraphSpec extends SparkSpec {
       val p = sym.persist()
       try p.limit(Graph.MaxLocalEdges.toInt + 1).collect() finally p.unpersist()
     }
-    def run(maxLocal: Long) = jobsDuring(
-      Graph.kcoreTrace(kcoreEdges, "a", "b", k = 2, rounds = 3, maxLocalEdges = maxLocal))
-    val (local, localJobs) = run(Graph.MaxLocalEdges) // 12 symmetric edges -> driver arm
-    val (dist, distJobs) = run(0L) // force the distributed arm on the same input
+    def run = jobsDuring(Graph.kcoreTrace(kcoreEdges, "a", "b", k = 2, rounds = 3))
+    val (local, localJobs) = run // 12 symmetric edges -> driver arm
+    val (dist, distJobs) = Arms.forcing("kcoreTrace")(run) // the distributed arm, same input
     assert(local == dist, s"driver arm != distributed arm\n $local\n $dist")
     assert(localJobs <= collectJobs,
       s"kcoreTrace driver arm ran $localJobs jobs; one bounded collect runs $collectJobs")
     assert(distJobs > collectJobs,
-      s"kcoreTrace at cap 0 ran $distJobs jobs, no more than one bounded collect")
+      s"kcoreTrace forced distributed ran $distJobs jobs, no more than one bounded collect")
   }
 
   test("HITS: broadcast arm equals the shuffle arm, and the universal " +
@@ -261,7 +257,7 @@ class GraphSpec extends SparkSpec {
 
   test("broadcastBelow hints the side only when it fits") {
     def hinted(fits: Boolean) =
-      Graph.broadcastBelow("gateSpec", fits)(kcoreEdges).queryExecution.analyzed.exists {
+      Arms.broadcastBelow("gateSpec", fits)(kcoreEdges).queryExecution.analyzed.exists {
         case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint =>
           h.hints.strategy.contains(org.apache.spark.sql.catalyst.plans.logical.BROADCAST)
         case _ => false
@@ -278,18 +274,28 @@ class GraphSpec extends SparkSpec {
       "gateSpec: cap 2147483647 overflows limit(cap + 1); need cap < 2147483647"))
   }
 
+  test("forcing runs the named gate's distributed arm without a collect job") {
+    import spark.implicits._
+    val rows = Seq(1L, 2L).toDS()
+    def arm = Arms.gate("gateSpec", rows, 3L)(_ => "driver")("distributed")
+    assert(jobsDuring(Arms.forcing("gateSpec")(arm)) == (("distributed", 0)))
+    assert(Arms.forcing("otherGate")(arm) == "driver")
+    var measured = false
+    val side = Arms.forcing("gateSpec")(Arms.broadcastBelow("gateSpec", { measured = true; true }))
+    assert(!measured, "a forced broadcast gate measured its input")
+    assert(!side(kcoreEdges).queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.ResolvedHint]))
+  }
+
   test("every cap-gated gate returns equal values at cap 0 and at its default cap") {
     ccIncrArms
     // pagerankInt, then pagerankIntBcast inside its distributed arm
-    assert(prArms == same("pagerankIntBcast", Graph.BroadcastNodeCap)(cap =>
-      pairs(Graph.pagerankInt(prEdges, iters = 8, maxLocalEdges = 0L,
-        broadcastNodeCap = cap))))
-    same("kcoreTrace", Graph.MaxLocalEdges)(cap =>
-      Graph.kcoreTrace(kcoreEdges, "a", "b", k = 2, rounds = 3, maxLocalEdges = cap))
+    assert(prArms == Arms.forcing("pagerankInt")(same("pagerankIntBcast")(
+      pairs(Graph.pagerankInt(prEdges, iters = 8)))))
+    same("kcoreTrace")(Graph.kcoreTrace(kcoreEdges, "a", "b", k = 2, rounds = 3))
     // bfsHops, then bfsHopsBcast inside its distributed arm
-    assert(bfsArms == same("bfsHopsBcast", Graph.BroadcastNodeCap)(cap =>
-      pairs(Graph.bfsHops(bfsEdges, bfsSources, rounds = 2, maxLocalEdges = 0L,
-        broadcastNodeCap = cap))))
+    assert(bfsArms == Arms.forcing("bfsHops")(same("bfsHopsBcast")(
+      pairs(Graph.bfsHops(bfsEdges, bfsSources, rounds = 2)))))
     hitsArms
   }
 }

@@ -100,24 +100,35 @@ class ProbMethodsSpec extends SparkSpec {
     assert(approx(got2, Oracle.mean(kxs.map(_._2))))
   }
 
-  test("parseName splits on FIRST colon only (model URIs contain colons)") {
-    assert(PM.parseName("Mean") == ("Mean", ""))
-    assert(PM.parseName("DictionaryWeightedAverage:{\"a:b\": 2}") ==
-      ("DictionaryWeightedAverage", "{\"a:b\": 2}"))
+  test("specNameCol/specParamCol split on the FIRST colon only (model URIs contain colons)") {
+    def split(spec: String): (String, String) = Seq(spec).toDF("s")
+      .select(PM.specNameCol(col("s")), PM.specParamCol(col("s"))).as[(String, String)].head()
+    assert(split("Mean") == (("Mean", null)))
+    assert(split("DictionaryWeightedAverage:{\"a:b\": 2}") ==
+      (("DictionaryWeightedAverage", "{\"a:b\": 2}")))
   }
 
-  test("parseWeights handles colons in keys, escapes, scientific notation") {
-    assert(PM.parseWeights("""{"ollama:bge-m3": 2.5, "x": 1e-2}""") ==
-      Map("ollama:bge-m3" -> 2.5, "x" -> 0.01))
-    assert(PM.parseWeights("{}") == Map.empty[String, Double])
-    assert(PM.parseWeights("""{"he said \"hi\"": 3}""") == Map("he said \"hi\"" -> 3.0))
+  test("dwaWeightCol reads keys with colons, escapes, scientific notation; missing key -> 1") {
+    def weight(json: String, key: String): Double = Seq((json, key)).toDF("j", "k")
+      .select(PM.dwaWeightCol(col("k"), col("j"))).as[Double].head()
+    val json = """{"ollama:bge-m3": 2.5, "x": 1e-2, "he said \"hi\"": 3}"""
+    assert(weight(json, "ollama:bge-m3") == 2.5)
+    assert(weight(json, "x") == 0.01)
+    assert(weight(json, "he said \"hi\"") == 3.0)
+    assert(weight(json, "missing") == 1.0)
+    assert(weight("{}", "x") == 1.0)
   }
 
-  test("forSpec dispatches all 8 methods; unknown name throws") {
+  test("spec strings dispatch all 8 methods through forMethodCol + dwaWeightCol; " +
+      "unknown name throws") {
     val xs = Seq(0.2, 0.4, 0.8)
     val df = xs.map(x => ("k", x)).toDF("k", "x")
+    // the engine's path: split the spec, weight per row, group by the method
     def run(spec: String): Double =
-      df.agg(PM.forSpec(spec, col("k"), col("x")).as("r")).collect()(0).getDouble(0)
+      df.select(col("x"), PM.specNameCol(lit(spec)).as("m"),
+          PM.dwaWeightCol(col("k"), PM.specParamCol(lit(spec))).as("w"))
+        .groupBy("m").agg(PM.forMethodCol(col("m"), col("x"), col("w")).as("r"))
+        .collect()(0).getDouble(1)
     assert(approx(run("Mean"), Oracle.mean(xs)))
     assert(approx(run("HarmonicMean"), Oracle.harmonic(xs)))
     assert(approx(run("QuadraticMean"), Oracle.quadratic(xs)))
@@ -126,7 +137,9 @@ class ProbMethodsSpec extends SparkSpec {
     assert(approx(run("HVEWAvg"), Oracle.hvew(xs)))
     assert(approx(run("LVEWAvg"), Oracle.lvew(xs)))
     assert(approx(run("""DictionaryWeightedAverage:{"k": 2.0}"""), Oracle.mean(xs)))
-    intercept[IllegalArgumentException](run("Bogus"))
+    val e = intercept[Exception](run("Bogus"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("Unknown probmethod: Bogus")))
   }
 
   test("forMethodCol: per-group data-driven dispatch; unknown name raises") {

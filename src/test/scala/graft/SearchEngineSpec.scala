@@ -71,7 +71,7 @@ class SearchEngineSpec extends SparkSpec {
   }
 
   test("driver arm == distributed arm: every method, DWA specs, nulls, NaN, ties, two domains") {
-    import graft.core.{Domain, DomainSchemas, DomainSnapshot}
+    import graft.core.{Domain, DomainSchemas}
     import org.apache.spark.sql.Row
     val q = "two arms one gate"
     val qv = models.map(m => m -> embedder.embed(m, q)).toMap
@@ -121,7 +121,7 @@ class SearchEngineSpec extends SparkSpec {
       SearchEngine.serveQuery(spark, d, q, topN, embedder).collect().toSeq.map(r =>
         (r.getString(0), r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Double])))
     def distributed(d: => Domain, topN: Int): Seq[Hit] =
-      DomainSnapshot.withCap(0)(serve(d, topN))
+      graft.ops.Arms.forcing("domainSnapshot")(serve(d, topN))
     def close(a: Option[Double], b: Option[Double]) =
       a.isDefined == b.isDefined && a.forall(x => approx(x, b.get, 1e-12))
     // equal scores in order; names in order except within a 1e-12 tie
@@ -149,6 +149,10 @@ class SearchEngineSpec extends SparkSpec {
     assert(driver.filter(h => h._1 == "A" && h._2.startsWith("tie_")).map(_._3).distinct.size == 1)
     assert(ents.exists(_._3.exists(_._4.values.exists(_ == null))), "no null embedding")
     sameRanking(serve(two(), 7), distributed(two(), 7))
+    // a negative topN is rejected by both arms, and 0 returns nothing from both
+    intercept[IllegalArgumentException](serve(two(), -1))
+    intercept[IllegalArgumentException](distributed(two(), -1))
+    assert(serve(d, 0).isEmpty && distributed(two(), 0).isEmpty)
 
     // one searchdomain whose ids and names the other reuses, with other vectors
     val (a, b) = (domainOf(Seq("A"), ents), domainOf(Seq("B"), ents.reverse))
