@@ -100,7 +100,10 @@ class ProbMethodsSpec extends SparkSpec {
     assert(approx(got2, Oracle.mean(kxs.map(_._2))))
   }
 
-  test("specNameCol/specParamCol split on the FIRST colon only (model URIs contain colons)") {
+  // The next three cases keep the names they had when the scalar parsers
+  // forSpec/parseName/parseWeights existed; the engine's Column forms
+  // (specNameCol/specParamCol, dwaWeightCol, forMethodCol) now carry them.
+  test("parseName splits on FIRST colon only (model URIs contain colons)") {
     def split(spec: String): (String, String) = Seq(spec).toDF("s")
       .select(PM.specNameCol(col("s")), PM.specParamCol(col("s"))).as[(String, String)].head()
     assert(split("Mean") == (("Mean", null)))
@@ -108,7 +111,7 @@ class ProbMethodsSpec extends SparkSpec {
       (("DictionaryWeightedAverage", "{\"a:b\": 2}")))
   }
 
-  test("dwaWeightCol reads keys with colons, escapes, scientific notation; missing key -> 1") {
+  test("parseWeights handles colons in keys, escapes, scientific notation") {
     def weight(json: String, key: String): Double = Seq((json, key)).toDF("j", "k")
       .select(PM.dwaWeightCol(col("k"), col("j"))).as[Double].head()
     val json = """{"ollama:bge-m3": 2.5, "x": 1e-2, "he said \"hi\"": 3}"""
@@ -119,8 +122,7 @@ class ProbMethodsSpec extends SparkSpec {
     assert(weight("{}", "x") == 1.0)
   }
 
-  test("spec strings dispatch all 8 methods through forMethodCol + dwaWeightCol; " +
-      "unknown name throws") {
+  test("forSpec dispatches all 8 methods; unknown name throws") {
     val xs = Seq(0.2, 0.4, 0.8)
     val df = xs.map(x => ("k", x)).toDF("k", "x")
     // the engine's path: split the spec, weight per row, group by the method
