@@ -1,8 +1,8 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StringType, StructType}
 
 import graft.core.{Domain, DomainSettings, Embedder, StubEmbedder}
 import graft.functions.TextFunctions
@@ -13,15 +13,21 @@ import graft.search.SearchEngine
   * the reference would call. Every method is a DataFrame transform over
   * [[graft.core.Domain]] tables. Request-sized payloads collect to the
   * driver: a query-cache probe's rows and a search's top-N
-  * ([[queryCached]]), and an upsert batch of at most [[LocalBatchRows]]
-  * rows ([[lastPerKey]]). One corpus-sized collect exists, capped: the first
+  * ([[queryCached]]), an upsert batch of at most [[LocalBatchRows]]
+  * rows ([[lastPerKey]]), then the at most [[LocalBatchRows]] stored
+  * datapoint keys and hashes that batch shares an entity or a datapoint
+  * key with (the `upsertDiff` gate: the diff and the embedding run on the
+  * driver), and a delete's victim keys (the `deleteEntity` gate). A
+  * request-sized commit therefore reaches its table writes as local key
+  * sets and local rows, and each write is one scan of its stored table.
+  * One corpus-sized collect exists, capped: the first
   * [[query]] of a `Domain` instance collects its scoring rows into a
   * columnar [[graft.core.DomainSnapshot]] when they hold at most 16M
   * vector floats (about 64 MB; `DomainSnapshot.FloatBudget`), and that
   * instance holds it until it is itself unreachable. A larger domain is
-  * never collected: it is searched by the distributed plan. Both capped
-  * collects go through [[graft.ops.Arms.gate]], the one bounded collect of
-  * every driver arm, and `Arms.forcing` is their one override.
+  * never collected: it is searched by the distributed plan. Every capped
+  * collect goes through [[graft.ops.Arms.gate]], the one bounded collect
+  * of every driver arm, and `Arms.forcing` is their one override.
   *
   * | reference endpoint                           | here                 |
   * |----------------------------------------------|----------------------|
@@ -244,21 +250,24 @@ object EngineApi {
     * keeps its last row per key ([[lastPerKey]]): an entity named twice in
     * one batch is stored once, as its later occurrence.
     *
-    * The content-hash diff is two anti-joins on (searchdomain,
-    * datapoint_id, hash), null-safe on the hash: incoming rows without a
-    * stored twin need embedding; stored rows of touched entities without
-    * an incoming twin are stale. Over an empty store both collapse to
-    * their input, so a first index plans only the embed joins. A
-    * full-outer diff joined back onto the batch would still semi-join the
-    * batch with itself there: two extra joins on every first index.
+    * The content-hash diff matches on (searchdomain, datapoint_id, hash),
+    * null-safe on the hash: incoming rows without a stored twin need
+    * embedding; stored rows of touched entities without an incoming twin
+    * are stale. A batch cut on the driver diffs on the driver too, over
+    * the stored rows it touches (the `upsertDiff` gate of
+    * [[upsertOnDriver]]). Otherwise the diff is two anti-joins: over an
+    * empty store both collapse to their input, so a first index plans
+    * only the embed joins. A full-outer diff joined back onto the batch
+    * would still semi-join the batch with itself there: two extra joins
+    * on every first index.
     *
     * Single-read rule (shared by every entity mutation here): each output
     * table reads its same-named input table exactly once. The returned
     * Domain is the next call's input, so a table read twice per call
     * doubles its lineage with every chained mutation (1,164 leaf scans in
     * the embeddings plan after six chained upserts). Stored embeddings
-    * are therefore filtered by ONE anti-join against the stale keys, not
-    * dropped for every touched entity and re-added by a second scan.
+    * are therefore cut ONCE by the stale keys, not dropped for every
+    * touched entity and re-added by a second scan.
     */
   def upsertEntities(
       spark: SparkSession,
@@ -288,59 +297,159 @@ object EngineApi {
       embedder: Embedder,
       settings: DomainSettings,
       keysDistinct: Boolean): Domain = {
-    def lastRows(df: DataFrame, key: Seq[String]) =
-      if (keysDistinct) df else lastPerKey(df, key)
     // Every merge key includes `searchdomain`: a Domain may legitimately
     // hold several domains side by side (the catalog operators below work
     // on that shape), and two domains reusing entity_id/datapoint_id
     // values must never cross-contaminate.
-    val hashed = lastRows(incoming, Seq("searchdomain", "datapoint_id"))
+    val inc = if (keysDistinct) Right(incoming) else lastPerKey(incoming, dpKey)
+    val ents = if (keysDistinct) Right(entities) else lastPerKey(entities, entKey)
+    val hashed = inc.fold(localFrame(spark, incoming.schema, _), identity)
       .withColumn("hash", TextFunctions.contentHash(col("text")))
-    // rows of `left` with no (searchdomain, datapoint_id, hash) twin in `right`
-    def withoutTwin(left: DataFrame, right: DataFrame): DataFrame = {
-      val r = right.select(col("searchdomain").as("__sd"),
-        col("datapoint_id").as("__dp"), col("hash").as("__hash"))
-      left.join(r, col("searchdomain") === col("__sd") &&
-        col("datapoint_id") === col("__dp") && (col("hash") <=> col("__hash")), "left_anti")
+    val newEntities = ents.fold(localFrame(spark, entities.schema, _), identity)
+    val onDriver = for {
+      kept <- ents.swap.toOption if inc.isLeft
+      merged <- upsertOnDriver(spark, domain, hashed, kept, newEntities, models, embedder)
+    } yield merged
+    onDriver.getOrElse {
+      // rows of `left` with no (searchdomain, datapoint_id, hash) twin in `right`
+      def withoutTwin(left: DataFrame, right: DataFrame): DataFrame = {
+        val r = right.select(col("searchdomain").as("__sd"),
+          col("datapoint_id").as("__dp"), col("hash").as("__hash"))
+        left.join(r, col("searchdomain") === col("__sd") &&
+          col("datapoint_id") === col("__dp") && (col("hash") <=> col("__hash")), "left_anti")
+      }
+      val needEmbed = withoutTwin(hashed, domain.datapoints)
+
+      // P7/U2 + S4: embed each distinct changed text once per model,
+      // batched. A null text joins no vector back, so it is not embedded.
+      // ParallelEmbeddingsPrefetch routes the batch placement
+      // (`SearchdomainHelper.cs:61-93`): per-model-sequential when off,
+      // every model's batches concurrent when on.
+      val pairs = needEmbed.select(col("text")).where(col("text").isNotNull).distinct()
+        .crossJoin(spark.createDataFrame(models.map(Tuple1(_))).toDF("model"))
+      val fresh = needEmbed
+        .join(StubEmbedder.embedBatched(spark, pairs, embedder,
+          parallelPrefetch = settings.parallelEmbeddingsPrefetch), "text")
+        .select(col("searchdomain"), col("entity_id"), col("datapoint_id"),
+          col("model"), col("embedding"))
+      // semi/anti joins only: duplicate keys cannot change their result, so
+      // no distinct (each one is a shuffle in every table's write)
+      val touched = entities.select(entKey.map(col): _*)
+      val stale = withoutTwin(domain.datapoints.join(touched, entKey, "left_semi"), hashed)
+      merge(domain, touched, stale, hashed, fresh, newEntities)
     }
-    val needEmbed = withoutTwin(hashed, domain.datapoints)
-
-    // P7/U2 + S4: embed each distinct changed text once per model, batched.
-    // ParallelEmbeddingsPrefetch routes the batch placement
-    // (`SearchdomainHelper.cs:61-93`): per-model-sequential when off,
-    // every model's batches concurrent when on.
-    val pairs = needEmbed.select(col("text")).distinct()
-      .crossJoin(spark.createDataFrame(models.map(Tuple1(_))).toDF("model"))
-    val fresh = needEmbed
-      .join(StubEmbedder.embedBatched(spark, pairs, embedder,
-        parallelPrefetch = settings.parallelEmbeddingsPrefetch), "text")
-      .select(col("searchdomain"), col("entity_id"), col("datapoint_id"),
-        col("model"), col("embedding"))
-
-    // PUT semantics per UPLOADED entity only (reference
-    // `SearchdomainHelper.cs:208-343` diffs the datapoints of each entity
-    // in the payload): entities absent from the batch keep everything;
-    // within an uploaded entity, datapoints missing from the payload drop
-    // out. ALL incoming datapoint rows of touched entities land as-is —
-    // hash-unchanged ones thereby take the INCOMING metadata
-    // (probmethod/similaritymethod/name, the reference's
-    // `updatedDatapointsNonText` path) while keeping stored embeddings.
-    // semi/anti joins only: duplicate keys cannot change their result, so
-    // no distinct (each one is a shuffle in every table's write)
-    val touched = entities.select(entKey.map(col): _*)
-    val stale = withoutTwin(domain.datapoints.join(touched, entKey, "left_semi"), hashed)
-    val mergedDatapoints = domain.datapoints
-      .join(touched, entKey, "left_anti")
-      .unionByName(hashed.select(domain.datapoints.columns.map(col).toIndexedSeq: _*))
-    val mergedEmbeddings = domain.embeddings
-      .join(stale, entKey :+ "datapoint_id", "left_anti")
-      .unionByName(fresh.select(domain.embeddings.columns.map(col).toIndexedSeq: _*))
-    val mergedEntities = domain.entities
-      .join(touched, entKey, "left_anti")
-      .unionByName(lastRows(entities, entKey)
-        .select(domain.entities.columns.map(col).toIndexedSeq: _*))
-    Domain(mergedEntities, mergedDatapoints, mergedEmbeddings)
   }
+
+  private val dpKey = Seq("searchdomain", "datapoint_id")
+  private val embKey = entKey :+ "datapoint_id"
+
+  /** PUT semantics per UPLOADED entity only (reference
+    * `SearchdomainHelper.cs:208-343` diffs the datapoints of each entity
+    * in the payload), the merge both diff arms of [[upsert]] end in.
+    * Entities absent from the batch keep everything: entities and
+    * datapoints drop the rows of the `touched` (searchdomain, entity_id)
+    * keys, embeddings the rows of the `stale` (searchdomain, entity_id,
+    * datapoint_id) keys, and each table gains its new rows. ALL incoming
+    * datapoint rows of touched entities land as-is, so hash-unchanged
+    * ones take the INCOMING metadata (probmethod/similaritymethod/name,
+    * the reference's `updatedDatapointsNonText` path) while keeping their
+    * stored embeddings. Keys that are local rows filter their table with
+    * no join ([[without]]); new rows that are local rows come as one
+    * partition, so each table write adds one file per domain for them.
+    */
+  private def merge(domain: Domain, touched: DataFrame, stale: DataFrame,
+      datapoints: DataFrame, embeddings: DataFrame, entities: DataFrame): Domain = {
+    def plus(table: DataFrame, rows: DataFrame): DataFrame =
+      table.unionByName((if (rows.isLocal) rows.coalesce(1) else rows)
+        .select(table.columns.map(col).toIndexedSeq: _*))
+    Domain(
+      plus(without(domain.entities, touched, entKey), entities),
+      plus(without(domain.datapoints, touched, entKey), datapoints),
+      plus(without(domain.embeddings, stale, embKey), embeddings))
+  }
+
+  /** `table` without the rows whose `key` columns equal those of a row of
+    * `keys`, as a left anti-join on `key` leaves it: a key with a null
+    * column matches nothing, so such a row of `table` stays. When `keys`
+    * is a local relation the join is a filter on its key set (no
+    * broadcast job in the plan); otherwise it is the anti-join.
+    */
+  private def without(table: DataFrame, keys: DataFrame, key: Seq[String]): DataFrame =
+    if (!keys.isLocal) table.join(keys.select(key.map(col): _*), key, "left_anti")
+    else {
+      val at = key.map(keys.schema.fieldIndex)
+      table.filter(!keyIn(key, keys.collect().map(r => at.map(r.get)).toSet))
+    }
+
+  /** Whether a row's `key` columns equal one of `keys`, a driver-side key
+    * set: never null, and false when a key column is null. An empty set is
+    * the literal false.
+    */
+  private def keyIn(key: Seq[String], keys: Set[Seq[Any]]): Column = {
+    val set = keys.filterNot(_.contains(null))
+    if (set.isEmpty) lit(false)
+    else udf((r: Row) => set.contains(r.toSeq)).apply(struct(key.map(col): _*))
+  }
+
+  /** The upsert's driver arm, for a batch the [[lastPerKey]] gate cut on
+    * the driver. The stored (searchdomain, entity_id, datapoint_id, hash)
+    * rows that share an entity key or a datapoint key with the batch are
+    * collected by the `upsertDiff` gate of [[graft.ops.Arms.gate]] (at
+    * most [[LocalBatchRows]]), and the content-hash diff runs over them
+    * with the distributed arm's rules: an incoming row needs embedding
+    * without a stored (searchdomain, datapoint_id, hash) twin, a stored
+    * row of a touched entity is stale without an incoming twin, the hash
+    * compared null-safe. Changed texts are embedded here too, through
+    * [[StubEmbedder.embedLocal]]. So the merge gets local keys and rows
+    * only, and each table write scans its stored table once. None (the
+    * caller runs the distributed diff) when more stored rows match, or
+    * under `Arms.forcing("upsertDiff")`.
+    */
+  private def upsertOnDriver(spark: SparkSession, domain: Domain, hashed: DataFrame, kept: Seq[Row],
+      newEntities: DataFrame, models: Seq[String], embedder: Embedder): Option[Domain] = {
+    val rows = hashed.collect() // a projection of local rows: no job
+    val Seq(sd, eid, dp, hash, text) =
+      Seq("searchdomain", "entity_id", "datapoint_id", "hash", "text").map(hashed.schema.fieldIndex)
+    val entAt = entKey.map(newEntities.schema.fieldIndex)
+    val touched = kept.map(r => entAt.map(r.get)).toSet
+    val dpKeys = rows.map(r => Seq(r.get(sd), r.get(dp))).toSet
+    val stored = domain.datapoints
+      .select((embKey :+ "hash").map(col): _*)
+      .where(keyIn(entKey, touched) || keyIn(dpKey, dpKeys))
+    graft.ops.Arms.gate[Row, Option[Domain]]("upsertDiff", oneTask(stored), LocalBatchRows) { found =>
+      // (searchdomain, datapoint_id, hash) twins, as the anti-joins match
+      def twins(rs: Seq[Row], s: Int, d: Int, h: Int) =
+        rs.filterNot(r => r.isNullAt(s) || r.isNullAt(d)).map(r => (r.get(s), r.get(d), r.get(h))).toSet
+      val storedTwins = twins(found.toSeq, 0, 2, 3)
+      val incomingTwins = twins(rows.toSeq, sd, dp, hash)
+      val stale = found.toSeq.filter(r =>
+        touched(Seq(r.get(0), r.get(1))) && !incomingTwins((r.get(0), r.get(2), r.get(3))))
+      val needEmbed = rows.toSeq.filterNot(r => storedTwins((r.get(sd), r.get(dp), r.get(hash))))
+        .filterNot(_.isNullAt(text))
+      val vectors = StubEmbedder.embedLocal(needEmbed.map(_.getString(text)).distinct, models, embedder)
+      val fresh = for (r <- needEmbed; m <- models)
+        yield Row(r.get(sd), r.get(eid), r.get(dp), m, vectors((m, r.getString(text))))
+      val ids = StructType(Seq(sd, eid, dp).map(hashed.schema(_)))
+      Some(merge(domain,
+        localFrame(spark, StructType(entAt.map(newEntities.schema(_))), touched.toSeq.map(Row.fromSeq)),
+        localFrame(spark, stored.schema, stale),
+        localFrame(spark, hashed.schema, rows.toSeq),
+        localFrame(spark, ids.add("model", StringType).add("embedding", ArrayType(FloatType)), fresh),
+        newEntities))
+    }(None)
+  }
+
+  private def localFrame(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rowList(rows), schema)
+
+  /** `df` as one partition, without a shuffle, for a gate's bounded
+    * collect: a `limit` collect of a frame of several partitions runs a
+    * job over its first partition, then another over the rest when those
+    * rows fall short of the limit, as a request's few rows do. One task
+    * runs it in one job, in `df`'s row order. Local rows stay as they
+    * are: their collect runs no job. */
+  private def oneTask(df: DataFrame): DataFrame =
+    if (graft.ops.Arms.localRelation(df).isDefined) df else df.coalesce(1)
 
   /** Batches of at most this many rows, request-sized payloads, are cut
     * on the driver by [[lastPerKey]]. */
@@ -356,26 +465,26 @@ object EngineApi {
     *
     * The `lastPerKey` gate of [[graft.ops.Arms.gate]]: a batch of at most
     * [[LocalBatchRows]] rows is collected once (one small job) and cut on
-    * the driver into a local frame, so the upsert's table writes read it
-    * as local rows rather than each re-running a window shuffle over it (a
-    * 200-document commit with three deletes took 6.7–7.0 s with the window
-    * and 5.0–5.7 s with the driver cut, on a 4-core VM). A larger batch,
-    * or any batch under `Arms.forcing("lastPerKey")`, is cut by the
-    * window, never collected.
+    * the driver, Left(the kept rows), so the upsert goes on with local
+    * rows rather than each table write re-running a window shuffle over
+    * them (a 200-document commit with three deletes took 6.7–7.0 s with
+    * the window and 5.0–5.7 s with the driver cut, on a 4-core VM). A
+    * larger batch, or any batch under `Arms.forcing("lastPerKey")`, is
+    * cut by the window, never collected: Right(the cut frame).
     */
-  private[graft] def lastPerKey(df: DataFrame, key: Seq[String]): DataFrame =
-    graft.ops.Arms.gate("lastPerKey", df, LocalBatchRows) { head =>
+  private[graft] def lastPerKey(df: DataFrame, key: Seq[String]): Either[Seq[Row], DataFrame] =
+    graft.ops.Arms.gate[Row, Either[Seq[Row], DataFrame]]("lastPerKey", oneTask(df),
+        LocalBatchRows) { head =>
       val at = key.map(df.schema.fieldIndex)
       def keyOf(r: Row): Seq[Any] = at.map(r.get)
       val last = head.indices.map(i => keyOf(head(i)) -> i).toMap
-      val kept = head.indices.collect { case i if last(keyOf(head(i))) == i => head(i) }
-      df.sparkSession.createDataFrame(rowList(kept), df.schema)
+      Left(head.indices.collect { case i if last(keyOf(head(i))) == i => head(i) })
     } {
-      df.withColumn("__ord", monotonically_increasing_id())
+      Right(df.withColumn("__ord", monotonically_increasing_id())
         .withColumn("__last", max(col("__ord")).over(
           org.apache.spark.sql.expressions.Window.partitionBy(key.map(col): _*)))
         .where(col("__ord") === col("__last"))
-        .drop("__ord", "__last")
+        .drop("__ord", "__last"))
     }
 
   /** Session finalize (`PUT /Entities?sessionComplete=true` — the call is
@@ -411,20 +520,22 @@ object EngineApi {
     */
   def deleteEntity(domain: Domain, searchdomain: String, entityName: String): Domain = {
     val victim = col("searchdomain") <=> lit(searchdomain) && col("name") <=> lit(entityName)
-    val (datapoints, embeddings) = cascade(domain, domain.entities.filter(victim))
+    val victims = domain.entities.filter(victim).select(entKey.map(col): _*)
+    // the `deleteEntity` gate: up to LocalBatchRows victim keys become a
+    // local key set, so each child table is one filter
+    val keys = graft.ops.Arms.gate("deleteEntity", oneTask(victims), LocalBatchRows)(
+      rows => localFrame(victims.sparkSession, victims.schema, rows.toSeq))(victims)
+    val (datapoints, embeddings) = cascade(domain, keys)
     Domain(domain.entities.filter(!victim), datapoints, embeddings)
   }
 
   /** J9 FK cascade: the datapoints and embeddings of `victims` (entity
-    * rows), each child table anti-joined once on (searchdomain, entity_id)
-    * so a sibling domain reusing an entity_id is never touched. No
-    * distinct on the keys: an anti-join's result ignores duplicates.
+    * rows), each child table cut once on (searchdomain, entity_id)
+    * ([[without]]) so a sibling domain reusing an entity_id is never
+    * touched. No distinct on the keys: neither cut depends on duplicates.
     */
-  private def cascade(domain: Domain, victims: DataFrame): (DataFrame, DataFrame) = {
-    val keys = victims.select(entKey.map(col): _*)
-    (domain.datapoints.join(keys, entKey, "left_anti"),
-      domain.embeddings.join(keys, entKey, "left_anti"))
-  }
+  private def cascade(domain: Domain, victims: DataFrame): (DataFrame, DataFrame) =
+    (without(domain.datapoints, victims, entKey), without(domain.embeddings, victims, entKey))
 
   /** `PATCH /Searchdomain/Query` (`SearchdomainController.cs:141-214`):
     * manual override of one cached result list — the stored rows for that

@@ -3,6 +3,8 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.ops.Arms
+
 /** Engine storage model (SURVEY.md §1.3): the reference's 5 MySQL tables
   * re-expressed as Parquet-backed DataFrames partitioned by `searchdomain`
   * (replacing the `id_searchdomain` covering indexes with partition pruning —
@@ -39,15 +41,18 @@ final case class Domain(
     new java.util.concurrent.ConcurrentHashMap[Int, Option[DomainSnapshot]]()
 
   /** The search's driver-arm [[DomainSnapshot]] for query vectors of
-    * width `dim`, or None above [[DomainSnapshot.cap]]`(dim)` embeddings
-    * (or under `Arms.forcing("domainSnapshot")`): built by one collect the
-    * first time it is asked for, then held by this instance, so it lives
-    * and dies with this version of the domain.
+    * width `dim`, or None above [[DomainSnapshot.cap]]`(dim)` embeddings:
+    * built by one collect the first time it is asked for, then held by
+    * this instance, so it lives and dies with this version of the domain.
+    * Under `Arms.forcing("domainSnapshot")` every call answers None,
+    * whether or not this instance holds a snapshot, and nothing is
+    * memoized, so the forcing ends with its scope.
     * Every caller embeds with the provider that indexed the domain, so one
     * width, and one snapshot, is the rule.
     */
   private[graft] def snapshot(dim: Int): Option[DomainSnapshot] =
-    snapshots.computeIfAbsent(dim, d => DomainSnapshot.build(this, DomainSnapshot.cap(d)))
+    if (Arms.isForced("domainSnapshot")) None
+    else snapshots.computeIfAbsent(dim, d => DomainSnapshot.build(this, DomainSnapshot.cap(d)))
 }
 
 /** Per-domain settings (`SearchdomainController.cs:53-62`, `Searchdomain.cs:345-348`,
@@ -110,19 +115,54 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
+  /** Writes the three tables under `baseDir`, partitioned by
+    * `searchdomain`. The writes run concurrently, one per thread of a pool
+    * made for this call, each with the caller's thread-local Spark state
+    * (job group, local properties, active session). The call returns when
+    * all three have ended, and rethrows the first failure in table order
+    * (entities, datapoints, embeddings); the pool's threads end with it.
+    */
   def writeDomain(domain: Domain, baseDir: String): Unit = {
-    domain.entities.write.mode("overwrite")
-      .partitionBy("searchdomain").parquet(s"$baseDir/entities")
-    domain.datapoints.write.mode("overwrite")
-      .partitionBy("searchdomain").parquet(s"$baseDir/datapoints")
-    domain.embeddings.write.mode("overwrite")
-      .partitionBy("searchdomain").parquet(s"$baseDir/embeddings")
+    val tables = Seq("entities" -> domain.entities, "datapoints" -> domain.datapoints,
+      "embeddings" -> domain.embeddings)
+    val spark = domain.entities.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val threads = new java.util.concurrent.atomic.AtomicInteger
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(tables.size, r => {
+      val t = new Thread(r, s"graft-write-${threads.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+    try {
+      val writes = tables.map { case (name, df) =>
+        org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(spark, pool) {
+          df.write.mode("overwrite").partitionBy("searchdomain").parquet(s"$baseDir/$name")
+        }
+      }
+      val failures = writes.flatMap(w => scala.util.Try(w.join()).failed.toOption)
+      failures.headOption.foreach {
+        case e: java.util.concurrent.CompletionException if e.getCause != null => throw e.getCause
+        case e => throw e
+      }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+    }
   }
 
-  def readDomain(spark: SparkSession, baseDir: String): Domain = Domain(
-    spark.read.parquet(s"$baseDir/entities"),
-    spark.read.parquet(s"$baseDir/datapoints"),
-    spark.read.parquet(s"$baseDir/embeddings"))
+  /** The three tables under `baseDir`, read with the [[DomainSchemas]]
+    * schemas rather than inferred from the files (an inference is a Spark
+    * job per table). Each keeps the column order of an inferred read:
+    * the data columns, then the partition column `searchdomain`.
+    */
+  def readDomain(spark: SparkSession, baseDir: String): Domain = {
+    def read(name: String, schema: org.apache.spark.sql.types.StructType) =
+      spark.read.schema(org.apache.spark.sql.types.StructType(
+        schema.filterNot(_.name == "searchdomain") :+ schema("searchdomain")))
+        .parquet(s"$baseDir/$name")
+    Domain(read("entities", DomainSchemas.entities),
+      read("datapoints", DomainSchemas.datapoints),
+      read("embeddings", DomainSchemas.embeddings))
+  }
 
   /** Domain-scoped load: the reference addresses every call by
     * searchdomain name; under the `partitionBy("searchdomain")` layout

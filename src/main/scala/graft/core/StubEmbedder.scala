@@ -82,6 +82,21 @@ object StubEmbedder {
     acc
   }
 
+  /** The driver-side twin of [[embedBatched]] for a request-sized set of
+    * distinct texts: one `embedBatch` call per (model, chunk of at most
+    * [[BatchSize]] texts), each chunk's rows counted on the installed
+    * counter as [[embedBatched]] counts them. Returns each (model, text)'s
+    * vector.
+    */
+  def embedLocal(texts: Seq[String], models: Seq[String],
+      embedder: Embedder): Map[(String, String), Array[Float]] =
+    models.iterator.flatMap { model =>
+      texts.grouped(BatchSize).flatMap { chunk =>
+        embedCounter.foreach(_.add(chunk.size.toLong))
+        chunk.lazyZip(embedder.embedBatch(model, chunk)).map((text, vec) => (model, text) -> vec)
+      }
+    }.toMap
+
   /** Bulk-inference source (S4): a batched `mapPartitions` over
     * (model, text) pairs — the shape a real HTTP/GPU embedding provider
     * needs (one call per BatchSize rows per model), and a narrow

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.broadcast
 
 /** The one gate of every cap-gated hybrid operator: an input of at most
@@ -12,6 +13,9 @@ import org.apache.spark.sql.functions.broadcast
   *  - `domainSnapshot`, the search's driver-resident domain
   *    ([[graft.core.DomainSnapshot.build]]);
   *  - `lastPerKey`, the upsert's batch cut ([[graft.api.EngineApi.lastPerKey]]);
+  *  - `upsertDiff`, the upsert's content-hash diff on the driver, and
+  *    `deleteEntity`, the delete's victim keys (both in
+  *    [[graft.api.EngineApi]]);
   *  - the broadcast gates `pagerankIntBcast`, `bfsHopsBcast` and
   *    `hitsAuthPpm` ([[broadcastBelow]]), where `local` means the
   *    broadcast arm.
@@ -44,6 +48,9 @@ private[graft] object Arms {
   def forcing[T](ops: String*)(body: => T): T =
     forced.withValue(forced.value ++ ops)(body)
 
+  /** Whether `op` is forced to its non-local arm on this thread. */
+  def isForced(op: String): Boolean = forced.value(op)
+
   /** Collects `limit(cap + 1)` of `rows` once and runs `driver` over them
     * when at most `cap` came back; otherwise runs `distributed`. No count
     * precedes the collect and no arm collects again, so `cap` bounds the
@@ -54,12 +61,20 @@ private[graft] object Arms {
     require(cap < Int.MaxValue,
       s"$op: cap $cap overflows limit(cap + 1); need cap < ${Int.MaxValue}")
     val head =
-      if (forced.value(op)) None
+      if (isForced(op)) None
       else Some(rows.limit(math.max(cap + 1, 0L).toInt).collect())
     val local = head.exists(_.length <= cap)
     countArm(op, local)
     if (local) driver(head.get) else distributed
   }
+
+  /** `df`'s optimized plan when it is a local relation: rows already on
+    * the driver, read from the plan with no job. */
+  def localRelation(df: DataFrame): Option[LocalRelation] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(l)
+      case _ => None
+    }
 
   /** The broadcast gate: the returned side function broadcasts a
     * node-sized frame only when the caller's MEASURED node count `fits`
@@ -67,7 +82,7 @@ private[graft] object Arms {
     * when `op` is forced, the join shuffles and `fits` is not evaluated.
     */
   def broadcastBelow(op: String, fits: => Boolean): DataFrame => DataFrame = {
-    val local = !forced.value(op) && fits
+    val local = !isForced(op) && fits
     countArm(op, local)
     // bcast-ok: cap-gated — broadcast only below the caller's measured node cap
     df => if (local) broadcast(df) else df

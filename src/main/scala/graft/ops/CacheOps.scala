@@ -71,8 +71,11 @@ object CacheOps {
   /** The settings branch itself (`Searchdomain.cs:345-348`): reconcile
     * each cached list when CacheReconciliation is on, drop the whole
     * cache otherwise. `changes` carries (queryCol, name, score) fresh
-    * scores for the reconcile arm; the invalidate arm only consults its
-    * key column.
+    * scores for the reconcile arm; the invalidate arm only asks whether
+    * `changes` or `deletes` holds a row. When both are local rows (their
+    * optimized plans are local relations, as a request's batch is) it
+    * answers on the driver with no Spark job: `cache` itself when neither
+    * holds a row, else `cache` with no rows.
     */
   def maintain(
       cache: DataFrame,
@@ -81,15 +84,17 @@ object CacheOps {
       queryCol: String,
       cacheReconciliation: Boolean): DataFrame =
     if (cacheReconciliation) reconcile(cache, changes, deletes, queryCol)
-    else {
-      // whole-cache drop: ANY change or delete empties this domain's
-      // cache (the reference clears QueryCache wholesale) — expressed as
-      // invalidate on a constant key so the empty-change case keeps
-      // everything
-      val touched = changes.select(lit(1).as("__dom"))
-        .unionByName(deletes.select(lit(1).as("__dom")))
-      invalidate(cache.withColumn("__dom", lit(1)), touched, "__dom")
-        .drop("__dom")
+    else (Arms.localRelation(changes), Arms.localRelation(deletes)) match {
+      case (Some(c), Some(d)) => if (c.data.isEmpty && d.data.isEmpty) cache else cache.limit(0)
+      case _ =>
+        // whole-cache drop: ANY change or delete empties this domain's
+        // cache (the reference clears QueryCache wholesale) — expressed
+        // as invalidate on a constant key so the empty-change case keeps
+        // everything
+        val touched = changes.select(lit(1).as("__dom"))
+          .unionByName(deletes.select(lit(1).as("__dom")))
+        invalidate(cache.withColumn("__dom", lit(1)), touched, "__dom")
+          .drop("__dom")
     }
 
   /** C2: cache reconciliation for upserted entities

@@ -122,9 +122,11 @@ class ApiSpec extends SparkSpec {
 
   test("upsert into the empty domain plans only the model cross join and the text join-back") {
     // a first index is this upsert: over empty tables both content-hash
-    // anti-joins collapse to their input, so no diff join is left
-    val merged = EngineApi.upsertEntities(spark, graft.core.DomainSchemas.emptyDomain(spark),
-      SearchEngine.docEntities(docs), SearchEngine.docDatapoints(docs), models, dim)
+    // anti-joins collapse to their input, so no diff join is left. The
+    // batch is local, so the distributed plan runs only when forced.
+    val merged = graft.ops.Arms.forcing("lastPerKey")(EngineApi.upsertEntities(spark,
+      graft.core.DomainSchemas.emptyDomain(spark),
+      SearchEngine.docEntities(docs), SearchEngine.docDatapoints(docs), models, dim))
     val plan = merged.embeddings.queryExecution.optimizedPlan
     val joins = plan.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
     assert(joins.size == 2, s"\n$plan")
@@ -184,12 +186,132 @@ class ApiSpec extends SparkSpec {
     val key = Seq("searchdomain", "entity_id")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
     val local = EngineApi.lastPerKey(batch, key)
-    assert(local.isLocal, "a request-sized batch is cut on the driver")
-    assert(rows(local) == Set(Seq("a", 2L, "y"), Seq("a", 1L, "x2"),
+    assert(local.isLeft, "a request-sized batch is cut on the driver")
+    val kept = local.swap.toOption.get.map(_.toSeq).toSet
+    assert(kept == Set(Seq("a", 2L, "y"), Seq("a", 1L, "x2"),
       Seq(null, 1L, "n2"), Seq("b", 1L, "z")))
     val windowed = graft.ops.Arms.forcing("lastPerKey")(EngineApi.lastPerKey(batch, key))
-    assert(!windowed.isLocal, "a forced batch is cut by the window")
-    assert(rows(windowed) == rows(local))
+    assert(windowed.isRight, "a forced batch is cut by the window")
+    assert(rows(windowed.toOption.get) == kept)
+  }
+
+  /** Each table's rows (columns by name), as a sorted list. */
+  private def tablesOf(d: graft.core.Domain): Seq[Seq[Seq[Any]]] =
+    Seq(d.entities, d.datapoints, d.embeddings).map { t =>
+      t.select(t.columns.sorted.map(col).toIndexedSeq: _*).collect().map(_.toSeq).toSeq
+        .sortBy(_.toString)
+    }
+
+  private def joins(d: graft.core.Domain): Int =
+    Seq(d.entities, d.datapoints, d.embeddings).map(_.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.size).sum
+
+  /** Two domains reusing every id, two models, doc 5 with a null body
+    * text (so a null hash), and in `docs` one entity with a null entity_id
+    * (with a datapoint and a vector), which no key matches. The commit is
+    * an upsert of unchanged (1), edited (2), twice-named (3, its last row
+    * its stored text), null-text (5) and new (6) docs into `docs`, then
+    * deletes of doc_4 from `docs` and doc_2 from `other`. */
+  private lazy val commitFixture = {
+    import spark.implicits._
+    def docsOf(rows: Seq[(Long, Option[String])]) =
+      rows.map { case (i, t) => (i, t, "en", "web") }.toDF("doc_id", "text", "lang", "source")
+    val texts = Seq(1L -> Some("spark shuffles data between stages"),
+      2L -> Some("cats sleep through the afternoon"),
+      3L -> Some("broadcast joins avoid the shuffle entirely"),
+      4L -> Some("a doc that the commit deletes"), 5L -> None)
+    val two = Seq("stub:alpha", "stub:beta")
+    val (a, b) = (SearchEngine.buildDomain(spark, docsOf(texts), two, dim, "docs"),
+      SearchEngine.buildDomain(spark, docsOf(texts), two, dim, "other"))
+    def one(row: org.apache.spark.sql.Row, schema: org.apache.spark.sql.types.StructType) =
+      spark.createDataFrame(java.util.Arrays.asList(row), schema)
+    import graft.core.DomainSchemas
+    val stored = graft.core.Domain(
+      a.entities.unionByName(b.entities).unionByName(one(org.apache.spark.sql.Row(
+        "docs", null, "doc_null", "Mean", Map.empty[String, String]), DomainSchemas.entities)),
+      a.datapoints.unionByName(b.datapoints).unionByName(one(org.apache.spark.sql.Row(
+        "docs", null, 99L, "body", "Mean", "Cosine", "h"), DomainSchemas.datapoints)),
+      a.embeddings.unionByName(b.embeddings).unionByName(one(org.apache.spark.sql.Row(
+        "docs", null, 99L, "stub:alpha", Seq.fill(dim)(0.5f)), DomainSchemas.embeddings)))
+      .persisted()
+    val batch = docsOf(Seq(texts(0), 2L -> Some("dogs bark at the postman"),
+      3L -> Some("an edit that a later row overrides"), 5L -> None,
+      6L -> Some("watermarks bound streaming state"), texts(2)))
+    (stored, batch, two)
+  }
+
+  /** The fixture's commit, its tables' rows and the embed counter's delta
+    * over both. */
+  private def commit(): (graft.core.Domain, Seq[Seq[Seq[Any]]], Long) = {
+    val (stored, batch, two) = commitFixture
+    stored.embeddings.count()
+    val acc = graft.core.StubEmbedder.installCounter(spark)
+    val merged = Seq("docs" -> "doc_4", "other" -> "doc_2").foldLeft(
+      EngineApi.upsertEntities(spark, stored, SearchEngine.docEntities(batch),
+        SearchEngine.docDatapoints(batch), two, dim)) { case (d, (sd, name)) =>
+      EngineApi.deleteEntity(d, sd, name)
+    }
+    val rows = tablesOf(merged) // materializes every table, so every embed is counted
+    (merged, rows, acc.value)
+  }
+
+  test("a driver-arm commit equals the forced distributed arm row for row") {
+    val (driver, driverRows, driverEmbeds) = commit()
+    val (distributed, distributedRows, distributedEmbeds) =
+      graft.ops.Arms.forcing("lastPerKey", "upsertDiff", "deleteEntity")(commit())
+    assert(joins(driver) == 0, "the driver arm planned a join")
+    assert(joins(distributed) > 0, "the forced arm planned no join")
+    assert(Seq(driver, distributed).map(d =>
+      Seq(d.entities, d.datapoints, d.embeddings).map(_.columns.toSeq)).distinct.size == 1)
+    assert(driverRows == distributedRows)
+    // doc 2's and doc 6's one text each (title = body), under two models
+    assert(driverEmbeds == 4 && distributedEmbeds == driverEmbeds)
+    val names = driver.entities.select("searchdomain", "name").collect()
+      .map(r => s"${r.getString(0)}/${r.getString(1)}").sorted.toSeq
+    assert(names == Seq("docs/doc_1", "docs/doc_2", "docs/doc_3", "docs/doc_5", "docs/doc_6",
+      "docs/doc_null", "other/doc_1", "other/doc_3", "other/doc_4", "other/doc_5"))
+    assert(Seq(driver.datapoints, driver.embeddings)
+      .map(_.filter(col("entity_id").isNull).count()) == Seq(1L, 1L))
+    // doc 5's null-hash body kept no vector and got none; its title kept both
+    assert(driver.datapoints.filter(col("hash").isNull).count() == 2)
+    assert(driver.embeddings.filter(col("datapoint_id") === 11L).count() == 0)
+    assert(driver.embeddings.filter(col("datapoint_id") === 10L).count() == 4)
+  }
+
+  test("a driver-arm commit writes one job per table; readDomain reads what an inferred read does") {
+    val (merged, rows, _) = commit()
+    val dir = tempDir("commit-")
+    val (_, writeJobs) = jobsDuring(graft.core.Tables.writeDomain(merged, dir))
+    assert(writeJobs == 3, s"$writeJobs jobs wrote three tables")
+    val back = graft.core.Tables.readDomain(spark, dir)
+    Seq("entities" -> back.entities, "datapoints" -> back.datapoints,
+        "embeddings" -> back.embeddings).foreach { case (name, declared) =>
+      val inferred = spark.read.parquet(s"$dir/$name")
+      assert(declared.schema == inferred.schema, name)
+      assert(declared.collect().map(_.toSeq).toSeq.sortBy(_.toString) ==
+        inferred.collect().map(_.toSeq).toSeq.sortBy(_.toString), name)
+    }
+    assert(tablesOf(back) == rows)
+  }
+
+  test("writeDomain rethrows a failed table write and leaves no writer thread") {
+    import scala.jdk.CollectionConverters._
+    val failing = domain.copy(datapoints = domain.datapoints
+      .withColumn("name", raise_error(lit("planted write failure")).cast("string")))
+    val e = intercept[Exception](graft.core.Tables.writeDomain(failing, tempDir("failing-")))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("planted write failure")), e)
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName.startsWith("graft-write-")))
+  }
+
+  test("Domain.snapshot answers None under forcing on every call and memoizes no None") {
+    val d = SearchEngine.buildDomain(spark, docs, models, dim)
+    def forced = graft.ops.Arms.forcing("domainSnapshot")(d.snapshot(dim))
+    assert(forced.isEmpty, "a forced first call built a snapshot")
+    assert(d.snapshot(dim).exists(_.rows == 6), "the forced None outlived its scope")
+    assert(forced.isEmpty, "an instance holding a snapshot ignored the forcing")
+    assert(d.snapshot(dim).exists(_.rows == 6))
   }
 
   test("deleteEntity cascades across all three tables") {
@@ -311,7 +433,7 @@ class ApiSpec extends SparkSpec {
     // with the snapshot gate forced the miss runs the distributed plan:
     // jobs, and the same rows
     val ((capped, _), cappedJobs) = graft.ops.Arms.forcing("domainSnapshot")(
-      cached("cats sleep", empty, domain.copy()))
+      cached("cats sleep", empty, fresh))
     assert(cappedJobs > 0, "the distributed arm ran no job")
     assert(capped.map(_._1) == m2.map(_._1) &&
       capped.zip(m2).forall { case ((_, a), (_, b)) => approx(a, b, 1e-12) })

@@ -158,7 +158,7 @@ class SearchEngineSpec extends SparkSpec {
     val (a, b) = (domainOf(Seq("A"), ents), domainOf(Seq("B"), ents.reverse))
     val other = Domain(a.entities.unionByName(b.entities),
       a.datapoints.unionByName(b.datapoints), a.embeddings.unionByName(b.embeddings))
-    sameRanking(serve(other, 1000), distributed(other.copy(), 1000))
+    sameRanking(serve(other, 1000), distributed(other, 1000))
 
     val empty = DomainSchemas.emptyDomain(spark)
     assert(serve(empty, 10).isEmpty && distributed(DomainSchemas.emptyDomain(spark), 10).isEmpty)
@@ -167,8 +167,8 @@ class SearchEngineSpec extends SparkSpec {
         domainOf(Seq("A"), ents.take(2) :+ ("bad", "Median", ents.head._3)),
         domainOf(Seq("A"), ents.take(2) :+ ("bad", "Mean",
           Seq[Dp](("title", "Mean", "Jaccard", Map("stub:alpha" -> qv("stub:alpha")))))))) {
-      intercept[Exception](serve(bad.copy(), 10))
-      intercept[Exception](distributed(bad.copy(), 10))
+      intercept[Exception](serve(bad, 10))
+      intercept[Exception](distributed(bad, 10))
     }
   }
 

@@ -112,4 +112,17 @@ class UpsertCacheSpec extends SparkSpec {
       "query", cacheReconciliation = false)
     assert(noop.count() == 2) // no changes -> cache intact
   }
+
+  test("maintain's invalidate arm decides local changes and deletes with no job") {
+    val cache = Seq(("q", "a", 0.9), ("q", "b", 0.5)).toDF("query", "name", "score")
+    val changes = Seq(("q", 1L)).toDF("query", "doc").select(col("doc").cast("string").as("name"))
+    val none = Seq.empty[String].toDF("name")
+    def run(c: org.apache.spark.sql.DataFrame, d: org.apache.spark.sql.DataFrame) =
+      jobsDuring(CacheOps.maintain(cache, c, d, "query", cacheReconciliation = false).collect())
+    val (dropped, j1) = run(changes, none)
+    val (deleted, j2) = run(none, changes)
+    val (kept, j3) = run(none, none)
+    assert(dropped.isEmpty && deleted.isEmpty && kept.length == 2)
+    assert(Seq(j1, j2, j3) == Seq(0, 0, 0))
+  }
 }

@@ -64,6 +64,9 @@ def lint(sf_dir, out_dir):
           f"of {len(oracle)} oracles")
     return 1 if n_fail else 0
 
+# an oracle slower than this is named in the run's summary line
+SLOW_SECS = 30.0
+
 def check_one(con, name, sql, out_dir):
     """(passed, detail) for one oracle against its Verify output."""
     try:
@@ -109,12 +112,15 @@ def main(sf_dir, out_dir):
     import os
     sf_base = os.path.basename(sf_dir.rstrip("/"))
     n_pass = n_fail = 0
+    slow = []
     for name, sql in sorted(oracle.items()):
         sql = sql.replace("/verify_fixtures/sf0.01/", f"/verify_fixtures/{sf_base}/")
         t0 = time.perf_counter()
         ok, detail = check_one(con, name, sql, out_dir)
         # each oracle's own time, so a slow one shows in the log
         secs = time.perf_counter() - t0
+        if secs > SLOW_SECS:
+            slow.append((name, secs))
         if ok:
             print(f"PASS {name} {detail} {secs:.2f}s", flush=True)
             n_pass += 1
@@ -122,6 +128,8 @@ def main(sf_dir, out_dir):
             print(f"FAIL {name} {secs:.2f}s: {detail}", flush=True)
             n_fail += 1
     print(f"\n{n_pass} pass / {n_fail} fail")
+    print(f"oracles over {SLOW_SECS:.0f}s: " + (", ".join(
+        f"{n} {s:.1f}s" for n, s in sorted(slow, key=lambda x: -x[1])) or "none"))
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
